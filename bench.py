@@ -515,76 +515,6 @@ def main() -> None:
 _REGRESSION_FACTOR = 1.5
 _REGRESSION_MIN_DELTA = 0.5
 
-#: Registry consolidations: merged query -> the per-query names it
-#: absorbed (round-4 registry shrink). When the baseline round predates
-#: a consolidation, the merged query's fair prior is the SUM of its
-#: constituents' times — comparing against any single constituent
-#: manufactures a phantom 3-5x "regression" (r4 flagged language_id
-#: 0.511->2.826 s when its real prior was 0.511+1.930).
-_CONSTITUENTS: dict[str, list[str]] = {
-    "dedup_exact_suite": ["dedup_exact", "dedup_incremental"],
-    # r7: the full-corpus pair join gained an incremental-vs-index
-    # sibling; against pre-r7 baselines the fair prior is the full
-    # variant's time alone (the suite does strictly more work)
-    "dedup_ngram_suite": ["dedup_ngram_jaccard"],
-    # r6 (late): doc_profile further absorbed redact_pii (freed the
-    # slot for stream_curated_ingest); its fair prior against an r6
-    # baseline is doc_profile + redact_pii, against pre-merge rounds
-    # the three original constituents + redact_pii
-    "doc_profile": ["doc_profile", "redact_pii"],
-    # r6 (late): freed the slot for cdc_orders_suite
-    "user_summary": ["user_value_pivot", "latest_event_per_user"],
-    # r6 (late): freed the slot for pq_ann_cosine
-    "knn_centroid_suite": ["knn_topk_cosine", "nearest_centroid"],
-    # r8: the ANN family folded into one row (freed 2 slots); the
-    # ivfpq variant is NEW work with no prior, so the sum slightly
-    # understates the fair baseline — acceptable, the gate only
-    # flags slowdowns
-    "ann_index_suite": ["ann_lsh_cosine", "ivf_ann_cosine", "pq_ann_cosine"],
-    "stream_bytes_90s_suite": [
-        "stream_bytes_antenna_90s",
-        "stream_bytes_user_app_90s",
-    ],
-    "stream_bytes_user_app_90s": ["stream_bytes_user_90s", "stream_bytes_app_90s"],
-    # r10: bytes_90s absorbed bytes_antenna_sliding (freed the slot
-    # for stream_running_totals); fair prior vs an r9-or-later
-    # baseline is bytes_90s + bytes_antenna_sliding (the pre-r4
-    # per-key leaf mapping is obsolete — no comparable baseline
-    # predates the r4 union row)
-    "bytes_90s": ["bytes_90s", "bytes_antenna_sliding"],
-    "bytes_hourly": ["bytes_antenna_hourly", "bytes_email_hourly", "bytes_app_hourly"],
-    # r10: tfidf_top_terms + bigram_lift consolidated (freed the slot
-    # for quality_clf, which is NEW work with no prior)
-    "term_stats_suite": ["tfidf_top_terms", "bigram_lift"],
-    "text_metrics": ["text_stats", "token_counts", "quality_score"],
-    "language_id": ["language_id", "language_id_ngram"],
-    "membership_suite": [
-        "customers_without_orders",
-        "buyers_with_errors",
-        "event_users_not_in_building",
-    ],
-    "grouping_sets_suite": ["lineitem_rollup", "status_flag_cube"],
-    "filtered_revenue_suite": [
-        "revenue_forecast",
-        "small_quantity_revenue",
-        "disjunctive_revenue",
-    ],
-    "ranked_orders": ["top_orders_per_priority", "top100_orders"],
-    "join_revenue_suite": [
-        "shipping_priority",
-        "local_supplier_volume",
-        "brand_revenue",
-        "large_volume_customers",
-    ],
-    "grouped_stats_suite": [
-        "event_type_stats",
-        "value_percentiles",
-        "customer_order_distribution",
-        "late_shipped_priority_counts",
-    ],
-}
-
-
 def _baseline_record() -> dict:
     """The baseline payload (queries + calibration rows) the
     regression and calibration gates compare against.
@@ -663,51 +593,6 @@ def _baseline_sched_floor() -> float | None:
     return min(vals) if vals else None
 
 
-def _prior_for(
-    name: str, prior_times: dict[str, float], _seen: frozenset[str] = frozenset()
-) -> float | None:
-    """Fair baseline for ``name``: its own prior time, else (when the
-    baseline round predates a registry consolidation) the sum of its
-    constituents' prior times, when ALL of them are present. A merged
-    query's own name can collide with one constituent (language_id):
-    prefer the constituent sum whenever the baseline still carries the
-    OTHER constituents — that means the baseline predates the merge.
-
-    Constituents resolve RECURSIVELY (r6 ADVICE): a merged query can
-    list another consolidation as a constituent (stream_bytes_90s_suite
-    -> stream_bytes_user_app_90s -> user/app leaves), and against a
-    baseline predating BOTH merges the constituent itself has no prior
-    row — only its leaves do. ``_seen`` guards accidental cycles."""
-    if name in _seen:
-        return None
-    parts = _CONSTITUENTS.get(name)
-    if parts:
-        vals = [
-            prior_times.get(p)
-            if prior_times.get(p) is not None
-            else _prior_for(p, prior_times, _seen | {name})
-            for p in parts
-            if p != name
-        ]
-        own = prior_times.get(name) if name in parts else None
-        if own is not None:
-            vals.append(own)
-        # when the merged query's own name IS a constituent but the
-        # baseline has no row for it, a sum of the remaining parts
-        # would understate the fair baseline (r7 ADVICE) — fall
-        # through to the non-constituent path instead.
-        if (name not in parts or own is not None) and vals and all(
-            v is not None and v > 0 for v in vals
-        ) and (name not in parts or len(parts) > 1):
-            others = [p for p in parts if p != name]
-            if not others or any(
-                p in prior_times or p in _CONSTITUENTS for p in others
-            ):
-                return round(sum(vals), 3)
-    then = prior_times.get(name)
-    return then if then is not None and then > 0 else None
-
-
 def _regressions(
     times: dict[str, float | None],
     calib_cpu: float | None = None,
@@ -719,7 +604,7 @@ def _regressions(
     flagged but the window normalization absolved (recorded for
     adjudication, not counted as flags — ADVICE r11). A round can't
     silently regress performance while staying correctness-green.
-    Consolidation-aware: see :data:`_CONSTITUENTS`.
+    A row with no positive prior (a new query) is skipped.
 
     Calibration-normalized (r10 verdict #4): this sandbox's host has
     noisy-neighbor windows that inflate whole sweeps up to ~60% with
@@ -748,8 +633,8 @@ def _regressions(
     base_cpu, base_sched = _baseline_calib()
     flagged, masked = {}, {}
     for name, now in times.items():
-        then = _prior_for(name, prior_times)
-        if then is None or now is None:
+        then = prior_times.get(name)
+        if then is None or then <= 0 or now is None:
             continue
         cal_now, cal_then = (
             (calib_sched, base_sched)

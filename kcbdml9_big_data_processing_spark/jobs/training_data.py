@@ -252,15 +252,10 @@ class TrainingDataCurator:
         self-join — never all-pairs); clustering is the checkpointed CC
         loop."""
         prepped = shingle_docs(docs).persist()
-        # r17: this eager fill was A/B'd for removal and KEPT — without
-        # it the shingle cache races its pair-stage consumers (the
-        # stop-shingle agg and the capped postings) inside one job and
-        # the scan double-computes (measured ~0.8 s WORSE at sf0.1;
-        # OPTIMIZATION_r17.md). The flag exists for re-measurement.
-        from ..queries import dedup as _dedup_mod
-
-        if _dedup_mod._EAGER_PREPPED_FILL:
-            prepped.count()
+        # eager fill: without it the shingle cache races its pair-stage
+        # consumers (the stop-shingle agg and the capped postings)
+        # inside one job and the scan double-computes
+        prepped.count()
         cleanup: list[DataFrame] = [prepped]
         try:
             pairs = _exact_jaccard_pairs(

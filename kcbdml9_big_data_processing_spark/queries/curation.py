@@ -400,10 +400,8 @@ def llm_curation_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
       scratch dir (build-once/read-many) and the variants read the
       WRITTEN files: shard membership and the exact 48-bit
       within-shard sort key, h48-keyed so DuckDB reproduces the full
-      deterministic permutation bit-for-bit from the raw table (r11
-      verdict: the export was the one operator family with no oracle
-      row; the gated variants now exercise the write path end to
-      end).
+      deterministic permutation bit-for-bit from the raw table, so
+      the gated variants exercise the write path end to end.
 
     Shapes: sample/mix/rep_*/split/shard/shard_pos are pure scans;
     prune and cap are
@@ -413,31 +411,25 @@ def llm_curation_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     never shuffles anywhere. The MODEL-based quality signal (linear
     classifier inference) is its own row, ``quality_clf``.
 
-    The thirteen variants compose off ONE persisted ``documents`` scan (r7:
-    previously each union branch re-scanned the table — fine for
-    independence, wasteful for the suite as benched); the modest
+    The thirteen variants compose off ONE persisted ``documents`` scan
+    rather than one scan per union branch; the modest
     long-format result is eagerly lineage-truncated so every cache
     (the corpus and the span postings) is released before returning —
     the caller gets a self-contained frame, not live cache
     references.
 
-    r17: plan construction + Catalyst analysis of the 13-variant
-    union (measured ~1.5 s/call, the row's single largest cost) run
-    once per (app, sf_dir) via _prepared_lifecycle_plan; every call
-    still re-persists the corpus and span-postings caches, executes
-    the full scan/shuffle pipeline through a fresh QueryExecution
-    (so the cache manager sees THIS call's registrations), truncates,
-    and unpersists — the per-call persist lifecycle the r16 verdict
-    required intact."""
-    out, frames = (
-        _prepared_lifecycle_plan(
-            spark,
-            "llm_curation_suite",
-            sf_dir,
-            lambda: _llm_union_build(spark, sf_dir),
-        )
-        if _LLM_PREPARED
-        else _llm_union_build(spark, sf_dir)
+    Plan construction + Catalyst analysis of the 13-variant union
+    (~1.5 s/call, the row's single largest cost) run once per
+    (app, sf_dir) via _prepared_lifecycle_plan; every call still
+    re-persists the corpus and span-postings caches, executes the full
+    scan/shuffle pipeline through a fresh QueryExecution (so the cache
+    manager sees THIS call's registrations), truncates, and
+    unpersists."""
+    out, frames = _prepared_lifecycle_plan(
+        spark,
+        "llm_curation_suite",
+        sf_dir,
+        lambda: _llm_union_build(spark, sf_dir),
     )
     for f in frames:
         f.persist()
@@ -448,11 +440,6 @@ def llm_curation_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         for f in frames:
             f.unpersist()
-
-
-#: r17 measurement hook (tools/ab_flags.py): False rebuilds + re-analyzes
-#: the union per call (the r16 behavior) for interleaved A/Bs.
-_LLM_PREPARED = True
 
 
 def _llm_union_build(

@@ -187,18 +187,10 @@ def _stored_shingled_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         from ..tmpdirs import scratch_dir
 
         path = scratch_dir("shingled_corpus_")
-        # r17: a multi-file store write (spread_scan before the write,
-        # so the steady-state scan parallelizes by file count with no
-        # read-side exchange — r16 verdict #3) was process-level
-        # A/B'd and REVERTED: ngram 2.28 -> 4.12 s, clusters 3.08 ->
-        # 3.69, semantic 1.95 -> 2.75 (OPTIMIZATION_r17.md) — the
-        # 32-way scan multiplies every downstream stage's task count
-        # on KB-scale partitions. At any healthy production layout the
-        # build plan is already >= cores-way parallel, so the write
-        # inherits that file count and the scan parallelizes WITHOUT
-        # this — the single-file store is the testdata pathology, and
-        # paying real seconds here to simulate scale hygiene the
-        # layout provides for free is a bad trade.
+        # written as the build plan lays it out, with no spread_scan:
+        # a cores-way multi-file store multiplies every downstream
+        # stage's task count on KB-scale partitions, and a production
+        # layout's build plan is already cores-way parallel.
         _shingled_corpus(spark, sf_dir).write.mode("overwrite").parquet(path)
         _SHINGLED_STORE[key] = path
     return spark.read.schema("doc_id bigint, sh array<bigint>").parquet(path)
@@ -286,7 +278,7 @@ def _exact_jaccard_pairs(
     detection more precise, and the worst-case join output per shingle
     is C(cap,2) regardless of corpus size.
 
-    r7 formulation (tools/exp_pairjoin.py, medians at sf0.1 with
+    r7 formulation (medians at sf0.1 with
     ``prepped`` pre-persisted): 1.5-1.8 s, vs 3.6 s for the r6 shape
     (separate postings cache + post-agg sizes joins), 2.9 s for a
     join-free grouped-pair generation, 3.7 s for the anti-join twin of
@@ -394,7 +386,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-pair count; r7 promoted the cheapest measured formulation
     (sizes riding the postings off a broadcast stop-array, size
     filter inside the join — see _exact_jaccard_pairs; pair-join
-    medians 3.6 s -> 1.5-1.8 s at sf0.1, tools/exp_pairjoin.py).
+    medians 3.6 s -> 1.5-1.8 s at sf0.1).
     Alternatives built and measured across r5-r7, all slower on THIS
     corpus: hash-order AllPairs/PPJoin prefix+positional+size
     filtering (815k candidates, ~10 s), df-ascending PPJoin (482k
@@ -1181,7 +1173,7 @@ def dedup_ngram_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     analysis of the shingle/prefix/postings expression forest is
     paid at first call, every later call executes the same immutable
     plan — scan stored shingles → postings joins → count aggregate —
-    end to end. Measured (tools/time_query.py, sf0.1 idle):
+    end to end. Measured (sf0.1 idle):
     3.66 s → 1.81 s median."""
 
     def build() -> DataFrame:
@@ -1281,7 +1273,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepared once per process (similarity._prepared_plan). Per-call
     execution is then stored-bands bucket self-join ∪ prefix-filter
     candidates → exact postings verification, end to end. Measured
-    (tools/time_query.py, sf0.1 idle): 3.16 s → 2.75 s median (the
+    (sf0.1 idle): 3.16 s → 2.75 s median (the
     remainder is the verification joins themselves — the decision
     work, not re-planning/re-transform overhead)."""
 
@@ -1644,20 +1636,6 @@ def _truncate_lineage(
     return df.localCheckpoint(eager=eager)
 
 
-#: r17 measurement hooks (tools/ab_flags.py): restore the r16 eager
-#: barriers / per-round convergence collects for interleaved A/Bs.
-#: Decomposed interleaved A/Bs (OPTIMIZATION_r17.md): dropping the
-#: curator's prepped.count LOST (~0.8 s — the shingle cache races its
-#: two pair-stage consumers), so that barrier stays (default True);
-#: fusing two CC rounds per convergence collect read flat-to-slightly-
-#:negative across three A/Bs, so the per-round check stays the
-#: default (the fused path remains available for deployments whose
-#: driver round-trips dominate, e.g. high-latency cluster drivers).
-_EAGER_EDGE_FILL = False
-_EAGER_PREPPED_FILL = True
-_CC_ROUNDS_PER_CHECK = 1
-
-
 def connected_components(
     nodes: DataFrame,
     pairs: DataFrame,
@@ -1678,7 +1656,7 @@ def connected_components(
     choice): it truncates the join lineage so plan size stays constant
     across rounds — without it, round N replans rounds 1..N-1.
 
-    Three constant-factor choices (r6): only EDGE-INCIDENT nodes enter
+    Three constant-factor choices: only EDGE-INCIDENT nodes enter
     the loop — an isolated node's label is trivially itself, and in a
     dedup graph the incident set is a small fraction of the corpus, so
     every per-round shuffle runs on the pair-scale frame, not the
@@ -1713,23 +1691,17 @@ def connected_components(
         .select("e.src", "e.dst")
         .persist()
     )
-    # r17: no eager count barrier — the first loop collect materializes
-    # the pair pipeline into the cache. Every reference to ``edges``
-    # inside that job is the SAME persisted Dataset (one RDD), so the
+    # no eager count barrier: the first loop collect materializes the
+    # pair pipeline into the cache. Every reference to ``edges`` inside
+    # that job is the SAME persisted Dataset (one RDD), so the
     # DAGScheduler dedups its shuffle stages by RDD identity and the
     # expensive pair join still executes once; only post-shuffle map
-    # partitions can race, and those are cheap. Dropping the count
-    # removes one driver action + its Catalyst/AQE gap per CC call
-    # (guide §1.2-1: fewer passes; A/B'd in OPTIMIZATION_r17.md).
-    if _EAGER_EDGE_FILL:
-        edges.count()
+    # partitions can race, and those are cheap.
     # round 1, fused into initialization: under identity labels the
     # neighbor message for dst is just src, so the first propagation
     # needs no join and no distinct — ONE shuffle (the groupBy) builds
     # the after-round-1 labels directly from the symmetrized edges
     # (src covers every incident node, supplying the self-message).
-    # r7: the explicit identity-init + join round cost 1.6 s of pure
-    # tiny-stage overhead at sf0.1; fusing drops it to the groupBy.
     labels = _truncate_lineage(
         edges.select(F.col("dst").alias("doc_id"), F.col("src").alias("canonical_id"))
         .unionAll(
@@ -1742,20 +1714,15 @@ def connected_components(
         reliable_checkpoint,
         eager=False,
     )
-    # r9: ONE driver round-trip per round instead of two. The r8 loop
-    # collected the frame's sum after every round and compared it with
-    # the previous round's separately-collected sum — but the previous
-    # labels can ride the round's own groupBy as a tagged column: the
-    # self-message carries ``own`` = the node's current label (each
-    # node contributes exactly ONE self row, and every message dst is
-    # an incident node, so first(own, ignorenulls) is total), and one
-    # two-sum aggregate of the round's output yields both sides of the
-    # convergence test. Min-propagation only ever lowers labels, so
-    # sum(new) == sum(own) <=> no label changed. The round-1 sum
-    # collect disappears entirely — round 1 always changes labels
-    # when any edge exists, and round 2's aggregate checks it for
-    # free. Measured: CC on the curation graph drops from 3 driver
-    # round-trips to 2 (~0.4-0.6 s/call at bench scale).
+    # ONE driver round-trip per round: the previous labels ride the
+    # round's own groupBy as a tagged column. The self-message carries
+    # ``own`` = the node's current label (each node contributes exactly
+    # ONE self row, and every message dst is an incident node, so
+    # first(own, ignorenulls) is total), and one two-sum aggregate of
+    # the round's output yields both sides of the convergence test.
+    # Min-propagation only ever lowers labels, so sum(new) == sum(own)
+    # <=> no label changed. Round 1 needs no check: it always changes
+    # labels when any edge exists, and round 2's aggregate checks it.
     null_own = F.lit(None).cast("long")
 
     def _propagate(cur: DataFrame) -> DataFrame:
@@ -1776,28 +1743,8 @@ def connected_components(
             eager=False,
         )
 
-    # r17: _CC_ROUNDS_PER_CHECK propagation rounds share ONE driver
-    # convergence collect. ``own`` in the group's last round is the
-    # label after the previous round, and min-propagation is monotone,
-    # so "the final round changed nothing" (new_sum == old_sum) is
-    # still exactly the fixpoint test. For the even-diameter graphs
-    # dup clusters produce, total propagation compute is IDENTICAL to
-    # the per-round-check loop (the old loop also ran the final
-    # no-change round as its convergence proof) at HALF the driver
-    # barriers; odd-diameter graphs pay at most one extra round of
-    # edge-incident-scale shuffle — the trade goes to fewer barriers,
-    # which bound this loop at bench scale and are the measured source
-    # of its contention sensitivity (guide §1.2-1; A/B'd in
-    # OPTIMIZATION_r17.md). A deployment whose per-round shuffle
-    # dwarfs driver latency sets _CC_ROUNDS_PER_CHECK = 1.
-    rounds_left = max_rounds - 1
-    fuse = max(1, _CC_ROUNDS_PER_CHECK)
-    while rounds_left > 0:
+    for _ in range(max_rounds - 1):
         updated = _propagate(labels)
-        rounds_left -= 1
-        for _ in range(min(fuse - 1, rounds_left)):
-            updated = _propagate(updated.select("doc_id", "canonical_id"))
-            rounds_left -= 1
         sums = updated.agg(
             F.sum("canonical_id").alias("new_sum"), F.sum("own").alias("old_sum")
         ).collect()[0]
@@ -1809,7 +1756,7 @@ def connected_components(
     # entered the loop: their component is themselves. The final
     # (checkpointed) labels frame is keyed by exactly the edge-incident
     # node set, so it doubles as the anti-join side — no separate
-    # incident checkpoint needed (r6: removing it saved ~1.5s/query)
+    # incident checkpoint needed
     isolated = nodes.select("doc_id").join(labels, "doc_id", "left_anti")
     return labels.unionAll(
         isolated.select("doc_id", F.col("doc_id").alias("canonical_id"))

@@ -131,9 +131,8 @@ def bytes_90s(spark: SparkSession, sf_dir: str) -> DataFrame:
     it shares the exact metric layout and the `type` column
     discriminates it, the same consolidation that folded the antenna
     stream into stream_bytes_90s_suite in r6. Filter
-    type != 'antenna_bytes_sliding' for the strict reference shape;
-    bench._CONSTITUENTS maps the merged row to its priors. The freed
-    slot gates stream_running_totals (queries/stream.py)."""
+    type != 'antenna_bytes_sliding' for the strict reference shape.
+    The freed slot gates stream_running_totals (queries/stream.py)."""
     from .similarity import _prepared_plan
 
     def build():

@@ -15,16 +15,13 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 #: (applicationId, query name, sf_dir). Registered query inputs are
 #: immutable per (app, sf_dir) — driver testdata parquet — so
 #: re-running DataFrame construction + Catalyst analysis per call
-#: buys nothing; exp_plan_vs_exec measured it at 0.2-1.2 s/call on
-#: the suite rows (four TPC-H pipelines re-analyzed per
-#: join_revenue_suite call was the worst). Execution is NOT cached:
-#: every call's action still scans, shuffles, and aggregates the
-#: real data — only the plan object is reused. Lived in
-#: queries/similarity.py through r10; hoisted here in r11 so the
-#: registry can apply it declaratively (``register(prepare=True)``).
+#: buys nothing (0.2-1.2 s/call on the suite rows). Execution is NOT
+#: cached: every call's action still scans, shuffles, and aggregates
+#: the real data — only the plan object is reused. Queries opt in
+#: declaratively with ``register(prepare=True)``.
 _PREPARED_PLANS: dict[tuple[str, str, str], DataFrame] = {}
 
-#: guards the eviction loop + lookup/insert (ADVICE r11): registry
+#: guards the eviction loop + lookup/insert: registry
 #: callers are single-threaded today, but an unguarded check-then-act
 #: would let two future concurrent callers both build and one result
 #: be dropped. The lock is NOT held during build() — plans are
@@ -33,16 +30,7 @@ _PREPARED_PLANS: dict[tuple[str, str, str], DataFrame] = {}
 _PREPARED_LOCK = threading.Lock()
 
 
-#: r17 measurement hook (tools/ab_flags.py): True makes _prepared_plan
-#: and _prepared_lifecycle_plan call build() every time (the
-#: rebuild-per-call behavior), so interleaved A/Bs can isolate what
-#: plan preparation is worth for a given query.
-_PREPARE_DISABLED = False
-
-
 def _prepared_plan(spark: SparkSession, name: str, sf_dir: str, build) -> DataFrame:
-    if _PREPARE_DISABLED:
-        return build()
     app_id = spark.sparkContext.applicationId
     key = (app_id, name, sf_dir)
     with _PREPARED_LOCK:
@@ -81,9 +69,6 @@ def _prepared_lifecycle_plan(
     the cache manager and leak across calls. Only the analyzed
     logical plan is reused — optimization, physical planning, and the
     full scan/shuffle execution happen per call."""
-    if _PREPARE_DISABLED:
-        out, frames = build()
-        return out, tuple(frames)
     app_id = spark.sparkContext.applicationId
     key = (app_id, name, sf_dir)
     with _PREPARED_LOCK:

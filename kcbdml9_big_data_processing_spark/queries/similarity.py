@@ -459,7 +459,7 @@ def _ensure_index(kind: str, emb: DataFrame, sf_dir: str, build_fn) -> str:
 #: cached one re-runs the full scan→join→re-rank pipeline against the
 #: stored tables every time (no data is cached; only the ~1.4 s of
 #: SQL-parse + Catalyst analysis the 64-dim fixed-point expression
-#: trees cost per preparation — measured in tools/exp_ann_profile.py).
+#: trees cost per preparation).
 #: Keyed by applicationId so a new SparkSession never sees a stale
 #: plan bound to a stopped context; entries for OTHER applicationIds
 #: are evicted on lookup (r9 ADVICE — a long-lived process cycling
@@ -2768,7 +2768,7 @@ def ann_index_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-hash-gated, not just row-counted."""
     # r9: NO suite-level persist. The r8 fold persisted the embeddings
     # scan and forced it with a count() before planning the variants;
-    # measured (tools/exp_ann_profile.py), that barrier cost ~0.8 s per
+    # measured, that barrier cost ~0.8 s per
     # run — a serial cache-materialization job plus cache-write cost —
     # while the thing it saved (three extra column-pruned scans of a
     # 0.8 MB parquet file) is nearly free. The four variants now feed

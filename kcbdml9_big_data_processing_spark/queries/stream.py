@@ -33,47 +33,21 @@ from .registry import register
 #: spark.sql.shuffle.partitions when the query first starts (it is
 #: recorded in the checkpoint), and every micro-batch then pays a
 #: state-store open/maintain/commit per partition — a fixed cost that
-#: dwarfs the actual state at replay scale. Measured at sf0.1
-#: (tools/exp_stream_parts.py, median of 3): stream_join_suite
-#: 11.4 s @ 32 partitions -> 4.6 @ 16 -> 2.8 @ 8 -> 2.3 @ 4;
-#: stream_bytes_90s_suite 3.6 -> 2.2 -> 1.8 -> 1.7. Partitioning is
-#: by key hash either way, so results are identical (the oracle rows
-#: prove it). 8 keeps headroom for parallelism at these sizes; a
-#: PRODUCTION stream sizes this to state volume / executor count at
-#: its own start — it is a per-query knob, not an engine constant.
-#:
-#: r11 (r10 verdict #6): the applyInPandasWithState runner
-#: (stream_running_totals) probed separately — its hot cost is
-#: per-key Python invocation, so more partitions buy Python-worker
-#: parallelism where the window aggs only pay more state commits.
-#: Series (exp_stream_parts.py running_totals, sf0.1 median-of-3):
-#: 4 -> 5.17, 8 -> 4.21, 16 -> 3.85, 32 -> 5.16; interleaved 8-vs-16
-#: A/B steady state ~3.9 vs ~3.6. The ~6-8% edge at 16 is inside
-#: window noise and this session is SHARED — 16 costs join_suite
-#: 1.6x — so 8 stays the pinned default for every bounded replay.
-#:
-#: r17: re-probed 8-vs-4 under the r16 maintenance deferral with
-#: fresh-process interleaved A/Bs (tools/ab_process.py, 3 legs x 3
-#: runs): the window-agg replays all prefer 4 — stream_join_suite
-#: 4.60 -> 3.33 (1.38x), stream_bytes_90s 2.45 -> 2.17,
-#: stream_curated_ingest 1.63 -> 1.45, stream_dedup_events 1.15 ->
-#: 1.07 — consistent with the r8 series' 4-is-fastest that "headroom"
-#: had overridden; the stall mode that argued for headroom is gone.
-#: The applyInPandasWithState runner moves the OTHER way (same
-#: protocol: 4.70 @ 8 vs 5.31 @ 4 — per-key Python invocation wants
-#: the parallelism), so it keeps 8 on its own child session
-#: (_RT_STATE_PARTITIONS below; _bounded_session is keyed by count).
-#: A 16-partition rt variant was also probed and shipped briefly:
-#: its isolated series read 14% better but TWO in-path interleaved
-#: A/Bs said wash-to-worse, so 8 stands.
+#: dwarfs the actual state at replay scale. Measured at sf0.1 (median
+#: of 3): stream_join_suite 11.4 s @ 32 partitions -> 4.6 @ 16 ->
+#: 2.8 @ 8 -> 2.3 @ 4; stream_bytes_90s_suite 3.6 -> 2.2 -> 1.8 ->
+#: 1.7. Partitioning is by key hash either way, so results are
+#: identical (the oracle rows prove it). A PRODUCTION stream sizes
+#: this to state volume / executor count at its own start — it is a
+#: per-query knob, not an engine constant.
 _BOUNDED_STATE_PARTITIONS = 4
 
-#: state partitions for stream_running_totals only (see above).
+#: state partitions for stream_running_totals only: the
+#: applyInPandasWithState runner's hot cost is per-key Python
+#: invocation, so more partitions buy Python-worker parallelism where
+#: the window aggs only pay more state commits (fresh-process A/B at
+#: sf0.1: 4.70 s @ 8 vs 5.31 @ 4; 16 read wash-to-worse in path).
 _RT_STATE_PARTITIONS = 8
-
-#: r17 measurement hook (tools/ab_process.py): "true" restores
-#: core-count-first AQE coalescing on the bounded child sessions.
-_BOUNDED_PARALLELISM_FIRST = "false"
 
 
 def _bounded_session(
@@ -81,25 +55,21 @@ def _bounded_session(
 ) -> SparkSession:
     """Dedicated child session (shared SparkContext, own conf/catalog)
     for the bounded replays, with shuffle partitions pinned to
-    _BOUNDED_STATE_PARTITIONS (r7 ADVICE-adjacent verdict #5: the old
-    shape flipped spark.sql.shuffle.partitions on the CALLER's session
-    around start+drain, so concurrent batch work on that session could
-    plan at the bounded count). Each registered stream query rebinds
-    to this session, so its streams, memory-sink tables, and skinny
-    post-processing all live here while the caller's session — and
-    anything running on it concurrently — keeps its own partitioning
-    end to end (pinned in tests/test_streaming.py).
+    _BOUNDED_STATE_PARTITIONS, so the bounded count never leaks into
+    batch work planned concurrently on the CALLER's session. Each
+    registered stream query rebinds to this session, so its streams,
+    memory-sink tables, and skinny post-processing all live here while
+    the caller's session keeps its own partitioning end to end (pinned
+    in tests/test_streaming.py).
 
     Children are cached on the parent session object — one per
-    (parent, partition count), created lazily; the per-count keying is
-    r17, letting the applyInPandasWithState runner use its own probed
-    count (_RT_STATE_PARTITIONS) while everything else shares the
-    default: memory-sink tables re-register per call exactly
-    as they previously did on the parent, so driver-heap behavior is
-    unchanged. Explicitly-set spark.sql.* confs are copied from the
-    parent at creation (session time zone, legacy parquet nanos, ...)
-    because newSession() starts from the static SparkConf, not the
-    parent's runtime conf."""
+    (parent, partition count), created lazily, so the
+    applyInPandasWithState runner uses its own count
+    (_RT_STATE_PARTITIONS) while everything else shares the default.
+    Memory-sink tables re-register per call. Explicitly-set spark.sql.*
+    confs are copied from the parent at creation (session time zone,
+    legacy parquet nanos, ...) because newSession() starts from the
+    static SparkConf, not the parent's runtime conf."""
     if partitions is None:
         partitions = _BOUNDED_STATE_PARTITIONS
     sessions = getattr(spark, "_kcbdml9_bounded_sessions", None)
@@ -116,47 +86,26 @@ def _bounded_session(
                 except Exception:
                     pass
         bs.conf.set("spark.sql.shuffle.partitions", str(partitions))
-        # r16: state-store maintenance (snapshot + old-delta cleanup,
+        # state-store maintenance (snapshot + old-delta cleanup,
         # default every 60s) is pure overhead for a BOUNDED replay —
         # its checkpoint is abandoned at drain, so snapshot-bounded
         # recovery time protects nothing, while each fire iterates
         # every provider loaded in the process and stalls in-flight
-        # micro-batch commits. Measured (tools/ fixed-code probes,
-        # sf0.1): stream_join_suite runs read a stable 3.5-3.8 s until
-        # the first fire ~60 s after the process's first state store
-        # loads, then 2-8x blowups (13.9/22.2/30.2/36.8 s observed)
-        # with recovery after the fire — the mechanism behind the
-        # bench's bouncing stream rows. 600 s puts the first fire an
-        # order of magnitude past any replay's drain while still
-        # reclaiming dead providers in a long-lived session (a paused
-        # or hour-scale interval would let abandoned replay providers
-        # accumulate in executor memory). The interval is pinned
-        # process-wide by the FIRST store load
-        # (StateStore.startMaintenanceIfNeeded), so a production
-        # stream started later in the same process inherits it —
-        # acceptable: production jobs (streaming/job.py) own their
-        # process, and 600 s only defers snapshot compaction, never
-        # state correctness.
+        # micro-batch commits (stream_join_suite at sf0.1: a stable
+        # 3.5-3.8 s until the first fire, then 2-8x blowups). 600 s
+        # puts the first fire an order of magnitude past any replay's
+        # drain while still reclaiming dead providers in a long-lived
+        # session. The interval is pinned process-wide by the FIRST
+        # store load (StateStore.startMaintenanceIfNeeded), so a
+        # production stream started later in the same process
+        # inherits it — acceptable: production jobs (streaming/job.py)
+        # own their process, and 600 s only defers snapshot
+        # compaction, never state correctness.
         bs.conf.set(
             "spark.sql.streaming.stateStore.maintenanceInterval", "600s"
         )
-        # r17: within the bounded replays, coalesce post-shuffle
-        # partitions by the advisory SIZE target instead of stopping
-        # at the core count (parallelismFirst=false — the setting
-        # Spark's own docs recommend for size-respecting coalescing).
-        # A replay's non-stateful stages are KB-scale: coalescing them
-        # to one task removes pure dispatch overhead. Measured via a
-        # full-sweep experiment (this conf set GLOBALLY read -0.5 to
-        # -0.95 s on the stream rows but +2.5 to +5.3 s on the dedup
-        # pair joins, whose post-shuffle stages are compute-dense —
-        # so it ships ONLY here, on the child session the bounded
-        # replays own; fresh-process interleaved A/B in
-        # OPTIMIZATION_r17.md). Scale-neutral: at production replay
-        # sizes post-shuffle partitions exceed the advisory target
-        # and the setting is a no-op.
         bs.conf.set(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst",
-            _BOUNDED_PARALLELISM_FIRST,
+            "spark.sql.adaptive.coalescePartitions.parallelismFirst", "false"
         )
         sessions[partitions] = bs
     return bs

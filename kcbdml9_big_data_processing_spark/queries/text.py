@@ -461,7 +461,7 @@ def language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     (similarity._prepared_plan — the ann/ngram recipe): the ten
     profile array literals (hundreds of F.lit elements each) cost
     ~0.4 s of construction + Catalyst analysis per call at idle
-    steady-state (A/B time_query median-of-5: 2.55 -> 2.14 s; a
+    steady-state (A/B median-of-5: 2.55 -> 2.14 s; a
     loaded exp_plan_vs_exec window showed up to 1.4 s), re-paid on
     every re-run against the same immutable sf_dir. The scan +
     score arithmetic still executes fully every call."""
@@ -695,8 +695,7 @@ def term_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``tfidf_top_terms`` + ``bigram_lift`` consolidated to free a
     registry slot for ``quality_clf`` — the r6 suite recipe: every
     constituent keeps its full computation and oracle phrasing inside
-    the union, the plain functions stay importable individually, and
-    bench._CONSTITUENTS maps the merged prior):
+    the union, and the plain functions stay importable individually):
 
     - ``tfidf``: top-3 TF-IDF terms per document (rational IDF — see
       :func:`tfidf_top_terms`); n = rank, value = score;

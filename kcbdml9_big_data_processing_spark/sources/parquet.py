@@ -16,25 +16,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-#: measurement hook (tools/ab_spread.py): True turns every
-#: spread_scan into identity so interleaved same-session A/B runs can
-#: separate the spread's effect from host-window noise.
-_SPREAD_DISABLED = False
-
-#: size-aware cap on the DERIVED spread target (r16 verdict #4): never
+#: size-aware cap on the DERIVED spread target: never
 #: manufacture near-empty tasks for a tiny input — the spread target is
 #: bounded by ceil(estimated input bytes / this). The floor is
 #: deliberately SMALL (16 KB of compressed columnar text keeps a core
 #: busy for a long time in the expression-heavy pipelines the spread
 #: exists for — bytes are a weak proxy for per-row compute, so the cap
 #: must only catch the degenerate KB-scale case, not second-guess the
-#: core count). At the driver's sf0.1 (594 KB documents) the cap never
-#: binds at 32 or 8 cores — bench behavior is byte-identical to r16;
-#: at the KB-scale correctness SFs it stops a 32-way shuffle of a
-#: handful of rows. Explicit ``min_tasks`` callers bypass it.
-_SPREAD_MIN_BYTES_PER_TASK = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES_PER_TASK", 16384)
-)
+#: core count). At sf0.1 (594 KB documents) the cap never binds at
+#: 32 or 8 cores; at the KB-scale correctness SFs it stops a 32-way
+#: shuffle of a handful of rows. Explicit ``min_tasks`` callers
+#: bypass it.
+_SPREAD_MIN_BYTES_PER_TASK = 16384
 
 
 def spread_scan(df: DataFrame, min_tasks: int | None = None) -> DataFrame:
@@ -48,9 +41,9 @@ def spread_scan(df: DataFrame, min_tasks: int | None = None) -> DataFrame:
     size — so every downstream per-row expression (tokenization,
     shingle fingerprinting, regex redaction, MD5 chains) runs on one
     core while the rest idle. The driver's testdata tables are exactly
-    this shape (one file, one row group, verified with pyarrow); r16
-    measured the expression-heavy document queries spending 100 % of
-    their runtime in that single task.
+    this shape (one file, one row group, verified with pyarrow), and
+    the expression-heavy document queries spent 100 % of their runtime
+    in that single task.
 
     Scale-adaptive, NOT a local-mode constant: the gate reads the
     scan's actual split count (``df.rdd.getNumPartitions()`` — the
@@ -64,21 +57,18 @@ def spread_scan(df: DataFrame, min_tasks: int | None = None) -> DataFrame:
     Round-robin (no key): even spread regardless of key skew; Spark's
     sort-before-repartition keeps retries deterministic over the
     deterministic scan."""
-    if _SPREAD_DISABLED:
-        return df
     spark = df.sparkSession
     if min_tasks is None:
         min_tasks = spark.sparkContext.defaultParallelism
         # size-aware cap (see _SPREAD_MIN_BYTES_PER_TASK): derived
         # targets only — an explicit min_tasks is the caller's call.
         # Non-file relations report the conf default (huge) and are
-        # effectively uncapped, same as r16.
+        # effectively uncapped.
         try:
             size = int(
                 df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
             )
-            per = max(1, _SPREAD_MIN_BYTES_PER_TASK)
-            min_tasks = min(min_tasks, max(1, -(-size // per)))
+            min_tasks = min(min_tasks, max(1, -(-size // _SPREAD_MIN_BYTES_PER_TASK)))
         except Exception:
             pass
     if min_tasks <= 1:

@@ -1,10 +1,8 @@
 """Unit tests for bench.py's regression-gate logic (pure functions, no
-Spark): baseline selection must skip unparseable records, consolidated
-queries must compare against their constituents' summed priors, and
-the noise guard must require both a ratio and an absolute delta.
-The gate has been silently disarmed once (r3's truncated record) and
-once flagged phantom 5x regressions (r4's consolidation artifacts) —
-these pin the fixes."""
+Spark): baseline selection must skip unparseable records, every timed
+query must have a prior in the baseline, and the noise guard must
+require both a ratio and an absolute delta. The gate has been silently
+disarmed once (r3's truncated record) — these pin the fixes."""
 
 from __future__ import annotations
 
@@ -15,37 +13,20 @@ sys.path.insert(0, "/root/repo")
 import bench  # noqa: E402
 
 
-def test_prior_for_prefers_constituent_sum_when_baseline_predates_merge():
-    prior = {"text_stats": 0.4, "token_counts": 0.3, "quality_score": 0.3}
-    assert bench._prior_for("text_metrics", prior) == 1.0
+def test_baseline_covers_every_timed_query():
+    # the gate reads each row's prior by its own name: a rename or
+    # merge with no re-recorded baseline must fail here, not silently
+    # skip the gate for that row
+    from kcbdml9_big_data_processing_spark.queries import QUERIES
 
-
-def test_prior_for_name_collision_uses_sum_only_with_sibling_evidence():
-    # language_id is both a merged query AND one of its constituents;
-    # with the sibling present the baseline predates the merge -> sum
-    prior = {"language_id": 0.511, "language_id_ngram": 1.930}
-    assert bench._prior_for("language_id", prior) == 2.441
-    # sibling absent -> post-merge baseline, use the recorded time
-    assert bench._prior_for("language_id", {"language_id": 2.5}) == 2.5
-
-
-def test_prior_for_falls_back_to_own_time():
-    assert bench._prior_for("dedup_exact", {"dedup_exact": 1.4}) == 1.4
-    assert bench._prior_for("unknown_query", {"dedup_exact": 1.4}) is None
-
-
-def test_prior_for_no_partial_sum_when_own_constituent_row_missing(monkeypatch):
-    # r7 ADVICE: a merged query whose own name is a constituent but has
-    # no prior row must NOT sum just the remaining parts (that
-    # understates the fair baseline); with no sibling path either, the
-    # prior is simply unknown.
-    monkeypatch.setitem(bench._CONSTITUENTS, "_merged_q", ["_merged_q", "_other"])
-    try:
-        assert bench._prior_for("_merged_q", {"_other": 1.0}) is None
-        # both present -> the full sum is still preferred
-        assert bench._prior_for("_merged_q", {"_merged_q": 0.5, "_other": 1.0}) == 1.5
-    finally:
-        del bench._CONSTITUENTS["_merged_q"]
+    prior = bench._baseline_times()
+    missing = [
+        name
+        for name in QUERIES
+        if name not in bench.EXCLUDE
+        and not (isinstance(prior.get(name), (int, float)) and prior[name] > 0)
+    ]
+    assert not missing, f"baseline has no positive time for {missing}"
 
 
 def test_regressions_require_ratio_and_absolute_delta(monkeypatch):
@@ -69,11 +50,13 @@ def test_regressions_require_ratio_and_absolute_delta(monkeypatch):
 
 def test_regressions_ignore_null_priors(monkeypatch):
     # a prior record written with the null failure sentinel must not
-    # crash or compare against null
+    # crash or compare against null; a query the baseline does not
+    # know has no prior either
     monkeypatch.setattr(
         bench, "_baseline_times", lambda: {"q": None, "ok": 1.0}
     )
-    assert bench._regressions({"q": 5.0, "ok": 1.1}) == ({}, {})
+    times = {"q": 5.0, "ok": 1.1, "unknown_query": 9.0}
+    assert bench._regressions(times) == ({}, {})
 
 
 def test_regressions_normalize_by_window_calibration(monkeypatch):

@@ -82,14 +82,3 @@ def test_rows_unchanged_and_filter_still_pushes(spark):
     q = spread.where(F.col("doc_id") > 100).select("doc_id")
     assert pushed_filters(q), "filter stopped reaching the scan"
 
-
-def test_disable_hook_is_identity(spark):
-    """tools/ab_spread.py relies on the module flag turning every
-    spread into identity."""
-    df = read_table(spark, SF_SMOKE, "documents")
-    old = P._SPREAD_DISABLED
-    P._SPREAD_DISABLED = True
-    try:
-        assert spread_scan(df) is df
-    finally:
-        P._SPREAD_DISABLED = old

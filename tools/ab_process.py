@@ -1,16 +1,18 @@
-"""Process-level interleaved A/B: alternate fresh-process legs with a
-module flag at its shipping value (ON) vs forced to a given value
-(OFF). For effects that are baked in at per-process store/build time
-(store layout, session confs), where tools/ab_flags.py's same-session
-alternation cannot flip the arm.
+"""Process-level interleaved A/B of two commits: alternate fresh-process
+legs running the checkout (the change arm) vs a base revision (the
+base arm). Losing arms live in git history, so any behaviour or conf
+change is compared against the commit before it.
 
-    PYTHONPATH=/root/repo python tools/ab_process.py QUERY [QUERY...]
-        --flag module.attr=VALUE [--legs N] [--runs N] [--sf DIR]
+    PYTHONPATH=. python tools/ab_process.py QUERY [QUERY...]
+        --base REV [--legs N] [--runs N] [--sf DIR]
 
-Each leg spawns one ON and one OFF subprocess (order alternates per
-leg); each subprocess warms up (building its per-process stores under
-its arm's flag), then times the queries median-of-N with the noop
-sink. Window drift hits both arms equally across legs.
+The base arm's children import the package from a detached
+``git worktree`` of REV in a temp dir (removed on exit); the change
+arm's children import it from this checkout. Each leg spawns one
+child per arm (order alternates per leg); each child warms up
+(building its per-process stores), then times the queries
+median-of-N with the noop sink. Window drift hits both arms equally
+across legs.
 """
 
 from __future__ import annotations
@@ -18,19 +20,17 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import shutil
 import subprocess
 import sys
+import tempfile
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 
 _CHILD = r"""
-import ast, importlib, json, os, sys, time
+import json, sys, time
 sys.path.insert(0, {root!r})
-for spec in {flags!r}:
-    target, _, raw = spec.partition("=")
-    modname, _, attr = target.rpartition(".")
-    setattr(importlib.import_module(modname), attr, ast.literal_eval(raw))
 from kcbdml9_big_data_processing_spark.queries import QUERIES
 from kcbdml9_big_data_processing_spark.session import get_spark
 spark = get_spark(app_name="ab_process")
@@ -51,13 +51,13 @@ spark.stop()
 """
 
 
-def run_child(queries, sf, runs, flags):
-    code = _CHILD.format(root=ROOT, flags=flags, queries=queries, sf=sf, runs=runs)
+def run_child(root, queries, sf, runs):
+    code = _CHILD.format(root=root, queries=queries, sf=sf, runs=runs)
     p = subprocess.run(
         [sys.executable, "-c", code],
         capture_output=True,
         text=True,
-        env={**os.environ, "PYTHONPATH": ROOT},
+        env={**os.environ, "PYTHONPATH": root},
     )
     for line in p.stdout.splitlines():
         if line.startswith("ABRESULT "):
@@ -68,7 +68,7 @@ def run_child(queries, sf, runs, flags):
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
-    ap.add_argument("--flag", action="append", required=True)
+    ap.add_argument("--base", required=True, help="git revision of the base arm")
     ap.add_argument("--legs", type=int, default=3)
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument(
@@ -76,23 +76,36 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    ons: dict[str, list[float]] = {q: [] for q in args.queries}
-    offs: dict[str, list[float]] = {q: [] for q in args.queries}
-    for leg in range(args.legs):
-        arms = [("on", []), ("off", args.flag)]
-        if leg % 2:
-            arms.reverse()
-        for arm, flags in arms:
-            res = run_child(args.queries, args.sf, args.runs, flags)
-            tgt = ons if arm == "on" else offs
-            for q, samples in res.items():
-                tgt[q].extend(samples)
-            print(f"leg {leg} {arm}: {res}", flush=True)
+    tmp = tempfile.mkdtemp(prefix="ab_base_")
+    base_root = os.path.join(tmp, "tree")
+    subprocess.run(
+        ["git", "-C", ROOT, "worktree", "add", "--detach", base_root, args.base],
+        check=True,
+        capture_output=True,
+    )
+    try:
+        changes: dict[str, list[float]] = {q: [] for q in args.queries}
+        bases: dict[str, list[float]] = {q: [] for q in args.queries}
+        for leg in range(args.legs):
+            arms = [("change", ROOT, changes), ("base", base_root, bases)]
+            if leg % 2:
+                arms.reverse()
+            for arm, root, tgt in arms:
+                res = run_child(root, args.queries, args.sf, args.runs)
+                for q, samples in res.items():
+                    tgt[q].extend(samples)
+                print(f"leg {leg} {arm}: {res}", flush=True)
+    finally:
+        subprocess.run(
+            ["git", "-C", ROOT, "worktree", "remove", "--force", base_root],
+            capture_output=True,
+        )
+        shutil.rmtree(tmp, ignore_errors=True)
     med = lambda xs: sorted(xs)[len(xs) // 2]
     for q in args.queries:
         print(
-            f"{q}: ON(median)={med(ons[q])} OFF(median)={med(offs[q])}"
-            f"  on={ons[q]} off={offs[q]}",
+            f"{q}: CHANGE(median)={med(changes[q])} BASE(median)={med(bases[q])}"
+            f"  change={changes[q]} base={bases[q]}",
             flush=True,
         )
 
