@@ -104,9 +104,6 @@ def _bounded_session(
         bs.conf.set(
             "spark.sql.streaming.stateStore.maintenanceInterval", "600s"
         )
-        bs.conf.set(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst", "false"
-        )
         sessions[partitions] = bs
     return bs
 
