@@ -104,17 +104,6 @@ def _bounded_session(
         bs.conf.set(
             "spark.sql.streaming.stateStore.maintenanceInterval", "600s"
         )
-        # coalesce post-shuffle partitions by the advisory SIZE target,
-        # not the core count: a replay's non-stateful stages are
-        # KB-scale, so one task each removes pure dispatch overhead
-        # (fresh-process A/B at sf0.1, 4 cores: 1.04-1.11x faster on
-        # the four window-agg stream rows). Set only on this child
-        # session: globally it slows the compute-dense dedup pair
-        # joins by 2.5-5.3 s. At production replay sizes post-shuffle
-        # partitions exceed the advisory target and it is a no-op.
-        bs.conf.set(
-            "spark.sql.adaptive.coalescePartitions.parallelismFirst", "false"
-        )
         sessions[partitions] = bs
     return bs
 
