@@ -78,12 +78,12 @@ def main() -> None:
 
     tmp = tempfile.mkdtemp(prefix="ab_base_")
     base_root = os.path.join(tmp, "tree")
-    subprocess.run(
-        ["git", "-C", ROOT, "worktree", "add", "--detach", base_root, args.base],
-        check=True,
-        capture_output=True,
-    )
     try:
+        subprocess.run(
+            ["git", "-C", ROOT, "worktree", "add", "--detach", base_root, args.base],
+            check=True,
+            capture_output=True,
+        )
         changes: dict[str, list[float]] = {q: [] for q in args.queries}
         bases: dict[str, list[float]] = {q: [] for q in args.queries}
         for leg in range(args.legs):
