@@ -42,17 +42,8 @@ from .registry import register
 #: per-query knob, not an engine constant.
 _BOUNDED_STATE_PARTITIONS = 4
 
-#: state partitions for stream_running_totals only: the
-#: applyInPandasWithState runner's hot cost is per-key Python
-#: invocation, so more partitions buy Python-worker parallelism where
-#: the window aggs only pay more state commits (fresh-process A/B at
-#: sf0.1: 4.70 s @ 8 vs 5.31 @ 4; 16 read wash-to-worse in path).
-_RT_STATE_PARTITIONS = 8
 
-
-def _bounded_session(
-    spark: SparkSession, partitions: int | None = None
-) -> SparkSession:
+def _bounded_session(spark: SparkSession) -> SparkSession:
     """Dedicated child session (shared SparkContext, own conf/catalog)
     for the bounded replays, with shuffle partitions pinned to
     _BOUNDED_STATE_PARTITIONS, so the bounded count never leaks into
@@ -62,21 +53,13 @@ def _bounded_session(
     the caller's session keeps its own partitioning end to end (pinned
     in tests/test_streaming.py).
 
-    Children are cached on the parent session object — one per
-    (parent, partition count), created lazily, so the
-    applyInPandasWithState runner uses its own count
-    (_RT_STATE_PARTITIONS) while everything else shares the default.
-    Memory-sink tables re-register per call. Explicitly-set spark.sql.*
-    confs are copied from the parent at creation (session time zone,
-    legacy parquet nanos, ...) because newSession() starts from the
-    static SparkConf, not the parent's runtime conf."""
-    if partitions is None:
-        partitions = _BOUNDED_STATE_PARTITIONS
-    sessions = getattr(spark, "_kcbdml9_bounded_sessions", None)
-    if sessions is None:
-        sessions = {}
-        spark._kcbdml9_bounded_sessions = sessions
-    bs = sessions.get(partitions)
+    One child per parent session, created lazily and cached on the
+    parent object; memory-sink tables re-register per call.
+    Explicitly-set spark.sql.* confs are copied from the parent at
+    creation (session time zone, legacy parquet nanos, ...) because
+    newSession() starts from the static SparkConf, not the parent's
+    runtime conf."""
+    bs = getattr(spark, "_kcbdml9_bounded_session", None)
     if bs is None:
         bs = spark.newSession()
         for r in spark.sql("SET").collect():
@@ -85,7 +68,7 @@ def _bounded_session(
                     bs.conf.set(r["key"], r["value"])
                 except Exception:
                     pass
-        bs.conf.set("spark.sql.shuffle.partitions", str(partitions))
+        bs.conf.set("spark.sql.shuffle.partitions", str(_BOUNDED_STATE_PARTITIONS))
         # state-store maintenance (snapshot + old-delta cleanup,
         # default every 60s) is pure overhead for a BOUNDED replay —
         # its checkpoint is abandoned at drain, so snapshot-bounded
@@ -104,7 +87,7 @@ def _bounded_session(
         bs.conf.set(
             "spark.sql.streaming.stateStore.maintenanceInterval", "600s"
         )
-        sessions[partitions] = bs
+        spark._kcbdml9_bounded_session = bs
     return bs
 
 
@@ -184,40 +167,6 @@ def stream_bytes_antenna_90s(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def stream_bytes_user_90s(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2 as true streaming (key user_id)."""
-    return _run_bounded_metric(
-        spark, sf_dir, "user_id", "user_bytes_total", "stream_user_90s"
-    )
-
-
-def _start_app_metric(spark: SparkSession, sf_dir: str):
-    """A3's stream (key parsed out of the JSON payload, P3), started
-    but not awaited."""
-    src = read_events_stream(spark, sf_dir).withColumn(
-        "app", F.get_json_object("props", "$.k")
-    )
-    agg = windowed_sum(
-        src, "app", "90 seconds", ts_col="ts", value_col="value", agg=dsum("value")
-    )
-    metric = conform_metric(agg, "app", "app_bytes_total")
-    return (
-        metric.writeStream.format("memory")
-        .queryName("stream_app_90s")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_bytes_app_90s(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3 as true streaming: the key comes out of the JSON payload
-    (P3) on the stream before windowing."""
-    spark = _bounded_session(spark)
-    _start_app_metric(spark, sf_dir).awaitTermination()
-    return spark.table("stream_app_90s")
-
-
 @register(
     "stream_bytes_90s_suite",
     oracle=f"""
@@ -236,13 +185,14 @@ def stream_bytes_90s_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     union is the natural suite shape — same consolidation pattern the
     batch bytes_90s suite uses). Each constituent still runs its own
     full StreamExecution (file replay, state store, complete-mode
-    drain); only the registration count shrinks — r6 folds the antenna
-    stream in too, freeing a driver row for the stream-join suite. The
+    drain); only the registration count shrinks. A3's key is parsed
+    out of the JSON payload (P3) on the stream before windowing. The
     three StreamExecutions START together and drain concurrently
     (their fixed startup + replay cost overlaps; measured ~5.8 s
     serialized -> ~3 s concurrent at sf0.1) — same pattern a real
     multi-query streaming job uses (streaming/job.py)."""
     spark = _bounded_session(spark)
+    app = F.get_json_object("props", "$.k").alias("app")
     queries = [
         _start_bounded_metric(
             spark, sf_dir, "event_type", "antenna_bytes_total", "stream_antenna_90s"
@@ -250,7 +200,7 @@ def stream_bytes_90s_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         _start_bounded_metric(
             spark, sf_dir, "user_id", "user_bytes_total", "stream_user_90s"
         ),
-        _start_app_metric(spark, sf_dir),
+        _start_bounded_metric(spark, sf_dir, app, "app_bytes_total", "stream_app_90s"),
     ]
     for q in queries:
         q.awaitTermination()
@@ -473,7 +423,7 @@ def stream_join_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     return near.unionAll(enrich)
 
 
-# --- custom stateful operator (applyInPandasWithState) ---------------------
+# --- cross-batch running totals --------------------------------------------
 
 #: per-process cache of the multi-file replay source for
 #: stream_running_totals, keyed by (applicationId, sf_dir) — same
@@ -524,41 +474,33 @@ def _running_totals_source(spark: SparkSession, sf_dir: str) -> str:
     """,
 )
 def stream_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The custom stateful operator (streaming/stateful.running_totals,
-    applyInPandasWithState) driver-gated: per-user cumulative byte
-    totals carried in the streaming state store across micro-batches —
-    the running-counter semantics a watermarked window cannot express
-    (the total never closes). The events table replays as four files
-    with maxFilesPerTrigger=1, so the replay is guaranteed multiple
-    micro-batches and every key's final total is accumulated state,
-    not a single-batch sum (cross-batch arithmetic + restart recovery
-    are pinned in tests/test_stateful.py). Each key emits its updated
-    total once per micro-batch that touches it (update mode); the
-    LAST emission per key — row_number over n_updates, the same
-    WindowGroupLimit top-1 as latest_event_per_user — is the final
-    total, which must equal the batch GROUP BY sum: the oracle
-    hash-proves the state path loses/duplicates no update. Values
-    ride as exact integer cents so the cumulative sum is
-    batch-order-independent.
-
-    100 TB shape: state is hash-partitioned by key across executors,
-    per-key memory is one (long, long) pair, and idle keys would be
-    evicted by GroupStateTimeout in an unbounded deployment. The
-    memory sink here is the bounded-verification harness only; a
-    production stream emits updates through foreachBatch into a keyed
-    upsert sink (streaming/sinks.py)."""
+    """Per-user cumulative totals carried in the streaming state store
+    across micro-batches — running-counter semantics a watermarked
+    window cannot express (the total never closes). Spark's built-in
+    streaming aggregate in update mode emits each key's (total, n_rows)
+    once per micro-batch that touches it. The events table replays as
+    four files with maxFilesPerTrigger=1, so every final total is
+    accumulated state, not a single-batch sum (cross-batch arithmetic
+    and restart recovery are pinned in tests/test_stateful.py). The
+    LAST emission per key — row_number over n_rows, which grows with
+    every batch that touches the key — is the final total, and must
+    equal the batch GROUP BY sum. Values ride as exact integer cents so
+    the sum is batch-order-independent. The memory sink is the
+    bounded-verification harness only; a production stream emits
+    updates through foreachBatch into a keyed upsert sink
+    (streaming/sinks.py)."""
     from pyspark.sql import Window
 
-    from ..streaming.stateful import running_totals
-
-    spark = _bounded_session(spark, partitions=_RT_STATE_PARTITIONS)
+    spark = _bounded_session(spark)
     src_path = _running_totals_source(spark, sf_dir)
     src = (
         spark.readStream.schema("key string, cents long")
         .option("maxFilesPerTrigger", 1)
         .parquet(src_path)
     )
-    totals = running_totals(src, key_col="key", value_col="cents")
+    totals = src.groupBy("key").agg(
+        F.sum("cents").alias("total"), F.count(F.lit(1)).alias("n_rows")
+    )
     q = (
         totals.writeStream.format("memory")
         .queryName("stream_running_totals")
@@ -569,7 +511,7 @@ def stream_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     q.awaitTermination()
     record_bounded_run("stream_running_totals", q)
     emissions = spark.table("stream_running_totals")
-    w = Window.partitionBy("key").orderBy(F.col("n_updates").desc())
+    w = Window.partitionBy("key").orderBy(F.col("n_rows").desc())
     return (
         emissions.withColumn("rn", F.row_number().over(w))
         .where(F.col("rn") == 1)

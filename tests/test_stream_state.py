@@ -1,8 +1,8 @@
 """Structural state guards for the streaming rows — the streaming
-counterpart of tests/test_plans.py's four batch guards (r13 verdict
-next-round #2). Batch plan pins can't see stream rows (plan per
-micro-batch), and the streaming scale-killer is unbounded STATE, so
-the pins here are state-shaped instead of plan-shaped:
+counterpart of tests/test_plans.py's four batch guards. Batch plan
+pins can't see stream rows (plan per micro-batch), and the streaming
+scale-killer is unbounded STATE, so the pins here are state-shaped
+instead of plan-shaped:
 
 1. Every registered ``stream_*`` row's bounded replay must run
    exactly the state operators tests/stream_state_ceilings.json pins
@@ -11,7 +11,9 @@ the pins here are state-shaped instead of plan-shaped:
    starts keeping join state on the stream-static side fails), and
    its peak state rows must stay under the pinned ceiling
    (regenerate via tools/pin_stream_state.py when the shape
-   legitimately changes).
+   legitimately changes). The stream_running_totals replay must also
+   record at least _RT_FILES micro-batches, so its totals are
+   genuinely carried across batches.
 2. The eviction predicate (telemetry.state_plateaus) is FALSIFIABLE:
    over the same multi-batch event-time-ordered replay, the
    watermarked ingest-dedup pipeline plateaus while its
@@ -75,6 +77,14 @@ def test_stream_row_state_operators_and_ceiling(spark, name):
             " regressed (rows carried through state, or an eviction"
             " path dropped); rerun tools/pin_stream_state.py only if"
             " the growth is intentional"
+        )
+    if name == "stream_running_totals":
+        from kcbdml9_big_data_processing_spark.queries.stream import _RT_FILES
+
+        series = telemetry.LAST_STATE[name]["stream_running_totals"]
+        assert len(series) >= _RT_FILES, (
+            f"stream_running_totals ran {len(series)} micro-batches, fewer"
+            f" than its {_RT_FILES} replay files"
         )
 
 
@@ -206,7 +216,7 @@ def test_live_listener_captures_state_series(spark, tmp_path):
 
 
 def test_live_listener_ring_caps_series_but_keeps_peak(spark, tmp_path):
-    """r14 ADVICE: the live series is a ring of the last N batches —
+    """The live series is a ring of the last N batches —
     the watchdog must not itself hold unbounded driver state over a
     week-long deployment — while the all-time peak survives trimming
     in listener.peaks (an alarm must not age out of the window)."""

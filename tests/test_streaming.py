@@ -223,7 +223,7 @@ def test_multi_query_orchestration(spark, tmp_path):
 
 
 def test_job_state_watchdog_surfaces_violations(spark, tmp_path):
-    """r14 verdict #5: the production orchestration can opt into the
+    """The production orchestration can opt into the
     live state watchdog — a running multi-query job records live
     per-batch state series, and a state-growth violation surfaces
     through the JOB API (state_peaks / state_violations), not through
@@ -272,13 +272,13 @@ def test_job_state_watchdog_surfaces_violations(spark, tmp_path):
         assert job.state_violations(10_000) == {}
         # live series is queryable through the plateau predicate too
         assert job.state_plateaus("watchdog_key_bytes", 10_000)
-        # r15 review: an unobserved name must be LOUD — an empty
+        # an unobserved name must be LOUD — an empty
         # series vacuously plateaus, so a typo must not silently pass
         import pytest
 
         with pytest.raises(KeyError, match="no series"):
             job.state_plateaus("watchdog_key_byts", 10_000)
-        # r15 review: the job keeps its OWN store, not the shared
+        # the job keeps its OWN store, not the shared
         # LAST_STATE['live'] — concurrent/restarted jobs can't
         # cross-contaminate
         assert "watchdog_key_bytes" not in telemetry.LAST_STATE.get(
@@ -525,7 +525,7 @@ def test_interval_join_production_profile_evicts_state(tmp_path):
     registered suite runs the same join with a generous watermark
     because a bounded replay must not drop out-of-order rows; this test
     is the executable answer to 'what do those lines look like with
-    real unbounded state', r6 verdict #5. Own session: the state
+    real unbounded state'. Own session: the state
     provider is a session-level conf."""
     from kcbdml9_big_data_processing_spark.session import get_spark
 
@@ -762,15 +762,16 @@ def test_stream_join_suite_equals_batch(spark):
 
 
 def test_bounded_session_defers_state_maintenance(spark):
-    """r16: bounded replays set a 600s state-store maintenance
-    interval on the DEDICATED CHILD session (their checkpoints are
-    abandoned at drain, so the default 60s snapshot/cleanup fire is
-    pure overhead that measurably stalls in-flight commits — 2-8x
-    run blowups in the fixed-code probes, OPTIMIZATION_r16.md). Pin
-    (1) the child carries the conf, (2) the caller's session keeps
-    the engine default (production streams must not silently inherit
-    a deferred maintenance schedule from merely importing this
-    module), (3) the child still pins the bounded partition count."""
+    """Bounded replays set a 600s state-store maintenance interval on
+    the DEDICATED CHILD session (their checkpoints are abandoned at
+    drain, so the default 60s snapshot/cleanup fire is pure overhead
+    that measurably stalls in-flight commits — 2-8x run blowups in the
+    fixed-code probes, OPTIMIZATION_r16.md). Pin (1) the child carries
+    the conf, (2) the caller's session keeps the engine default
+    (production streams must not silently inherit a deferred
+    maintenance schedule from merely importing this module), (3) the
+    child still pins the bounded partition count, (4) one child is
+    cached per parent session."""
     from kcbdml9_big_data_processing_spark.queries.stream import (
         _BOUNDED_STATE_PARTITIONS,
         _bounded_session,
@@ -784,31 +785,16 @@ def test_bounded_session_defers_state_maintenance(spark):
     )
     # the caller's session is untouched: engine default (60s), not 600s
     assert spark.conf.get(key) != "600s"
-    # r17: the applyInPandasWithState runner keeps its own probed
-    # partition count on a SEPARATE child session (per-count keying);
-    # it must carry the same maintenance deferral, cache per count,
-    # and leave the shared child untouched.
-    from kcbdml9_big_data_processing_spark.queries.stream import (
-        _RT_STATE_PARTITIONS,
-    )
-
-    rt = _bounded_session(spark, partitions=_RT_STATE_PARTITIONS)
-    assert rt is not bs
-    assert rt.conf.get(key) == "600s"
-    assert rt.conf.get("spark.sql.shuffle.partitions") == str(
-        _RT_STATE_PARTITIONS
-    )
-    assert _bounded_session(spark) is bs
-    assert _bounded_session(spark, partitions=_RT_STATE_PARTITIONS) is rt
+    assert _bounded_session(spark) is _bounded_session(spark)
 
 
 def test_bounded_replay_concurrent_with_batch_at_200_partitions(spark):
-    """r7 verdict #5: the bounded replays no longer scope
-    spark.sql.shuffle.partitions on the caller's session — they run on
-    a dedicated child session. Pin it: with the caller's session at
-    200 partitions, (1) a watcher thread sampling the caller's conf
-    during the whole replay never observes the bounded value (the old
-    implementation flipped it to 8 mid-stream), (2) concurrent batch
+    """The bounded replays never scope spark.sql.shuffle.partitions
+    on the caller's session — they run on a dedicated child session.
+    Pin it: with the caller's session at 200 partitions, (1) a watcher
+    thread sampling the caller's conf during the whole replay never
+    observes the bounded value (an earlier implementation flipped it
+    to 8 mid-stream), (2) concurrent batch
     aggregations on the caller's session keep producing correct
     results throughout, and (3) the stream result is unchanged vs a
     plain run."""
