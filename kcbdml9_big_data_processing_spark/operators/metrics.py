@@ -64,3 +64,52 @@ def conform_metric(
         F.col(value_col).alias("value"),
         F.lit(tag).alias("type"),
     )
+
+
+def fanout_windowed_sum(
+    df: DataFrame,
+    metrics: list[tuple[str | Column, str]],
+    window_duration: str,
+    ts_col: str = "timestamp",
+    value_col: str = "bytes",
+    watermark: str | None = None,
+    agg: Column | None = None,
+) -> DataFrame:
+    """Several metric families as ONE aggregation: each row explodes
+    into one ``(type, id)`` pair per ``(key, tag)`` in ``metrics``,
+    then a single groupBy(type, id, window(ts, duration)) sums
+    ``value_col`` (or ``agg``). Returns the conformed metric rows
+    ``(timestamp, id, value, type)`` — the union of
+    ``conform_metric(windowed_sum(df, key, ...), key, tag)`` over the
+    metrics, computed over one scan, one shuffle and (on a stream) one
+    state store.
+
+    Keys cast to string BEFORE grouping, so keys of different types
+    share the one array; a null key stays a null ``id`` group, as in
+    the per-key aggregation.
+    """
+    if watermark is not None:
+        df = df.withWatermark(ts_col, watermark)
+    pairs = F.array(
+        *(
+            F.struct(
+                F.lit(tag).alias("type"),
+                (F.col(key) if isinstance(key, str) else key)
+                .cast("string")
+                .alias("id"),
+            )
+            for key, tag in metrics
+        )
+    )
+    agg_col = agg if agg is not None else F.sum(value_col)
+    return (
+        df.select("*", F.explode(pairs).alias("m"))
+        .groupBy("m.type", "m.id", F.window(F.col(ts_col), window_duration))
+        .agg(agg_col.alias("value"))
+        .select(
+            F.col("window.start").alias("timestamp"),
+            "id",
+            "value",
+            "type",
+        )
+    )

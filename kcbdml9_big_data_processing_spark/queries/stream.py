@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.exact import dsum
-from ..operators.metrics import conform_metric, windowed_sum
+from ..operators.metrics import fanout_windowed_sum
 from ..sources.parquet import read_table
 from ..streaming.sources import read_documents_stream, read_events_stream
 from ..streaming.telemetry import record_bounded_run
@@ -91,33 +91,30 @@ def _bounded_session(spark: SparkSession) -> SparkSession:
     return bs
 
 
-def _start_bounded_metric(spark: SparkSession, sf_dir: str, key, tag: str, name: str):
-    """Start one windowed metric as a bounded stream into a
-    complete-mode memory sink; return the StreamingQuery handle (the
-    caller awaits — letting suites drain several StreamExecutions
-    concurrently instead of serializing their fixed startup cost)."""
-    src = read_events_stream(spark, sf_dir)
-    agg = windowed_sum(
-        src, key, "90 seconds", ts_col="ts", value_col="value", agg=dsum("value")
-    )
-    metric = conform_metric(agg, key if isinstance(key, str) else "app", tag)
-    return (
-        metric.writeStream.format("memory")
+def _run_bounded_metrics(spark: SparkSession, sf_dir: str, metrics, name: str):
+    """Run the 90 s windowed metrics ``metrics`` ((key, tag) pairs) as
+    ONE bounded stream (operators/metrics.fanout_windowed_sum: one
+    source replay, one state store for every family) into a
+    complete-mode memory sink; return the drained query handle and
+    the sink table."""
+    spark = _bounded_session(spark)
+    q = (
+        fanout_windowed_sum(
+            read_events_stream(spark, sf_dir),
+            metrics,
+            "90 seconds",
+            ts_col="ts",
+            value_col="value",
+            agg=dsum("value"),
+        )
+        .writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")
         .trigger(availableNow=True)
         .start()
     )
-
-
-def _run_bounded_metric(
-    spark: SparkSession, sf_dir: str, key, tag: str, name: str
-) -> DataFrame:
-    """Run one windowed metric as a bounded stream into a complete-mode
-    memory sink; return the sink table."""
-    spark = _bounded_session(spark)
-    _start_bounded_metric(spark, sf_dir, key, tag, name).awaitTermination()
-    return spark.table(name)
+    q.awaitTermination()
+    return q, spark.table(name)
 
 
 def _drain_to_parquet(df: DataFrame, name: str):
@@ -162,9 +159,10 @@ def stream_bytes_antenna_90s(spark: SparkSession, sf_dir: str) -> DataFrame:
     window -> sum -> metric conformance, executed by the streaming
     engine (StreamExecution micro-batches + state store), result
     hash-checked against the same oracle as the batch phrasing."""
-    return _run_bounded_metric(
-        spark, sf_dir, "event_type", "antenna_bytes_total", "stream_antenna_90s"
+    _, table = _run_bounded_metrics(
+        spark, sf_dir, [("event_type", "antenna_bytes_total")], "stream_antenna_90s"
     )
+    return table
 
 
 @register(
@@ -180,36 +178,26 @@ def stream_bytes_antenna_90s(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_bytes_90s_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1 + A2 + A3 as true streaming, one registration (the ``type``
-    column already discriminates the three metric families, so the
-    union is the natural suite shape — same consolidation pattern the
-    batch bytes_90s suite uses). Each constituent still runs its own
-    full StreamExecution (file replay, state store, complete-mode
-    drain); only the registration count shrinks. A3's key is parsed
-    out of the JSON payload (P3) on the stream before windowing. The
-    three StreamExecutions START together and drain concurrently
-    (their fixed startup + replay cost overlaps; measured ~5.8 s
-    serialized -> ~3 s concurrent at sf0.1) — same pattern a real
-    multi-query streaming job uses (streaming/job.py)."""
-    spark = _bounded_session(spark)
-    app = F.get_json_object("props", "$.k").alias("app")
-    queries = [
-        _start_bounded_metric(
-            spark, sf_dir, "event_type", "antenna_bytes_total", "stream_antenna_90s"
-        ),
-        _start_bounded_metric(
-            spark, sf_dir, "user_id", "user_bytes_total", "stream_user_90s"
-        ),
-        _start_bounded_metric(spark, sf_dir, app, "app_bytes_total", "stream_app_90s"),
-    ]
-    for q in queries:
-        q.awaitTermination()
-        record_bounded_run("stream_bytes_90s_suite", q)
-    return (
-        spark.table("stream_antenna_90s")
-        .unionAll(spark.table("stream_user_90s"))
-        .unionAll(spark.table("stream_app_90s"))
+    """A1 + A2 + A3 as true streaming in ONE StreamExecution: each
+    replayed event fans out to one (type, id) pair per metric family
+    and a single windowed aggregation (one state store, complete mode,
+    one memory sink) sums all three — the same shape the speed-layer
+    job runs (streaming/job.py). The ``type`` column discriminates the
+    families, so the sink table is already the suite's union. A3's key
+    is parsed out of the JSON payload (P3) on the stream before
+    windowing."""
+    q, table = _run_bounded_metrics(
+        spark,
+        sf_dir,
+        [
+            ("event_type", "antenna_bytes_total"),
+            ("user_id", "user_bytes_total"),
+            (F.get_json_object("props", "$.k"), "app_bytes_total"),
+        ],
+        "stream_bytes_90s",
     )
+    record_bounded_run("stream_bytes_90s_suite", q)
+    return table
 
 
 @register(

@@ -1,19 +1,21 @@
-"""Speed-layer job: N concurrent streaming aggregations + raw archive
-on one SparkSession — the re-expression of the reference's run()
-orchestration (streaming/StreamingJob.scala:26-46: parse once, three
-windowed aggs to JDBC, one archive, block forever).
+"""Speed-layer job: one streaming query for every windowed metric plus
+the raw archive, on one SparkSession — the re-expression of the
+reference's run() orchestration (streaming/StreamingJob.scala:26-46:
+parse once, windowed aggs to JDBC, one archive, block forever).
 
 Differences on purpose:
 - parameterized (keys/window/watermark/sinks are config, not
   hardcoded x3 copies like StreamingJobImpl.scala:43-77);
+- one metric query, ``metrics``, for all families
+  (operators/metrics.fanout_windowed_sum), so each trigger reads the
+  source, plans, commits and writes once, not once per metric;
 - every query is checkpointed, not just the archive (T4);
 - no thread-per-query Futures: ``start()`` is non-blocking in Python,
   so orchestration is start-all + ``awaitAnyTermination`` (T6).
 
-Each started query is an independent StreamExecution re-reading the
-source (same as the reference — SURVEY.md §3.1 step 3 notes the
-non-sharing); at scale, prefer one query fanning out in foreachBatch
-if source reads dominate.
+The metric query checkpoints under ``checkpoint_root/metrics``; a
+``checkpoint_root`` written by the older one-query-per-metric layout
+cannot be resumed.
 """
 
 from __future__ import annotations
@@ -24,7 +26,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.metrics import conform_metric, windowed_sum
+from ..operators.metrics import fanout_windowed_sum
 from .sinks import BatchWriter, start_foreach_batch, start_partitioned_archive
 
 
@@ -52,12 +54,10 @@ class StreamingJobConfig:
     #: another run's offsets/state.
     checkpoint_root: str | None = None
     available_now: bool = False
-    #: opt-in state-growth watchdog (r14 verdict #5): registers a
+    #: opt-in state-growth watchdog: registers a
     #: telemetry.make_state_listener for the job's lifetime so live
     #: per-batch state series + all-time peaks are queryable on the
     #: running job (state_peaks / state_violations / state_plateaus)
-    #: — the production alarm the telemetry module promises, wired
-    #: into the orchestration instead of left as a loose adapter.
     state_watchdog: bool = False
     #: per-query live-series ring size (see make_state_listener)
     state_watchdog_max_batches: int = 256
@@ -66,53 +66,48 @@ class StreamingJobConfig:
         if self.checkpoint_root is None:
             # under the process scratch root (tmpdirs), so ad-hoc/test
             # checkpoints are reclaimed at exit instead of leaking one
-            # /tmp dir per run (the ADVICE-r6 leak class; a default
-            # checkpoint is per-process by definition — durability
-            # across restarts requires pinning a path anyway)
+            # /tmp dir per run (a default checkpoint is per-process by
+            # definition — durability across restarts requires pinning
+            # a path anyway)
             from ..tmpdirs import scratch_dir
 
             self.checkpoint_root = scratch_dir("ckpt-")
 
 
+METRICS_QUERY = "metrics"  # query name and checkpoint subdirectory
+
+
 class StreamingJob:
-    """Start the configured streaming queries; caller owns lifecycle."""
+    """Start the metric query (and the archive); caller owns lifecycle."""
 
     def __init__(self, spark: SparkSession, config: StreamingJobConfig):
         self.spark = spark
         self.config = config
         self.queries: list[StreamingQuery] = []
         self._listener = None
-        #: per-job live-series store (r15 review): listeners are
-        #: session-wide, so the watchdog keeps its own dict instead of
-        #: the shared LAST_STATE['live'] — a restarted or concurrent
-        #: job can neither read this job's series nor pollute them
+        #: per-job live-series store: listeners are session-wide, so
+        #: the watchdog keeps its own dict instead of the shared
+        #: LAST_STATE['live'] — a restarted or concurrent job can
+        #: neither read this job's series nor pollute them
         self._state_store: dict[str, list[dict]] = {}
-        #: accepted query names, precomputed from config BEFORE any
-        #: query starts (r15 ADVICE): the old accept closure called
-        #: _own_names(), but queries land in self.queries only after
-        #: q.start() returns — a progress event delivered in that
-        #: window (plausible with availableNow on tiny sources) was
-        #: silently rejected, losing the first batch's state rows
+        #: accepted query names, known from config BEFORE any query
+        #: starts, so a progress event delivered before q.start()
+        #: returns is not rejected
         self._accepted: set[str] = set()
 
     def start(self, source: DataFrame, metric_writer: BatchWriter) -> list[StreamingQuery]:
-        """Start one foreachBatch metric query per configured (key,
-        tag) plus the archive (when configured). ``source`` is the
-        parsed stream (P2-P4 already applied — see
-        operators/parse.parse_json_payload for the Kafka payload
-        path)."""
+        """Start the foreachBatch metric query (every configured (key,
+        tag), rows ``(timestamp, id, value, type)``) plus the archive
+        (when configured). ``source`` is the parsed stream (P2-P4
+        already applied — see operators/parse.parse_json_payload for
+        the Kafka payload path)."""
         cfg = self.config
         if cfg.state_watchdog and self._listener is None:
             from .telemetry import make_state_listener
 
-            # accept only THIS job's queries at the write (second r15
-            # review pass: read-side filtering alone still let foreign
-            # series fill the store and answer through state_plateaus).
-            # The accepted set is knowable from config alone — every
-            # query this job starts is named (metric tags; archive's
-            # default queryName) — and is sealed BEFORE the first
-            # start(), so the listener can never miss an early event.
-            self._accepted = {tag for _, tag in cfg.metrics}
+            # accept only THIS job's queries (all named) at the write,
+            # so foreign series never fill the store
+            self._accepted = {METRICS_QUERY}
             if cfg.archive_path:
                 self._accepted.add("archive")
             self._listener = make_state_listener(
@@ -121,24 +116,22 @@ class StreamingJob:
                 accept=self._accepted.__contains__,
             )
             self.spark.streams.addListener(self._listener)
-        for key, tag in cfg.metrics:
-            agg = windowed_sum(
-                source,
-                key,
-                cfg.window,
-                ts_col=cfg.ts_col,
-                value_col=cfg.value_col,
-                watermark=cfg.watermark,
-            )
-            metric = conform_metric(agg, key, tag)
-            q = start_foreach_batch(
-                metric,
-                metric_writer,
-                checkpoint_dir=os.path.join(cfg.checkpoint_root, tag),
-                query_name=tag,
-                trigger_available_now=cfg.available_now,
-            )
-            self.queries.append(q)
+        metric = fanout_windowed_sum(
+            source,
+            cfg.metrics,
+            cfg.window,
+            ts_col=cfg.ts_col,
+            value_col=cfg.value_col,
+            watermark=cfg.watermark,
+        )
+        q = start_foreach_batch(
+            metric,
+            metric_writer,
+            checkpoint_dir=os.path.join(cfg.checkpoint_root, METRICS_QUERY),
+            query_name=METRICS_QUERY,
+            trigger_available_now=cfg.available_now,
+        )
+        self.queries.append(q)
         if cfg.archive_path:
             q = start_partitioned_archive(
                 source,
@@ -174,9 +167,8 @@ class StreamingJob:
 
     def _own_names(self) -> set[str]:
         # the config-sealed accepted set, plus the live queries keyed
-        # the way the listener keys NAMELESS ones (second r15 review
-        # pass: filtering on truthy q.name alone silently hid an
-        # unnamed own query's state peak from the alarm)
+        # the way the listener keys NAMELESS ones (filtering on truthy
+        # q.name alone would hide an unnamed own query's state peak)
         return self._accepted | {
             q.name or f"id_{q.id}" for q in self.queries
         }
@@ -185,13 +177,12 @@ class StreamingJob:
         """All-time peak summed state rows per query name, from the
         live listener — the number a deployment alarms on (it cannot
         age out of the series ring). Restricted to THIS job's queries:
-        the session-wide listener also hears other jobs' events (r15
-        review), and an alarm must never fire on someone else's
-        query."""
+        the session-wide listener also hears other jobs' events, and an
+        alarm must never fire on someone else's query."""
         own = self._own_names()
         # snapshot: the JVM listener thread inserts concurrently, and
         # iterating the live dict can raise "dictionary changed size
-        # during iteration" (r15 ADVICE)
+        # during iteration"
         peaks = dict(self._require_watchdog().peaks)
         return {name: peak for name, peak in peaks.items() if name in own}
 
@@ -214,10 +205,9 @@ class StreamingJob:
         key count means the watermark is actually evicting. Judged on
         the ring window — pair with :meth:`state_peaks` for the
         all-time bound. Raises KeyError for a query the watchdog has
-        never observed (r15 review: an empty series vacuously
-        plateaus, so a typo'd name — or asking before the async
-        listener delivered anything — must be loud, not a silent
-        pass)."""
+        never observed (an empty series vacuously plateaus, so a typo'd
+        name — or asking before the async listener delivered anything —
+        must be loud, not a silent pass)."""
         from .telemetry import state_plateaus
 
         self._require_watchdog()

@@ -55,6 +55,14 @@ def make_idempotent_jdbc_writer(
     ``write_jdbc`` append. At scale, index ``batch_id_col`` so the
     delete is a point lookup, and keep micro-batches large enough that
     one extra driver round trip per batch is noise.
+
+    Scope: the DELETE is keyed by ``batch_id`` alone, so it is safe
+    only while one query writes the table. A ``StreamingJob`` writes
+    all its metric families from its one ``metrics`` query, so one
+    job's redelivery can no longer delete a sibling metric query's
+    rows. Two jobs (or any two queries) sharing one table still
+    collide: their batch ids overlap, and one query's redelivery
+    deletes the other's rows of the same id.
     """
 
     def _table_exists(conn) -> bool:

@@ -15,6 +15,7 @@ from pyspark.sql import types as T
 
 from kcbdml9_big_data_processing_spark.operators.metrics import (
     conform_metric,
+    fanout_windowed_sum,
     windowed_sum,
 )
 from kcbdml9_big_data_processing_spark.sources.files import read_file_stream
@@ -185,7 +186,7 @@ def test_archive_checkpoint_no_reprocess_on_restart(spark, tmp_path):
 
 
 def test_multi_query_orchestration(spark, tmp_path):
-    """T6: the job starts N metric queries + archive concurrently on
+    """T6: the job starts its metric query + archive concurrently on
     one session and drains them all (StreamingJob.scala:37-43 shape)."""
     src_dir = str(tmp_path / "src")
     _write_file(
@@ -220,6 +221,105 @@ def test_multi_query_orchestration(spark, tmp_path):
     # [0,90) finalized by the 02:00 row; [90,180)-of-02:00 still open
     assert (_t(0, 0), "a", 10, "key_bytes_total") in rows
     assert (_t(0, 0), "b", 20, "key_bytes_total") in rows
+
+
+#: three metric families of different key types: an integer, a
+#: string and a nullable string key
+FANOUT_SCHEMA = T.StructType(
+    [
+        T.StructField("timestamp", T.TimestampType(), True),
+        T.StructField("antenna", T.IntegerType(), True),
+        T.StructField("user", T.StringType(), True),
+        T.StructField("app", T.StringType(), True),
+        T.StructField("bytes", T.LongType(), True),
+    ]
+)
+FANOUT_METRICS = [
+    ("antenna", "antenna_bytes_total"),
+    ("user", "user_bytes_total"),
+    ("app", "app_bytes_total"),
+]
+FANOUT_ROWS = [
+    (_t(0, 10), 1, "u1", "web", 10),
+    (_t(0, 20), 2, "u1", "mail", 20),
+    (_t(0, 40), 1, "u2", None, 7),
+    (_t(1, 40), 1, "u2", "web", 5),
+    (_t(2, 10), 10, "u3", None, 3),
+]
+
+
+def _per_family_group_by(spark, rows) -> set[tuple]:
+    """The batch answer per family: GROUP BY key, 90 s window."""
+    spark.createDataFrame(rows, FANOUT_SCHEMA).createOrReplaceTempView("fanout_src")
+    want = set()
+    for key, tag in FANOUT_METRICS:
+        want |= {
+            tuple(r)
+            for r in spark.sql(
+                f"""SELECT window(timestamp, '90 seconds').start AS timestamp,
+                           CAST({key} AS STRING) AS id, SUM(bytes) AS value,
+                           '{tag}' AS type
+                    FROM fanout_src
+                    GROUP BY {key}, window(timestamp, '90 seconds')"""
+            ).collect()
+        }
+    return want
+
+
+def test_fanout_windowed_sum_equals_union_of_per_key_sums(spark):
+    """One fan-out aggregation returns exactly the union of the per-key
+    windowed sums — an integer key cast to its string id, and a null
+    app key kept as its own null-id group."""
+    df = spark.createDataFrame(FANOUT_ROWS, FANOUT_SCHEMA)
+    got = fanout_windowed_sum(df, FANOUT_METRICS, "90 seconds")
+    assert got.columns == ["timestamp", "id", "value", "type"]
+    want = None
+    for key, tag in FANOUT_METRICS:
+        one = conform_metric(windowed_sum(df, key, "90 seconds"), key, tag)
+        want = one if want is None else want.unionAll(one)
+    got_rows = sorted(map(tuple, got.collect()), key=repr)
+    assert got_rows == sorted(map(tuple, want.collect()), key=repr)
+    assert (_t(0, 0), "1", 17, "antenna_bytes_total") in got_rows
+    assert (_t(0, 0), None, 7, "app_bytes_total") in got_rows
+
+
+def test_job_runs_one_metric_query_for_all_families(spark, tmp_path):
+    """A 3-metric job with an archive starts exactly 2 queries (the
+    metric query and the archive), and its writer receives the same
+    (timestamp, id, value, type) rows as a batch GROUP BY per family."""
+    src_dir = str(tmp_path / "src")
+    # file 1: the data; file 2: one row whose only role is to move the
+    # watermark past every data window so append mode finalizes them
+    flush = [(_t(10, 0), 99, "flush", "flush", 1)]
+    for rows in (FANOUT_ROWS, flush):
+        spark.createDataFrame(rows, FANOUT_SCHEMA).coalesce(1).write.mode(
+            "append"
+        ).parquet(src_dir)
+    stream = read_file_stream(
+        spark, src_dir, FANOUT_SCHEMA, fmt="parquet", max_files_per_trigger=1
+    )
+    got: list[tuple] = []
+
+    def writer(batch_df, batch_id: int) -> None:
+        got.extend(tuple(r) for r in batch_df.collect())
+
+    job = StreamingJob(
+        spark,
+        StreamingJobConfig(
+            metrics=list(FANOUT_METRICS),
+            archive_path=str(tmp_path / "archive"),
+            checkpoint_root=str(tmp_path / "ckpts"),
+            available_now=True,
+        ),
+    )
+    queries = job.start(stream, writer)
+    assert sorted(q.name for q in queries) == ["archive", "metrics"]
+    job.await_all()
+
+    data = [r for r in got if r[0] < _t(10, 0)]
+    assert len(data) == len(set(data))  # no window written twice
+    assert set(data) == _per_family_group_by(spark, FANOUT_ROWS)
+    assert spark.read.parquet(str(tmp_path / "archive")).count() == 6
 
 
 def test_job_state_watchdog_surfaces_violations(spark, tmp_path):
@@ -260,28 +360,29 @@ def test_job_state_watchdog_surfaces_violations(spark, tmp_path):
         peaks = {}
         for _ in range(100):
             peaks = job.state_peaks()
-            if peaks.get("watchdog_key_bytes", 0) > 0:
+            if peaks.get("metrics", 0) > 0:
                 break
             time.sleep(0.2)
-        assert peaks.get("watchdog_key_bytes", 0) > 0, (
+        assert peaks.get("metrics", 0) > 0, (
             "watchdog recorded no state for the windowed agg"
         )
         # the alarm: a ceiling of 0 rows is violated by any state...
-        assert "watchdog_key_bytes" in job.state_violations(0)
+        assert "metrics" in job.state_violations(0)
         # ...a generous one is not
         assert job.state_violations(10_000) == {}
         # live series is queryable through the plateau predicate too
-        assert job.state_plateaus("watchdog_key_bytes", 10_000)
-        # an unobserved name must be LOUD — an empty
-        # series vacuously plateaus, so a typo must not silently pass
+        assert job.state_plateaus("metrics", 10_000)
+        # an unobserved name must be LOUD — an empty series vacuously
+        # plateaus, so a typo (or a metric tag, which names no query)
+        # must not silently pass
         import pytest
 
         with pytest.raises(KeyError, match="no series"):
-            job.state_plateaus("watchdog_key_byts", 10_000)
+            job.state_plateaus("watchdog_key_bytes", 10_000)
         # the job keeps its OWN store, not the shared
         # LAST_STATE['live'] — concurrent/restarted jobs can't
         # cross-contaminate
-        assert "watchdog_key_bytes" not in telemetry.LAST_STATE.get(
+        assert "metrics" not in telemetry.LAST_STATE.get(
             "live", {}
         )
     finally:
