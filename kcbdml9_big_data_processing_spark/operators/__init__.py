@@ -9,7 +9,7 @@ afterthoughts.
 """
 
 from .partitions import derive_time_partitions
-from .metrics import windowed_sum, conform_metric
+from .metrics import windowed_sum, conform_metric, fanout_windowed_sum
 from .enrich import enrich
 from .quota import quota_violations
 from .parse import parse_json_payload
@@ -18,6 +18,7 @@ __all__ = [
     "derive_time_partitions",
     "windowed_sum",
     "conform_metric",
+    "fanout_windowed_sum",
     "enrich",
     "quota_violations",
     "parse_json_payload",
