@@ -6,9 +6,10 @@ change is compared against the commit before it.
     PYTHONPATH=. python tools/ab_process.py QUERY [QUERY...]
         --base REV [--legs N] [--runs N] [--sf DIR]
 
-The base arm's children import the package from a detached
-``git worktree`` of REV in a temp dir (removed on exit); the change
-arm's children import it from this checkout. Each leg spawns one
+The base arm's children import the package from a ``git archive``
+extract of REV in a temp dir (removed on exit; unlike a worktree, it
+leaves nothing registered in the repository if the run is killed);
+the change arm's children import it from this checkout. Each leg spawns one
 child per arm (order alternates per leg); each child warms up
 (building its per-process stores), then times the queries
 median-of-N with the noop sink. Window drift hits both arms equally
@@ -79,10 +80,14 @@ def main() -> None:
     tmp = tempfile.mkdtemp(prefix="ab_base_")
     base_root = os.path.join(tmp, "tree")
     try:
-        subprocess.run(
-            ["git", "-C", ROOT, "worktree", "add", "--detach", base_root, args.base],
+        os.mkdir(base_root)
+        archive = subprocess.run(
+            ["git", "-C", ROOT, "archive", args.base],
             check=True,
             capture_output=True,
+        )
+        subprocess.run(
+            ["tar", "-x", "-C", base_root], input=archive.stdout, check=True
         )
         changes: dict[str, list[float]] = {q: [] for q in args.queries}
         bases: dict[str, list[float]] = {q: [] for q in args.queries}
@@ -96,10 +101,6 @@ def main() -> None:
                     tgt[q].extend(samples)
                 print(f"leg {leg} {arm}: {res}", flush=True)
     finally:
-        subprocess.run(
-            ["git", "-C", ROOT, "worktree", "remove", "--force", base_root],
-            capture_output=True,
-        )
         shutil.rmtree(tmp, ignore_errors=True)
     med = lambda xs: sorted(xs)[len(xs) // 2]
     for q in args.queries:
