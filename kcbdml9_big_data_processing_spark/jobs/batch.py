@@ -1,17 +1,16 @@
-"""Batch layer job: enrich once, cache, fan out to four aggregations.
+"""Batch layer job: enrich once, cache, write two outputs.
 
-Mirrors batch/BatchJob.scala:28-47: read one hour of the archive,
-read the user dimension, inner-join, ``.cache()`` the enriched frame
-(M1), then derive bytes-per-antenna / per-email / per-app hourly
-metrics plus the quota-violation report from the SAME cached input —
-four actions, one scan+join (the first action materializes the cache,
-the other three reuse it).
+Mirrors batch/BatchJob.scala:28-47: read one hour of the archive and
+the user dimension, inner-join, ``.cache()`` the enriched frame (M1),
+then write from it every metric family (bytes per antenna / email /
+app) as ONE aggregation, ``metrics``, plus the quota report: two
+actions where the reference runs one per family and one for the
+report. The first fills the cache, the second reuses its scan and
+join. A JDBC dimension has no size statistics, so the join broadcasts
+the fact hour, not the dimension (operators/enrich.py).
 
-Scale: the cache holds one filter's worth of enriched fact rows (an
-hour-partition in the reference); at 100 TB-of-archive that is the
-working set, not the table. If the fan-out ever grows past memory,
-swap ``cache()`` for a checkpoint/persist(DISK_ONLY) — the orchestration
-shape stays the same.
+Scale: the cache holds one hour of enriched rows, the working set, not
+the table; past memory, swap ``cache()`` for persist(DISK_ONLY).
 """
 
 from __future__ import annotations
@@ -23,7 +22,7 @@ from pyspark.sql import DataFrame
 
 from ..functions.exact import dsum
 from ..operators.enrich import enrich
-from ..operators.metrics import conform_metric, windowed_sum
+from ..operators.metrics import fanout_windowed_sum
 from ..operators.quota import quota_violations
 
 #: named-output writer, e.g. a JDBC append (sinks/jdbc.py) or a test dict
@@ -45,27 +44,31 @@ class BatchJobConfig:
 
 
 class BatchJob:
-    """run(fact, dim, write) -> join once, cache, fan out (BJ:28-47)."""
+    """run(fact, dim, write) -> join once, cache, two outputs (BJ:28-47)."""
 
     def __init__(self, config: BatchJobConfig):
         self.config = config
 
     def run(self, fact: DataFrame, dim: DataFrame, write: OutputWriter) -> None:
-        """``write(name, df)`` MUST materialize the frame (collect or
+        """Write ``metrics`` (every family's ``(timestamp, id, value,
+        type)`` rows) then ``quota_violations``, each if configured.
+        ``write(name, df)`` MUST materialize the frame (collect or
         sink it) — the cache is released when run() returns."""
         cfg = self.config
         enriched = enrich(fact, dim, cfg.fact_key, cfg.dim_key).cache()
         try:
-            for key, tag in cfg.metrics:
-                agg = windowed_sum(
-                    enriched,
-                    key,
-                    cfg.window,
-                    ts_col=cfg.ts_col,
-                    value_col=cfg.value_col,
-                    agg=dsum(cfg.value_col),
+            if cfg.metrics:
+                write(
+                    "metrics",
+                    fanout_windowed_sum(
+                        enriched,
+                        cfg.metrics,
+                        cfg.window,
+                        ts_col=cfg.ts_col,
+                        value_col=cfg.value_col,
+                        agg=dsum(cfg.value_col),
+                    ),
                 )
-                write(tag, conform_metric(agg, key, tag))
             if cfg.quota_user_col and cfg.quota_col:
                 write(
                     "quota_violations",

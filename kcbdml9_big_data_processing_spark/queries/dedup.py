@@ -836,16 +836,20 @@ def _bucket_meta(spark: SparkSession, path: str) -> dict | None:
     """Current (max-version) bucket_meta row, or None if the index was
     never compacted. Explicit read schema so rows written before the
     ``tail`` column existed surface it as NULL (resolved to the
-    un-versioned dir by :func:`_tail_dir`)."""
-    try:
-        row = (
-            spark.read.schema(_META_SCHEMA)
-            .parquet(f"{path}/bucket_meta")
-            .orderBy(F.col("version").desc())
-            .first()
-        )
-    except Exception:
+    un-versioned dir by :func:`_tail_dir`). A ``bucket_meta`` dir that
+    exists but cannot be read raises: it is the compaction's commit
+    record, so it must not pass for an uncompacted index."""
+    from ..fs import exists
+
+    meta_dir = f"{path}/bucket_meta"
+    if not exists(spark, meta_dir):
         return None
+    row = (
+        spark.read.schema(_META_SCHEMA)
+        .parquet(meta_dir)
+        .orderBy(F.col("version").desc())
+        .first()
+    )
     return None if row is None else row.asDict()
 
 

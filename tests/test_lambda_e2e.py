@@ -97,9 +97,7 @@ def test_lambda_end_to_end(spark, tmp_path):
     written: list[str] = []
 
     def serve(name: str, df):
-        table = {"email_bytes_total": "bytes_hourly", "quota_violations": "user_quota_limit"}[
-            name
-        ]
+        table = {"metrics": "bytes_hourly", "quota_violations": "user_quota_limit"}[name]
         df.write.format("jdbc").option("url", url).option("dbtable", table).option(
             "driver", DERBY
         ).mode("overwrite").save()

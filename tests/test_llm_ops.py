@@ -1009,6 +1009,32 @@ def test_dedup_index_crash_recovery_and_vacuum(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {_bucketed_table_name(path)}")
 
 
+def test_bucket_meta_absent_is_none_unreadable_raises(spark, tmp_path):
+    """An index never compacted has no ``bucket_meta`` dir and reads as
+    None; a ``bucket_meta`` dir that exists but holds no readable
+    parquet is a broken commit record and raises instead of passing
+    for an uncompacted index."""
+    from kcbdml9_big_data_processing_spark.queries.dedup import (
+        _bucket_meta,
+        build_dedup_index,
+    )
+    from kcbdml9_big_data_processing_spark.queries.similarity import _gen_current
+
+    docs = spark.createDataFrame(
+        [(1, "the quick brown fox jumps over the lazy dog")], "doc_id long, text string"
+    )
+    root = str(tmp_path / "idx")
+    build_dedup_index(docs, root)
+    path = _gen_current(spark, root)
+    assert _bucket_meta(spark, path) is None
+
+    meta = tmp_path / "broken" / "bucket_meta"
+    meta.mkdir(parents=True)
+    (meta / "part-0.parquet").write_text("not parquet")
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        _bucket_meta(spark, str(tmp_path / "broken"))
+
+
 def test_semantic_index_label_ivf_blocking(spark, tmp_path):
     """r7 verdict #1 — production-granularity blocking: a semantic
     index built with ``label_ivf`` composite blocking (frozen coarse
