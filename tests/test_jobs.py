@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import DataFrame
 
 from kcbdml9_big_data_processing_spark.functions.exact import dsum
@@ -103,33 +104,37 @@ def _job(metrics=METRICS, quota: bool = True) -> BatchJob:
     )
 
 
-def _run(spark, job: BatchJob) -> dict[str, list]:
+def _run(spark, job: BatchJob) -> list[tuple[str, list[tuple]]]:
+    """Every ``write(name, rows)`` call of one run, in order."""
     fact, dim = _frames(spark)
-    got: dict[str, list] = {}
+    calls: list[tuple[str, list[tuple]]] = []
 
     def write(name: str, df: DataFrame) -> None:
-        assert name not in got
-        got[name] = [tuple(r) for r in df.collect()]
+        calls.append((name, [tuple(r) for r in df.collect()]))
 
     job.run(fact, dim, write)
-    return got
+    return calls
 
 
-def test_batch_job_writes_metrics_then_quota(spark):
-    """Two writes for any number of families, metrics first."""
-    assert list(_run(spark, _job())) == ["metrics", "quota_violations"]
-
-
-def test_batch_job_skips_unconfigured_outputs(spark):
-    assert list(_run(spark, _job(metrics=[]))) == ["quota_violations"]
-    assert list(_run(spark, _job(quota=False))) == ["metrics"]
+@pytest.mark.parametrize(
+    "metrics, quota, names",
+    [
+        (METRICS, True, ["metrics", "quota_violations"]),
+        ([], True, ["quota_violations"]),
+        (METRICS, False, ["metrics"]),
+    ],
+)
+def test_batch_job_writes_one_metrics_output(spark, metrics, quota, names):
+    """One ``metrics`` write for any number of families, then the
+    quota report; each only when configured."""
+    assert [name for name, _ in _run(spark, _job(metrics, quota))] == names
 
 
 def test_batch_job_metrics_equal_union_of_per_family_sums(spark):
     """The one ``metrics`` output holds exactly the union of the
     per-family hourly sums over the enrichment: the integer key as its
     string id, and the null app key as its own null-id group."""
-    got = sorted(_run(spark, _job())["metrics"], key=repr)
+    got = sorted(dict(_run(spark, _job()))["metrics"], key=repr)
     fact, dim = _frames(spark)
     enriched = enrich(fact, dim, "id", "id")
     want = []
@@ -146,7 +151,6 @@ def test_batch_job_metrics_equal_union_of_per_family_sums(spark):
     assert got == sorted(want, key=repr)
     assert (_h(10), "1", 300.0, "user_bytes_total") in got
     assert (_h(10), None, 55.0, "app_bytes_total") in got
-    assert {r[3] for r in got} == {tag for _, tag in METRICS}
 
 
 def test_batch_job_metrics_add_one_shuffle(spark):
@@ -164,5 +168,5 @@ def test_batch_job_metrics_add_one_shuffle(spark):
     # counted twice
     enriched = enrich(fact, dim, "id", "id")
     metrics = frames["metrics"]
-    assert shuffle_exchange_count(metrics) == shuffle_exchange_count(enriched) + 1
     assert "InMemoryRelation" not in metrics._jdf.queryExecution().toString()
+    assert shuffle_exchange_count(metrics) == shuffle_exchange_count(enriched) + 1
