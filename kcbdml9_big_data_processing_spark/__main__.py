@@ -9,7 +9,7 @@ in the registry: results print as a table (first ``--limit`` rows) or
 land in parquet with ``--out``; ``--explain`` prints the formatted
 physical plan instead of executing.
 
-The persisted-index lifecycle (r7 verdict #8) is driveable from the
+The persisted-index lifecycle is driveable from the
 shell too:
 
     python -m kcbdml9_big_data_processing_spark index ACTION
@@ -20,14 +20,14 @@ shell too:
 ACTION is build / extend / search / compact / vacuum / stats
 (compact applies to the ngram family's bucketed base+delta layout;
 vacuum prunes superseded generations for every family — the ngram
-base+tail versions, or the r10 g{N} build generations of
+base+tail versions, or the g{N} build generations of
 ivf/pq/semantic; every family supports build / extend / search /
 stats).
 ``--where`` filters the input table (documents for ngram, embeddings
 otherwise) — e.g. build over ``doc_id % 2 = 0`` then search the
 odd half against it.
 
-The quality-classifier trainer is driveable too (r10):
+The quality-classifier trainer is driveable too:
 
     python -m kcbdml9_big_data_processing_spark train
         (--labels PARQUET | --label-expr SQL [--sf DIR])
@@ -35,7 +35,7 @@ The quality-classifier trainer is driveable too (r10):
 
 writing the fitted integer milli-weights as a JSON list — the
 artifact classifier_score and CurationConfig.quality_model_weights
-consume. And raw corpora land from the shell (r10):
+consume. And raw corpora land from the shell:
 
     python -m kcbdml9_big_data_processing_spark ingest
         (--text-dir DIR | --jsonl PATH | --csv PATH) --out DOCS_PARQUET
@@ -43,12 +43,12 @@ consume. And raw corpora land from the shell (r10):
         [--csv-columns C,C,... --csv-sep S --csv-header]
 
 And the deterministic training-shard export + failed-shard retry
-(r13 — the retry was library-only before):
+from the shell:
 
     python -m kcbdml9_big_data_processing_spark export-shards
         (--input PARQUET | --sf DIR) --out ROOT --n-shards N
         [--salt N] [--id-col COL] [--where SQL]
-        [--only-shards K,K,...] [--overwrite] [--no-verify-meta]
+        [--only-shards K,K,...] [--overwrite]
         [--writer-lock-ttl SEC]
 
 with its detection sibling (exit 1 lists the shards to retry):
@@ -56,12 +56,12 @@ with its detection sibling (exit 1 lists the shards to retry):
     python -m kcbdml9_big_data_processing_spark audit-shards
         --path ROOT [--reference PARQUET | --sf DIR]
 
-And the curation job itself (r13) — full corpus run, or the daily
-incremental batch when --archive + --index are given:
+And the curation job itself — full corpus run, or the daily
+incremental batch when --index is given:
 
     python -m kcbdml9_big_data_processing_spark curate
         --docs PARQUET --out-kept PATH --out-decisions PATH
-        [--archive KEPT_PARQUET --index DIR [--extend-index]]
+        [--index DIR [--extend-index]]
         [--benchmark PARQUET] [--build-index DIR]
         [--jaccard-min X] [--min-words N] [...quality thresholds]
         [--model-weights weights.json [--min-model-mean-milli N]]
@@ -167,7 +167,7 @@ def _index_main(argv: list[str], spark=None) -> int:
             elif args.action == "compact":
                 D.compact_dedup_index(spark, path)
             elif args.action == "vacuum":
-                # both GC layers (r11): superseded compaction dirs
+                # both GC layers: superseded compaction dirs
                 # inside the current generation, then whole superseded
                 # build generations
                 D.vacuum_dedup_index(spark, path)
@@ -262,8 +262,8 @@ def _index_stats(spark, family: str, path: str) -> int:
         )
         from .queries.similarity import _gen_current
 
-        # r11: ngram builds are generational too — resolve like the
-        # vector families below
+        # ngram builds are generational too — resolve like the vector
+        # families below
         path = _gen_current(spark, path)
         print(f"generation_dir={path}")
         from .queries.dedup import _dir_has_parquet
@@ -272,10 +272,10 @@ def _index_stats(spark, family: str, path: str) -> int:
             print("exact_hash_map=yes")
         else:
             print(
-                "exact_hash_map=MISSING — legacy index:"
-                " run_incremental derives the map from archive text"
-                " (O(archive) per batch); rebuild with"
-                " build_dedup_index to restore O(batch)"
+                "exact_hash_map=MISSING — broken index: run_incremental"
+                " refuses it; rebuild it over the kept archive with"
+                " build_dedup_index (curate --build-index; a run root:"
+                " curate --run-root ROOT --repair-index)"
             )
         meta = _bucket_meta(spark, path)
         tail = _tail_dir(meta, path)
@@ -456,7 +456,7 @@ def _ingest_main(argv: list[str], spark=None) -> int:
         # one check for all three fronts: the library raises the same
         # bound, but only the CSV path's layout handler caught it —
         # the same bad flag must not traceback on one front and exit 2
-        # on another (r13 second review pass)
+        # on another
         print(
             f"ingest: --epoch must be in [0, {(1 << 15) - 1}], got"
             f" {args.epoch}",
@@ -504,7 +504,7 @@ def _ingest_main(argv: list[str], spark=None) -> int:
                     print(f"ingest: {e}", file=sys.stderr)
                     return 2
                 if args.csv_header:
-                    # r13 ADVICE: a --csv-header that matched nothing
+                    # a --csv-header that matched nothing
                     # means the declared layout disagrees with the
                     # file (wrong --csv-columns order, wrong
                     # --csv-sep) — warn before the header is silently
@@ -576,12 +576,6 @@ def _export_shards_main(argv: list[str], spark=None) -> int:
         "--overwrite",
         action="store_true",
         help="full export over an existing root (truncates it)",
-    )
-    ap.add_argument(
-        "--no-verify-meta",
-        action="store_true",
-        help="skip the retry's sidecar recipe check (pre-r13 exports;"
-        " check n_shards/salt/id-col by hand first)",
     )
     ap.add_argument("--over-provision", type=int, default=16)
     ap.add_argument(
@@ -674,7 +668,6 @@ def _export_shards_main(argv: list[str], spark=None) -> int:
                 over_provision=args.over_provision,
                 only_shards=only,
                 target_task_bytes=args.target_task_bytes,
-                verify_meta=not args.no_verify_meta,
             )
         what = f"shards {sorted(set(only))}" if only else f"{args.n_shards} shards"
         print(f"exported {what} to {args.out}")
@@ -703,12 +696,6 @@ def _audit_shards_main(argv: list[str], spark=None) -> int:
         help="testdata dir; its documents table is the reference",
     )
     ap.add_argument(
-        "--n-shards", type=int, default=None,
-        help="pre-sidecar (pre-r13) exports: the export's shard count",
-    )
-    ap.add_argument("--salt", type=int, default=None)
-    ap.add_argument("--id-col", default=None)
-    ap.add_argument(
         "--out",
         default=None,
         help="write the full audit frame as parquet here; stdout then"
@@ -735,14 +722,7 @@ def _audit_shards_main(argv: list[str], spark=None) -> int:
             ref = read_table(spark, args.sf, "documents")
         from .sinks.shards import read_export_meta
 
-        audit = audit_training_shards(
-            spark,
-            args.path,
-            reference=ref,
-            n_shards=args.n_shards,
-            salt=args.salt,
-            id_col=args.id_col,
-        )
+        audit = audit_training_shards(spark, args.path, reference=ref)
         if args.out:
             # distributed report: the frame never rides the driver;
             # only failing rows (bounded by the failure count) and two
@@ -754,8 +734,7 @@ def _audit_shards_main(argv: list[str], spark=None) -> int:
             print(f"audit report: {n_audited} shards -> {args.out}")
         else:
             rows = audit.collect()
-        meta = read_export_meta(spark, args.path)
-        n_shards = meta["n_shards"] if meta else args.n_shards
+        n_shards = read_export_meta(spark, args.path)["n_shards"]
         bad = [r["shard"] for r in rows if not r["ok"]]
         for r in rows:
             print(
@@ -767,7 +746,7 @@ def _audit_shards_main(argv: list[str], spark=None) -> int:
             # split the repair hint: only in-range shards are
             # re-exportable; an out-of-range row is a STALE dir from a
             # wider export whose repair is deletion — feeding it to
-            # --only-shards would raise (second r13 review)
+            # --only-shards would raise
             retry = [k for k in bad if 0 <= k < n_shards]
             stale = [k for k in bad if not 0 <= k < n_shards]
             msg = "FAILED shards " + ",".join(str(k) for k in bad)
@@ -793,14 +772,14 @@ def _audit_shards_main(argv: list[str], spark=None) -> int:
 def _curate_main(argv: list[str], spark=None) -> int:
     """``curate``: the engine's core job from the shell — full-corpus
     curation (jobs/training_data.TrainingDataCurator.run) or the daily
-    incremental batch (run_incremental, when ``--archive`` +
-    ``--index`` are given). Closes the operational loop the other
-    verbs bracket: ``ingest`` lands the corpus, ``curate`` produces
-    the kept set + decision record (and maintains the near-dup index
-    artifact the NEXT day's increment needs), ``export-shards`` ships
-    it. Per-reason decision counts print as the job summary.
+    incremental batch (run_incremental, when ``--index`` is given).
+    Closes the operational loop the other verbs bracket: ``ingest``
+    lands the corpus, ``curate`` produces the kept set + decision record
+    (and maintains the near-dup index artifact the NEXT day's increment
+    needs), ``export-shards`` ships it. Per-reason decision counts print
+    as the job summary.
 
-    ``--run-root`` (r15) is the CRASH-SAFE orchestration of the same
+    ``--run-root`` is the CRASH-SAFE orchestration of the same
     pipeline (jobs/runs.py): kept/decisions/index maintenance stage
     under a versioned run dir and publish at one run_meta append, so
     a mid-run crash can never tear the daily-incremental contract
@@ -808,7 +787,7 @@ def _curate_main(argv: list[str], spark=None) -> int:
     later runs incremental against the last PUBLISHED run; recovery
     flags --retry-torn / --repair-index; exit 4 = a torn prior
     attempt needs one of them (stderr names which). ``--vacuum-runs``
-    (r16) reclaims run dirs superseded by the latest full run's
+    reclaims run dirs superseded by the latest full run's
     lineage, keeping ``--retain-runs`` (default 2) of them — meta
     rows and the standing archive are never touched."""
     ap = argparse.ArgumentParser(prog="kcbdml9-spark curate")
@@ -822,7 +801,7 @@ def _curate_main(argv: list[str], spark=None) -> int:
     ap.add_argument(
         "--out-decisions", default=None, help="decision-record parquet"
     )
-    # crash-safe run-root mode (r14 verdict #1): the root manages kept/
+    # crash-safe run-root mode: the root manages kept/
     # decisions/index itself — versioned run dirs, one meta commit
     ap.add_argument(
         "--run-root",
@@ -832,7 +811,7 @@ def _curate_main(argv: list[str], spark=None) -> int:
         " under ROOT/runs/r{N} and publish with one run_meta append;"
         " first run is full, later runs incremental against the last"
         " published run (jobs/runs.py). Replaces --out-kept/"
-        "--out-decisions/--archive/--index/--build-index/"
+        "--out-decisions/--index/--build-index/"
         "--extend-index.",
     )
     ap.add_argument(
@@ -876,16 +855,10 @@ def _curate_main(argv: list[str], spark=None) -> int:
         " retain as a rollback window (default 2)",
     )
     ap.add_argument(
-        "--archive",
-        default=None,
-        help="INCREMENTAL: kept parquet of a prior full run (with"
-        " --index; ids must be epoch-monotonic vs the batch)",
-    )
-    ap.add_argument(
         "--index",
         default=None,
         help="INCREMENTAL: the persisted n-gram dedup index built over"
-        " exactly that archive",
+        " the kept archive (ids must be epoch-monotonic vs the batch)",
     )
     ap.add_argument(
         "--benchmark",
@@ -925,10 +898,10 @@ def _curate_main(argv: list[str], spark=None) -> int:
         help="weights file from the train verb; arms the model quality"
         " gate",
     )
-    # None sentinels, real defaults applied after the weights check
-    # (r14 ADVICE: re-hardcoding the defaults in the inert-flag guard
-    # desyncs if one drifts, and an EXPLICIT --model-ngram-max 2
-    # without weights slipped through silently)
+    # None sentinels, real defaults applied after the weights check:
+    # re-hardcoding the defaults in the inert-flag guard desyncs if
+    # one drifts, and an EXPLICIT --model-ngram-max 2 without weights
+    # must be caught too
     ap.add_argument("--min-model-mean-milli", type=int, default=None)
     ap.add_argument(
         "--model-ngram-max",
@@ -978,7 +951,6 @@ def _curate_main(argv: list[str], spark=None) -> int:
         managed = {
             "--out-kept": args.out_kept,
             "--out-decisions": args.out_decisions,
-            "--archive": args.archive,
             "--index": args.index,
             "--build-index": args.build_index,
         }
@@ -1008,15 +980,7 @@ def _curate_main(argv: list[str], spark=None) -> int:
             )
             return 2
 
-    incremental = args.archive is not None or args.index is not None
-    if incremental and (args.archive is None or args.index is None):
-        print(
-            "curate: incremental mode needs BOTH --archive and --index"
-            " (the index must have been built over exactly that"
-            " archive)",
-            file=sys.stderr,
-        )
-        return 2
+    incremental = args.index is not None
     if incremental and args.benchmark is not None:
         print(
             "curate: --benchmark decontamination is a full-run stage;"
@@ -1055,11 +1019,11 @@ def _curate_main(argv: list[str], spark=None) -> int:
         args.min_model_mean_milli is not None
         or args.model_ngram_max is not None
     ):
-        # r13 ADVICE: CurationConfig ignores both knobs when weights
-        # is None — mirror the --writer-lock-ttl posture so an inert
-        # flag is a usage error, never a no-op mistaken for a gate.
-        # None sentinels (r14 ADVICE), so an EXPLICITLY passed default
-        # value without weights is caught too.
+        # CurationConfig ignores both knobs when weights is None —
+        # mirror the --writer-lock-ttl posture so an inert flag is a
+        # usage error, never a no-op mistaken for a gate. None
+        # sentinels, so an EXPLICITLY passed default value without
+        # weights is caught too.
         print(
             "curate: --min-model-mean-milli / --model-ngram-max tune"
             " the model quality gate — they do nothing without"
@@ -1187,10 +1151,10 @@ def _curate_main(argv: list[str], spark=None) -> int:
                 return 4
             except RunUsageError as e:
                 # ONLY the library's pre-stage mode/flag refusals map
-                # to exit 2 (r15 review: a broad ValueError catch here
-                # disguised data-integrity failures — e.g. a
-                # monotonic-id violation — as flag mistakes and
-                # discarded their tracebacks)
+                # to exit 2: a broad ValueError catch would disguise
+                # data-integrity failures — e.g. a monotonic-id
+                # violation — as flag mistakes and discard their
+                # tracebacks
                 print(f"curate: {e}", file=sys.stderr)
                 return 2
             for r in (
@@ -1217,9 +1181,8 @@ def _curate_main(argv: list[str], spark=None) -> int:
             docs = spark.read.parquet(args.docs)
             curator = TrainingDataCurator(cfg)
             if incremental:
-                archive = spark.read.parquet(args.archive)
                 kept, dec = curator.run_incremental(
-                    docs, archive, args.index, cleanup=cleanup
+                    docs, args.index, cleanup=cleanup
                 )
             else:
                 bench = (

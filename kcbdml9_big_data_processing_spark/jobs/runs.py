@@ -1,18 +1,17 @@
-"""Run-level crash-safe commit for the curate pipeline (r14 verdict
-"what's wrong" #2 / next-round #1).
+"""Run-level crash-safe commit for the curate pipeline.
 
 A curate run produces THREE artifacts whose lockstep is the
 daily-incremental contract: the kept corpus (the next run's archive),
 the decision record, and the near-dup index maintenance (built over
-exactly that kept set, or extended by exactly this batch). The legacy
-CLI path writes them as three separate parquet jobs — each one
-committer-atomic, but a crash BETWEEN them tears the RUN: a kept set
-without its decision record, or an archive ahead of its index, which
-is precisely the state ``run_incremental``'s own preconditions
-reject. (The reference has the same weakness one level down: its
-batch job appends four tables with no transaction —
-BatchJobImpl.scala:90-100; SURVEY.md §7.4 flagged it, and the index
-family fixed it for indexes in r10/r11.)
+exactly that kept set, or extended by exactly this batch). The plain CLI
+path (``curate --out-kept ...``) writes them as three separate parquet
+jobs — each one committer-atomic, but a crash BETWEEN them tears the
+RUN: a kept set without its decision record, or an archive ahead of its
+index, which is precisely the state ``run_incremental``'s own
+preconditions reject. (The reference has the same weakness one level
+down: its batch job appends four tables with no transaction —
+BatchJobImpl.scala:90-100; SURVEY.md §7.4 flagged it; the index family's
+generations fix it for indexes.)
 
 This module lifts the index family's recipe (versioned dirs + a tiny
 append-only meta table as the single atomicity point —
@@ -50,10 +49,10 @@ on how far it got, read off the staged markers:
   (crash between build_dedup_index's internal gen_meta append and the
   ``index_done`` marker) — detected by comparing the index's current
   generation version against the ``index_gen`` marker staged at run
-  start (r15 ADVICE: without it this window classified as
-  partial_stage, and a --retry-torn redo in incremental mode would
-  dedup against a generation reflecting the UNPUBLISHED kept set,
-  silently dropping batch docs absent from the published archive).
+  start (without it this window would classify as partial_stage,
+  and a --retry-torn redo in incremental mode would dedup against a
+  generation reflecting the UNPUBLISHED kept set, silently dropping
+  batch docs absent from the published archive).
   Classified ``index_ahead``: with a committed prior run the retry
   REFUSES until ``repair_index=True`` rebuilds over the standing
   archive (superseding the orphaned generation); on a fresh root the
@@ -69,17 +68,18 @@ Single writer per root: ENFORCED when the opt-in writer-lock layer is
 armed (similarity.enable_index_writer_locking / the CLI's
 --writer-lock-ttl) — :func:`curate_run_root` and :func:`vacuum_runs`
 then hold ``{root}/_writer.lock`` for the whole stage-to-publish span
-(r15 verdict #3: two concurrent curate runs compute the SAME next
+(two concurrent curate runs compute the SAME next
 run_id, so interleaved staging into one r{N:06d} dir must be a loud
 IndexWriterLockError refusal, with the same TTL-steal escape hatch as
 the index locks). Unlocked deployments keep the scheduling contract:
 one curate job per root, the compact_dedup_index posture. The index
 legs additionally hold their own ``{root}/index/_writer.lock``.
 
-Retention (r15 verdict #2): published run dirs before the standing
+Retention: published run dirs before the standing
 lineage (everything preceding the latest full run) are unreferenced
-by readers — :func:`standing_archive` never opens them — but were
-kept forever, O(runs × corpus) storage. :func:`vacuum_runs` deletes
+by readers — :func:`standing_archive` never opens them — and would
+otherwise be kept forever, O(runs × corpus) storage.
+:func:`vacuum_runs` deletes
 superseded run dirs keeping the ``retain`` most recent of them (the
 index family's retention-not-locking posture: meta rows are never
 pruned — one skinny row per run — and a reader already planned on a
@@ -107,8 +107,8 @@ class TornRunError(RuntimeError):
 
 class RunUsageError(ValueError):
     """A mode/flag combination curate_run_root refuses BEFORE staging
-    anything (r15 review: the intent marker must never be written on
-    a pure usage error, or a typo'd flag escalates into a torn-run
+    anything (the intent marker must never be written on a pure usage
+    error, or a typo'd flag escalates into a torn-run
     recovery intervention). The CLI maps this to exit 2; every other
     exception propagates loudly with its traceback."""
 
@@ -139,7 +139,7 @@ def run_dir(root: str, run_id: int) -> str:
 
 def _index_version(spark: SparkSession, root: str) -> int:
     """The index's current COMMITTED generation version (0 when the
-    index doesn't exist yet or predates generations)."""
+    index doesn't exist yet)."""
     from ..queries.similarity import _gen_meta_row
 
     row = _gen_meta_row(spark, index_root(root))
@@ -149,8 +149,7 @@ def _index_version(spark: SparkSession, root: str) -> int:
 def _staged_index_version(spark: SparkSession, rdir: str) -> int | None:
     """The ``index_gen`` marker staged at run start — the index
     generation the attempt OBSERVED before doing any index work — or
-    None for a dir staged without one (pre-r16, or torn before the
-    marker write)."""
+    None for a dir torn before the marker write."""
     path = f"{rdir}/index_gen"
     if not _marked(spark, path):
         return None
@@ -193,20 +192,9 @@ def standing_archive(spark: SparkSession, root: str) -> DataFrame | None:
     """The standing curated corpus a new incremental batch must honor:
     the last FULL run's kept set unioned with every incremental kept
     set published since (a full run rebuilds the index over its own
-    kept set, resetting the lineage). This is exactly the frame
-    run_incremental's preconditions call ``archive`` — with a current
-    index the plan never scans it (the stored hash map answers the
-    exact stage; poison-UDF-pinned in tests/test_pipeline.py), so the
-    union stays an unexecuted lazy plan, but the semantics must hold
-    for the legacy fallback and the monotonic-id guard alike."""
-    return _standing_from_rows(spark, run_rows(spark, root))
-
-
-def _standing_from_rows(
-    spark: SparkSession, rows: list[dict]
-) -> DataFrame | None:
-    """standing_archive over already-loaded meta rows — one run_meta
-    read per invocation instead of one per consumer (r15 review)."""
+    kept set, resetting the lineage) — exactly the corpus the standing
+    index holds. ``--repair-index`` rebuilds the index over it."""
+    rows = run_rows(spark, root)
     if not rows:
         return None
     start = max(
@@ -247,7 +235,7 @@ def _torn_state(
     read-only status verb apply, so they can never disagree on what a
     torn dir needs.
 
-    ``index_ahead`` (r15 ADVICE): the index's committed generation
+    ``index_ahead``: the index's committed generation
     version moved past the ``index_gen`` marker this attempt staged
     at start — a full build's gen_meta append landed before the crash
     (the window between build_dedup_index's internal commit and the
@@ -273,7 +261,7 @@ def run_status(spark: SparkSession, root: str) -> dict:
     operator's first move after a crashed curate, side-effect-free."""
     rows = run_rows(spark, root)
     for r in rows:
-        # vacuum visibility (r15 verdict #2): meta rows outlive their
+        # vacuum visibility: meta rows outlive their
         # vacuumed dirs, so status distinguishes a run you can still
         # read from one retained only as lineage history
         r["present"] = _exists(spark, r["dir"])
@@ -336,7 +324,7 @@ def _resolve_torn(
         _commit(spark, root, run_id, rdir, intent)
         return True
     if state == "index_ahead" and prior is None:
-        # fresh root (r15 ADVICE): the orphaned generation reflects an
+        # fresh root: the orphaned generation reflects an
         # unpublished kept set, but with no committed runs the redo is
         # necessarily FULL — its build commits a fresh generation that
         # supersedes the orphan, so plain retry_torn is sufficient and
@@ -353,7 +341,7 @@ def _resolve_torn(
                     " redo-safe)."
                     if state == "partial_extend"
                     else "its full index build COMMITTED a generation"
-                    " for the unpublished kept set (r15 ADVICE) — an"
+                    " for the unpublished kept set — an"
                     " incremental redo would dedup against content"
                     " absent from the published archive and silently"
                     " drop batch docs."
@@ -414,24 +402,24 @@ def curate_run_root(
     """One crash-safe curate run against ``root``: full curation on a
     fresh root (or with ``full=True`` — the periodic re-freeze, which
     also REBUILDS the index), else the daily incremental batch against
-    the CUMULATIVE standing archive (:func:`standing_archive`) and the
-    standing index. All
-    outputs stage under a versioned run dir and publish at one meta
-    append; see the module docstring for the crash matrix. Returns
-    ``{"run_id", "dir", "mode"}`` of the PUBLISHED run — which is the
-    auto-published TORN run (plus ``"already_published": True``) when
-    the caller's batch turns out to be the one that run consumed (r15
-    ADVICE: the documented crash recovery is re-running the same
-    command, and re-curating the just-published batch would trip
-    run_incremental's monotonic-id guard AFTER staging, manufacturing
-    a second torn dir out of consistent state).
+    the standing index, which holds the CUMULATIVE standing archive
+    (:func:`standing_archive`). All outputs stage under a versioned
+    run dir and publish at one meta append; see the module docstring
+    for the crash matrix. Returns ``{"run_id", "dir", "mode"}`` of the
+    PUBLISHED run — which is the auto-published TORN run (plus
+    ``"already_published": True``) when the caller's batch turns out
+    to be the one that run consumed (the documented crash recovery is
+    re-running the same command, and re-curating the just-published
+    batch would trip run_incremental's monotonic-id guard AFTER
+    staging, manufacturing a second torn dir out of consistent
+    state).
 
     With the opt-in writer-lock layer armed
     (similarity.enable_index_writer_locking / --writer-lock-ttl) the
     whole stage-to-publish span holds ``{root}/_writer.lock``: a
     concurrent curate on the same root raises IndexWriterLockError
-    instead of interleaving into the same staged run dir (r15 verdict
-    #3); a crashed holder's lock is stolen past the TTL exactly like
+    instead of interleaving into the same staged run dir; a crashed
+    holder's lock is stolen past the TTL exactly like
     the index locks."""
     from ..queries.similarity import _maybe_writer_lock
 
@@ -468,7 +456,7 @@ def _curate_run_root_locked(
             prior = rows[-1]
             nxt += 1
             rdir = run_dir(root, nxt)
-            # consumed-batch detection (r15 ADVICE): the documented
+            # consumed-batch detection: the documented
             # recovery for a torn-but-complete run is re-running the
             # SAME command — whose batch the publish just consumed.
             # Re-curating it would trip the monotonic-id guard AFTER
@@ -507,10 +495,9 @@ def _curate_run_root_locked(
     mode = "full" if (prior is None or full) else "incremental"
     # EVERY usage refusal must precede the intent write — staging
     # anything on a flag mistake turns it into a torn-run recovery
-    # intervention (r15 review). That includes MODE-INDEPENDENT config
+    # intervention. That includes MODE-INDEPENDENT config
     # contradictions the curator itself would reject mid-pipeline
-    # (second review pass: the full-run drop-vs-scrub exclusivity
-    # raised AFTER the intent write, re-opening the exact hole).
+    # (the full-run drop-vs-scrub exclusivity).
     if (
         cfg.max_repeated_spans is not None
         and cfg.scrub_repeated_spans
@@ -538,7 +525,7 @@ def _curate_run_root_locked(
     spark.createDataFrame([(mode,)], _INTENT_SCHEMA).write.mode(
         "overwrite"
     ).parquet(f"{rdir}/intent")
-    # observe the index generation BEFORE any index work (r15 ADVICE):
+    # observe the index generation BEFORE any index work:
     # a later torn-state classification compares the index's committed
     # version against this to catch a full build whose gen_meta append
     # landed before the crash (see _torn_state's index_ahead)
@@ -548,9 +535,8 @@ def _curate_run_root_locked(
 
     curator = TrainingDataCurator(cfg)
     if mode == "incremental":
-        archive = _standing_from_rows(spark, rows)
         kept, dec = curator.run_incremental(
-            docs, archive, index_root(root), cleanup=cleanup
+            docs, index_root(root), cleanup=cleanup
         )
     else:
         kept, dec = curator.run(docs, benchmark, cleanup=cleanup)
@@ -584,8 +570,8 @@ def vacuum_runs(
     lineage (everything before the latest full run), which
     :func:`standing_archive` never opens — keeping the ``retain``
     most recent superseded dirs as a rollback/reader grace window
-    (r15 verdict #2: without this, every run's full kept parquet
-    lives forever — O(runs × corpus) dead weight). The index family's
+    (without this, every run's full kept parquet lives forever —
+    O(runs × corpus) dead weight). The index family's
     retention-not-locking posture, lifted to the run level
     (similarity.vacuum_index_generations): meta rows are never pruned
     (one skinny row per run; :func:`run_status` marks a vacuumed

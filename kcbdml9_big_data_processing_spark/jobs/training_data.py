@@ -312,7 +312,7 @@ class TrainingDataCurator:
         scratch store behind queries/similarity.semantic_dedup_clusters)
         passes ``materialize=False`` to skip the persist barrier too.
 
-        ``prepared_pairs`` (r17) lets such a caller hand in the
+        ``prepared_pairs`` lets such a caller hand in the
         (doc_a, doc_b) pair plan it prepared once per process
         (registry._prepared_plan) instead of re-constructing +
         re-analyzing the band-join/cosine tree per call — valid only
@@ -503,7 +503,6 @@ class TrainingDataCurator:
     def run_incremental(
         self,
         batch: DataFrame,
-        archive: DataFrame,
         dedup_index_path: str,
         cleanup: list[DataFrame] | None = None,
     ) -> tuple[DataFrame, DataFrame]:
@@ -514,12 +513,11 @@ class TrainingDataCurator:
 
         Preconditions (the production contract):
 
-        - ``archive`` is the KEPT output of a previous :meth:`run`
-          (pairwise dup-free — run()'s own pinned invariant), carrying
-          (doc_id, text);
         - the near-dup index at ``dedup_index_path`` was built
-          (queries.dedup.build_dedup_index) over exactly that archive
-          (extend it with each batch's kept docs afterwards);
+          (queries.dedup.build_dedup_index) over exactly the archive:
+          the KEPT output of a previous :meth:`run` (pairwise
+          dup-free — run()'s own pinned invariant), extended with each
+          later batch's kept docs;
         - ids are monotonic: every archive doc_id precedes every
           batch doc_id (the natural ingest order).
 
@@ -538,23 +536,16 @@ class TrainingDataCurator:
         shuffles 32-byte hashes (batch grouped within itself, then a
         hash join against the archive's STORED hash->canonical map —
         the ``hashes`` artifact the index build/extend maintains, so
-        archive text is NEVER scanned here; r10 verdict #1 closed);
-        near-dup reads the persisted postings pruned to the batch's
-        shingle vocabulary (the measured-flat dedup_vs_index series)
-        and the CC loop runs over batch-touching pairs only. The
-        ``archive`` frame itself is only touched on the legacy
-        fallback below — with a current index this path's plan
-        contains no scan of it at all (pinned in
+        archive text is NEVER scanned here; an index without it
+        raises, naming the rebuild); near-dup reads the persisted
+        postings pruned to the batch's shingle vocabulary (the
+        measured-flat dedup_vs_index series) and the CC loop runs over
+        batch-touching pairs only (pinned in
         tests/test_pipeline.py::test_run_incremental_never_scans_archive).
-
-        Legacy indexes (built before the ``hashes`` artifact) fall
-        back to deriving the map from ``archive``'s text — correct but
-        O(archive) per batch (flagged with a RuntimeWarning so the
-        degradation is observable); rebuild the index to get the
-        stored map. On the stored-map path the monotonic-id guard
-        reads the ``hashes_max`` sidecar first — O(1) when the bound
-        already precedes the batch, falling back to the precise
-        anti-join scan only on a possible violation or retry.
+        The monotonic-id guard reads the ``hashes_max`` sidecar first —
+        O(1) when the bound already precedes the batch, falling back
+        to the precise anti-join scan only on a possible violation or
+        retry.
 
         Span/rarity policies are corpus-statistics stages — configure
         them on the periodic full run; this path raises if they are
@@ -603,11 +594,11 @@ class TrainingDataCurator:
             )
         null_canon = F.lit(None).cast("long")
         spark = batch.sparkSession
-        # pin ONE index generation for the whole run (r11 review):
-        # the exact stage (stored hash map) and the near stage
-        # (postings search) must read the SAME committed generation —
-        # resolved fresh here (uncached, the writer posture), then
-        # identity-resolved by the index readers below. The caller's
+        # pin ONE index generation for the whole run: the exact stage
+        # (stored hash map) and the near stage (postings search) must
+        # read the SAME committed generation — resolved fresh here
+        # (uncached, the writer posture), then identity-resolved by
+        # the index readers below. The caller's
         # post-decision extend resolves fresh too; a rebuild committing
         # BETWEEN this run and that extend is two concurrent writers —
         # outside the single-writer-per-root contract.
@@ -626,128 +617,76 @@ class TrainingDataCurator:
             F.min("doc_id").alias("batch_canonical")
         )
 
-        def _assert_monotonic(arch_max, batch_min) -> None:
-            if (
-                arch_max is not None
-                and batch_min is not None
-                and arch_max >= batch_min
-            ):
-                raise ValueError(
-                    "monotonic-id precondition violated: archive max"
-                    f" doc_id {arch_max} >= batch min doc_id"
-                    f" {batch_min}; run_incremental's full-run"
-                    " equivalence requires every archive id to"
-                    " precede every batch id"
-                )
-
         stored = dedup_index_hashes(spark, dedup_index_path)
-        if stored is not None:
-            # prune the stored map to the batch's hashes BEFORE any
-            # aggregation: the map is scanned (embarrassingly
-            # parallel, ~40 bytes/doc) but never shuffled — the
-            # broadcast semi-join keeps per-batch shuffle work at
-            # batch scale, and the survivor set is small enough that
-            # the later left join broadcasts it. At extreme batch
-            # sizes the broadcast of batch hashes is the bound
-            # (40 B/doc -> ~400 MB at 10M docs/day); past that, lay
-            # the hashes table out bucketed by content_hash
-            # (sinks/bucketed.py) so the semi-join co-locates instead.
-            arch_canon = (
-                stored.join(
-                    F.broadcast(hashed.select("content_hash")),
+        # prune the stored map to the batch's hashes BEFORE any
+        # aggregation: the map is scanned (embarrassingly parallel,
+        # ~40 bytes/doc) but never shuffled — the broadcast semi-join
+        # keeps per-batch shuffle work at batch scale, and the
+        # survivor set is small enough that the later left join
+        # broadcasts it. At extreme batch sizes the broadcast of batch
+        # hashes is the bound (40 B/doc -> ~400 MB at 10M docs/day);
+        # past that, lay the hashes table out bucketed by content_hash
+        # (sinks/bucketed.py) so the semi-join co-locates instead.
+        arch_canon = (
+            stored.join(
+                F.broadcast(hashed.select("content_hash")),
+                "content_hash",
+                "left_semi",
+            )
+            .groupBy("content_hash")
+            .agg(F.min("canonical_id").alias("archive_canonical"))
+        )
+        if cleanup is not None:
+            # cleanup materializes anyway — cheaply assert the
+            # load-bearing monotonic-id precondition. Fast path: the
+            # index's hashes_max sidecar is an O(1) upper bound on
+            # every id in the stored map — if it already precedes the
+            # batch, the guard holds with no scan of the map at all.
+            batch_min = batch.agg(F.min("doc_id").alias("m")).first()["m"]
+            sidecar_max = dedup_index_hashes_max(spark, dedup_index_path)
+            if (
+                sidecar_max is None
+                or batch_min is None
+                or sidecar_max >= batch_min
+            ):
+                # precise check: a sidecar at/past batch_min is a
+                # genuine violation OR a crashed run's own appends (a
+                # retry) OR a crash-overstated sidecar — only the map
+                # itself can tell them apart. The batch's OWN (hash,
+                # min-id) pairs are anti-joined out first: a crashed
+                # run that already extended the index appends exactly
+                # those pairs, and a retry must not read its own
+                # appends as a violating archive. Broadcast anti-join
+                # — the map is scanned in parallel, never shuffled.
+                own = batch_canon.select(
                     "content_hash",
-                    "left_semi",
+                    F.col("batch_canonical").alias("canonical_id"),
                 )
-                .groupBy("content_hash")
-                .agg(F.min("canonical_id").alias("archive_canonical"))
-            )
-            if cleanup is not None:
-                # cleanup materializes anyway — cheaply assert the
-                # load-bearing monotonic-id precondition. Fast path
-                # (ADVICE r11): the index's hashes_max sidecar is an
-                # O(1) upper bound on every id in the stored map — if
-                # it already precedes the batch, the guard holds with
-                # no scan of the map at all (the common case, and the
-                # last archive-proportional per-batch term gone).
-                batch_min = batch.agg(F.min("doc_id").alias("m")).first()["m"]
-                sidecar_max = dedup_index_hashes_max(spark, dedup_index_path)
+                arch_max = (
+                    stored.join(
+                        F.broadcast(own),
+                        ["content_hash", "canonical_id"],
+                        "left_anti",
+                    )
+                    .agg(F.max("canonical_id").alias("m"))
+                    .first()["m"]
+                )
                 if (
-                    sidecar_max is None
-                    or batch_min is None
-                    or sidecar_max >= batch_min
+                    arch_max is not None
+                    and batch_min is not None
+                    and arch_max >= batch_min
                 ):
-                    # precise check: a sidecar at/past batch_min is a
-                    # genuine violation OR a crashed run's own appends
-                    # (a retry) OR a crash-overstated sidecar — only
-                    # the map itself can tell them apart. The batch's
-                    # OWN (hash, min-id) pairs are anti-joined out
-                    # first: a crashed run that already extended the
-                    # index appends exactly those pairs, and a retry
-                    # must not read its own appends as a violating
-                    # archive (r11 review). Broadcast anti-join — the
-                    # map is scanned in parallel, never shuffled.
-                    own = batch_canon.select(
-                        "content_hash",
-                        F.col("batch_canonical").alias("canonical_id"),
+                    raise ValueError(
+                        "monotonic-id precondition violated: archive"
+                        f" max doc_id {arch_max} >= batch min doc_id"
+                        f" {batch_min}; run_incremental's full-run"
+                        " equivalence requires every archive id to"
+                        " precede every batch id"
                     )
-                    arch_max = (
-                        stored.join(
-                            F.broadcast(own),
-                            ["content_hash", "canonical_id"],
-                            "left_anti",
-                        )
-                        .agg(F.max("canonical_id").alias("m"))
-                        .first()["m"]
-                    )
-                    _assert_monotonic(arch_max, batch_min)
-        else:
-            # make the O(archive) degradation observable in production
-            # (r11 verdict #2): correct but archive-proportional per
-            # batch — a docstring alone hides it from an operator
-            # watching a daily job slow down as the archive grows
-            import warnings
-
-            warnings.warn(
-                f"dedup index at {dedup_index_path} has no 'hashes'"
-                " artifact — run_incremental is deriving the exact-dedup"
-                " map from archive text (O(archive) per batch); rebuild"
-                " the index with build_dedup_index to restore the"
-                " O(batch) stored-map path",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            # the per-hash MAX raw id rides the same aggregation as the
-            # canonical min, so the guard below polices the true raw
-            # maximum (a dup-carrying archive — itself a precondition
-            # breach — can hide a violating id behind a small
-            # canonical; max-of-min would miss it, r11 review) without
-            # a second archive pass.
-            arch_canon = (
-                archive.select(
-                    content_hash_expr().alias("content_hash"),
-                    F.col("doc_id").alias("arch_id"),
-                )
-                .groupBy("content_hash")
-                .agg(
-                    F.min("arch_id").alias("archive_canonical"),
-                    F.max("arch_id").alias("_arch_max_id"),
-                )
-            )
-            if cleanup is not None:
-                # persisted so the guard's max and the exact-stage
-                # join share ONE archive scan
-                arch_canon = arch_canon.persist()
-                cleanup.append(arch_canon)
-                arch_max = arch_canon.agg(
-                    F.max("_arch_max_id").alias("m")
-                ).first()["m"]
-                batch_min = batch.agg(F.min("doc_id").alias("m")).first()["m"]
-                _assert_monotonic(arch_max, batch_min)
-            arch_canon = arch_canon.drop("_arch_max_id")
         tagged = hashed.join(batch_canon, "content_hash").join(
             arch_canon, "content_hash", "left"
         )
-        # self-append defense (r11 review): a stored-map entry at or
+        # self-append defense: a stored-map entry at or
         # after this batch's own within-batch canonical can only be
         # this batch's append from an out-of-order run that extended
         # the index before committing decisions — under the monotonic
@@ -759,7 +698,7 @@ class TrainingDataCurator:
         # not safe against re-curating an already-extended batch (see
         # extend_dedup_index's orchestration-order docstring — commit
         # decisions FIRST). Pure expression — nothing extra scans or
-        # shuffles. Known residual (r11 review, accepted): a caller
+        # shuffles. Known residual (accepted): a caller
         # that redelivers an ARCHIVED doc with its ORIGINAL archive id
         # as "batch" input is indistinguishable from a legit retry at
         # this layer — the doc re-keeps instead of raising. The guard

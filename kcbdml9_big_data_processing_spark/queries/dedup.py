@@ -278,19 +278,18 @@ def _exact_jaccard_pairs(
     detection more precise, and the worst-case join output per shingle
     is C(cap,2) regardless of corpus size.
 
-    r7 formulation (medians at sf0.1 with
-    ``prepped`` pre-persisted): 1.5-1.8 s, vs 3.6 s for the r6 shape
-    (separate postings cache + post-agg sizes joins), 2.9 s for a
-    join-free grouped-pair generation, 3.7 s for the anti-join twin of
-    this shape. Two choices carry the win:
+    This formulation (medians at sf0.1 with ``prepped`` pre-persisted):
+    1.5-1.8 s, vs 3.6 s for a separate postings cache + post-agg sizes
+    joins, 2.9 s for a join-free grouped-pair generation, 3.7 s for the
+    anti-join twin of this shape. Two choices carry the win:
 
     - **Sizes ride the postings.** The stop set is folded into ONE
       single-row array (``collect_list`` of the over-cap fingerprints)
       broadcast against ``prepped``; ``array_except`` removes the stop
       shingles so the capped per-doc size is just ``size(sh)`` on the
       same row — no separate sizes relation, no cache, and no joins
-      after the count aggregation (the r6 shape joined the 4.4M-group
-      count output against sizes twice).
+      after the count aggregation (the alternative joins the
+      4.4M-group count output against sizes twice).
     - **Size filter in the join.** J(A,B) >= t forces
       t <= min(|A|,|B|)/max(|A|,|B|) (inter <= min, union >= max), so
       size-incompatible pairs are pruned INSIDE the self-join, before
@@ -308,10 +307,10 @@ def _exact_jaccard_pairs(
     _DF_CAP postings), i.e. ~8 MB per billion postings; fine far past
     100 TB under any Zipfian vocabulary. For an adversarial corpus
     where that bound is the problem, ``broadcast_stop=False`` keeps
-    the r6 anti-join + recounted-sizes shape (nothing ever
-    driver-sized, ~2x slower at sf0.1).
+    an anti-join + recounted-sizes shape (nothing ever driver-sized,
+    ~2x slower at sf0.1).
 
-    ``cleanup`` is accepted for caller compatibility; the r7 shape
+    ``cleanup`` is accepted for caller compatibility; this shape
     holds no internal cache, so nothing is appended."""
     threshold = _JACCARD_MIN if jaccard_min is None else jaccard_min
     stop = (
@@ -338,14 +337,14 @@ def _exact_jaccard_pairs(
     pa, pb = post.alias("pa"), post.alias("pb")
     # group on the two id columns directly; na/nb ride as first()
     # aggregates (functionally determined by the key), map-side-
-    # combined like the count itself. Through r12 the pair was packed
-    # into one long via shiftleft(doc_a,32)+doc_b — valid only for
-    # ids < 2^31, which the testdata satisfies but INGESTED corpora do
-    # not (sources/corpus keys doc_id on 48-bit h48): the truncated
-    # unpack emitted phantom 32-bit ids into the curator's decision
-    # record and lost real near-dup pairs (caught by the r13 e2e
-    # test). Two-column grouping costs the same shuffle (measured
-    # within noise at sf0.1) and is correct for any long id.
+    # combined like the count itself. Packing the pair into one long
+    # via shiftleft(doc_a,32)+doc_b is valid only for ids < 2^31,
+    # which the testdata satisfies but INGESTED corpora do not
+    # (sources/corpus keys doc_id on 48-bit h48): the truncated unpack
+    # would emit phantom 32-bit ids into the curator's decision record
+    # and lose real near-dup pairs. Two-column grouping costs the same
+    # shuffle (measured within noise at sf0.1) and is correct for any
+    # long id.
     inter = (
         pa.join(
             pb,
@@ -383,11 +382,11 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     equality *proves* the formulation loses no pair.
 
     Perf: the cost IS the postings self-join's co-occurrence rows ->
-    per-pair count; r7 promoted the cheapest measured formulation
+    per-pair count; this is the cheapest measured formulation
     (sizes riding the postings off a broadcast stop-array, size
     filter inside the join — see _exact_jaccard_pairs; pair-join
     medians 3.6 s -> 1.5-1.8 s at sf0.1).
-    Alternatives built and measured across r5-r7, all slower on THIS
+    Alternatives built and measured, all slower on THIS
     corpus: hash-order AllPairs/PPJoin prefix+positional+size
     filtering (815k candidates, ~10 s), df-ascending PPJoin (482k
     candidates, ~9 s — the synthetic corpus's shingle df is flat
@@ -422,15 +421,15 @@ def content_hash_expr(col: str = "text"):
 
 
 def _write_hashes(docs: DataFrame, path: str, mode: str) -> None:
-    """Write/append the (content_hash, canonical_id) exact-dedup map
-    for ``docs``. ~40 bytes per doc — the artifact that lets an
-    incremental run answer "has the archive seen this content?"
-    without ever re-scanning archive text (r10 verdict #1: the
-    O(archive)-per-batch rehash this replaces was the one true
-    scale-killer). Append-only, same crash model as bucket_meta: a
-    parquet append lands via the committer's rename, so a crashed
-    append is never visible. Readers aggregate min(canonical_id), so
-    a duplicate appended row can only re-assert the same canonical."""
+    """Write/append the (content_hash, canonical_id) exact-dedup map for
+    ``docs``. ~40 bytes per doc — the artifact that lets an incremental
+    run answer "has the archive seen this content?" without ever
+    re-scanning archive text (an O(archive) rehash per batch would be
+    the one true scale-killer). Append-only, same crash model as
+    bucket_meta: a parquet append lands via the committer's rename, so a
+    crashed append is never visible. Readers aggregate
+    min(canonical_id), so a duplicate appended row can only re-assert
+    the same canonical."""
     (
         docs.select(
             content_hash_expr().alias("content_hash"),
@@ -468,46 +467,29 @@ def _extend_hashes_max(new_docs: DataFrame, path: str) -> None:
     """Maintain the ``hashes_max`` sidecar on extend — one skinny row
     per write; readers take the max over all rows, giving
     run_incremental's monotonic-id guard an O(1) answer instead of a
-    full scan of the hashes map per batch (ADVICE r11: the guard's
-    max-aggregation was the last archive-proportional per-batch term).
+    full scan of the hashes map per batch.
 
     The sidecar is a conservative UPPER BOUND on every id in the map,
     never trusted to pass a violation: the guard only fast-paths when
     sidecar_max < batch_min; anything else (possible violation, a
     crashed run's self-append, a missing sidecar) falls back to the
-    precise anti-join scan of the map itself. Two invariants keep the
-    bound safe:
-
-    - WRITE ORDER: the sidecar lands BEFORE the hashes append, so a
-      crash between the two can only OVERSTATE the max — costing the
-      retry a precise scan, never masking a violation.
-    - BACKFILL, not seed (r12 review): on a pre-sidecar index (r11
-      build: ``hashes`` present, no ``hashes_max``) the first extend
-      writes max(stored-map max, batch max) — seeding from the batch
-      alone would understate a map holding larger ids (extend's
-      contract only requires DISJOINT batch ids, not monotonic ones)
-      and silently weaken the guard."""
-    spark = new_docs.sparkSession
-    batch_max_row = new_docs.agg(F.max("doc_id").alias("m")).first()
-    batch_max = batch_max_row["m"]
-    if _dir_has_parquet(spark, f"{path}/hashes_max"):
-        if batch_max is not None:
-            _write_hashes_max_row(spark, path, batch_max, "append")
-        return
-    map_max = _stored_map_max(spark, path)
-    bound = max(
-        (x for x in (map_max, batch_max) if x is not None), default=None
-    )
-    if bound is not None:
-        _write_hashes_max_row(spark, path, bound, "overwrite")
+    precise anti-join scan of the map itself. The sidecar lands BEFORE
+    the hashes append, so a crash between the two can only OVERSTATE
+    the max — costing the retry a precise scan, never masking a
+    violation. The build writes no sidecar for an empty map, so the
+    first extend of a zero-doc index seeds it from the batch alone,
+    which is exact."""
+    batch_max = new_docs.agg(F.max("doc_id").alias("m")).first()["m"]
+    if batch_max is not None:
+        _write_hashes_max_row(new_docs.sparkSession, path, batch_max, "append")
 
 
 def dedup_index_hashes_max(spark: SparkSession, path: str) -> int | None:
     """Upper bound on the ids recorded in the stored ``hashes`` map
     (max over the sidecar's per-write rows), or None when the sidecar
-    is absent (index built before it existed — the precise-scan
-    fallback applies). See :func:`_extend_hashes_max` for the crash
-    posture."""
+    is absent (an index built over zero docs and not yet extended —
+    the precise-scan fallback applies). See :func:`_extend_hashes_max`
+    for the crash posture."""
     from .similarity import _gen_current
 
     path = _gen_current(spark, path)
@@ -522,10 +504,11 @@ def dedup_index_hashes_max(spark: SparkSession, path: str) -> int | None:
     return None if row["m"] is None else int(row["m"])
 
 
-def dedup_index_hashes(spark: SparkSession, path: str) -> DataFrame | None:
+def dedup_index_hashes(spark: SparkSession, path: str) -> DataFrame:
     """The stored exact-dedup map of a persisted index as its RAW
-    appended rows (content_hash, canonical_id), or None for a legacy
-    index built before the ``hashes`` artifact existed.
+    appended rows (content_hash, canonical_id). Raises when the index
+    has no ``hashes`` artifact: the index is broken and must be
+    rebuilt.
 
     Raw on purpose: a reader must aggregate ``min(canonical_id)`` per
     hash (a crash-retried extend can re-append a row), but WHERE that
@@ -541,7 +524,12 @@ def dedup_index_hashes(spark: SparkSession, path: str) -> DataFrame | None:
 
     path = _gen_current(spark, path)
     if not _dir_has_parquet(spark, f"{path}/hashes"):
-        return None
+        raise FileNotFoundError(
+            f"dedup index at {path} has no 'hashes' exact-dedup map;"
+            " rebuild it with build_dedup_index over the standing"
+            " archive (a run root: curate --run-root ROOT"
+            " --repair-index)"
+        )
     return spark.read.schema(_HASHES_SCHEMA).parquet(f"{path}/hashes")
 
 
@@ -569,8 +557,8 @@ def build_dedup_index(docs: DataFrame, path: str) -> None:
     per-doc map instead of re-hashing archive text per batch
     (:func:`dedup_index_hashes`).
 
-    Crash-safe generations (r11, completing the r10 recipe for EVERY
-    index family): the build stages all three tables into a fresh
+    Crash-safe generations, as for every index family: the build
+    stages all three tables into a fresh
     ``{path}/g{N}`` dir and goes live only at the single gen_meta
     commit append — a periodic full re-freeze over a LIVE root is
     therefore safe (a crash anywhere before the commit leaves the
@@ -579,9 +567,8 @@ def build_dedup_index(docs: DataFrame, path: str) -> None:
     against its intact files (delete only via
     similarity.vacuum_index_generations, retention-not-locking).
     Every reader/extender resolves the root through the committed
-    generation first; pre-generation indexes (no gen_meta) resolve to
-    the root itself — fully backward compatible. Single writer per
-    root, as for the vector indexes (see similarity._GEN_CACHE)."""
+    generation first. Single writer per root, as for the vector
+    indexes (see similarity._GEN_CACHE)."""
     from .similarity import _gen_begin, _gen_commit
 
     spark = docs.sparkSession
@@ -593,7 +580,7 @@ def build_dedup_index(docs: DataFrame, path: str) -> None:
         _write_hashes(docs, gdir, "overwrite")
         # sidecar bound from the WRITTEN map (column-pruned 40 B/doc
         # read), not from a second full pass over the caller's text
-        # frame (r12 review); staging order is commit-gated anyway
+        # frame; staging order is commit-gated anyway
         map_max = _stored_map_max(spark, gdir)
         if map_max is not None:
             _write_hashes_max_row(spark, gdir, map_max, "overwrite")
@@ -644,12 +631,9 @@ def extend_dedup_index(new_docs: DataFrame, path: str) -> None:
 
     The ``hashes`` exact-dedup map extends in the same pass (plain
     append — accepted docs are dup-free against the index by the
-    caller contract, and readers take min anyway). A legacy index
-    without the artifact stays legacy (appending only the batch's
-    hashes would masquerade as a COMPLETE map and mis-answer "seen
-    before?" for every archived doc) until a rebuild creates it.
+    caller contract, and readers take min anyway).
 
-    Orchestration order (r11 review): COMMIT THE BATCH'S DECISIONS
+    Orchestration order: COMMIT THE BATCH'S DECISIONS
     FIRST, then extend — extend's input is the kept set, so this is
     the natural order, and it makes the common crash retryable: a
     crash before (or mid-) decision-commit leaves the index unchanged
@@ -670,12 +654,11 @@ def extend_dedup_index(new_docs: DataFrame, path: str) -> None:
 
     spark = new_docs.sparkSession
     path = _gen_current(spark, path, cached=False)
-    if _dir_has_parquet(spark, f"{path}/hashes"):
-        # sidecar BEFORE the map: a crash between the two appends can
-        # only overstate the recorded max (costing the retry a precise
-        # scan), never let the map outgrow it (see _extend_hashes_max)
-        _extend_hashes_max(new_docs, path)
-        _write_hashes(new_docs, path, "append")
+    # sidecar BEFORE the map: a crash between the two appends can
+    # only overstate the recorded max (costing the retry a precise
+    # scan), never let the map outgrow it (see _extend_hashes_max)
+    _extend_hashes_max(new_docs, path)
+    _write_hashes(new_docs, path, "append")
     stop_arr = (
         spark.read.schema(_STOP_SCHEMA)
         .parquet(f"{path}/stop")
@@ -714,14 +697,14 @@ def compact_dedup_index(
     the index. Size ``n_buckets`` so one bucket of postings fits an
     executor's working memory (sinks/bucketed.py sizing note).
 
-    Crash safety (r7 ADVICE): BOTH the base and the append tail are
+    Crash safety: BOTH the base and the append tail are
     versioned directories, and the SINGLE commit point is the
     append-only ``bucket_meta`` row (readers take the max-version
     row; a parquet append lands via the committer's rename, so a
-    half-written row is never visible). The old r6 shape truncated
-    the shared tail BEFORE flipping the meta — a crash between the
-    two silently dropped every posting appended since the last
-    compaction. Now a crash anywhere before the meta append leaves
+    half-written row is never visible). Truncating a shared tail
+    BEFORE flipping the meta would let a crash between the two
+    silently drop every posting appended since the last compaction;
+    here a crash anywhere before the meta append leaves
     the previous (base_vN, tail_vN) pair fully intact and current;
     a crash after it leaves the new pair current with the old one
     lingering until the next vacuum. Superseded versions are
@@ -730,7 +713,7 @@ def compact_dedup_index(
     finishes safely (delete happens >= one full compaction cycle
     later).
 
-    Under a generational root (r11) the compaction operates INSIDE
+    Under a generational root the compaction operates INSIDE
     the current committed generation dir — its versioned base+tail
     and bucket_meta are per-generation; a rebuild starts the next
     generation fresh and unbucketed."""
@@ -775,7 +758,7 @@ def compact_dedup_index(
     # lock; the decorated public vacuum would key a SECOND lock on the
     # resolved generation-dir string (the reentrancy cache is keyed by
     # the exact path argument) and leave it stale if compact is killed
-    # mid-vacuum (r12 review)
+    # mid-vacuum
     _vacuum_dedup_index_impl(spark, path, retain=retain)
 
 
@@ -910,7 +893,7 @@ def dedup_against_index(
     (it depends only on the doc ids) applied inside the join, so
     surviving co-occurrence counts stay complete.
 
-    THE capability gap this closes (r6 verdict #1): full-corpus
+    THE capability gap this closes: full-corpus
     near-dedup re-runs the whole pair join per ingest —
     O(corpus-pairs) daily. Here the corpus contributes only stored
     posting rows whose shingle occurs in the batch (a semi-join on the
@@ -930,7 +913,7 @@ def dedup_against_index(
     'incremental') hash-proves this equals the full-corpus all-pairs
     answer restricted to batch-touching pairs.
 
-    Join structure (r7): batch-vs-stored and batch-vs-batch run as
+    Join structure: batch-vs-stored and batch-vs-batch run as
     SEPARATE joins whose (packed-pair, na, nb) co-occurrence rows
     union before the count aggregation — corpus-vs-corpus probing
     never happens at all, and when the index is COMPACTED
@@ -996,8 +979,7 @@ def dedup_against_index(
 
 def _dir_has_parquet(spark: SparkSession, directory: str) -> bool:
     """Driver-side check for any parquet data file in ``directory``
-    (delegates to the shared fs helper — r15 review consolidated the
-    Hadoop FS dance into one module)."""
+    (delegates to the shared fs helper)."""
     from ..fs import dir_has_parquet
 
     return dir_has_parquet(spark, directory)
@@ -1006,7 +988,7 @@ def _dir_has_parquet(spark: SparkSession, directory: str) -> bool:
 def _copair_rows_self(post: DataFrame, threshold: float) -> DataFrame:
     """(doc_a, doc_b, na, nb) co-occurrence rows for the within-batch
     self-join (pa.doc_id < pb.doc_id ordering, size filter inside the
-    join). Ids ride as two columns — the r12 packed-long key truncated
+    join). Ids ride as two columns — a packed-long key would truncate
     48-bit ingested ids (see _exact_jaccard_pairs)."""
     pa, pb = post.alias("pa"), post.alias("pb")
     return pa.join(
@@ -1143,7 +1125,7 @@ def _incremental_scenario(
     headline=True,
 )
 def dedup_ngram_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The exact-Jaccard near-dup family, one registration (r7 fold —
+    """The exact-Jaccard near-dup family, one registration (the
     registry stays at the driver's 50-row window):
 
     - ``full``: :func:`dedup_ngram_jaccard` — the complete pair set
@@ -1158,7 +1140,7 @@ def dedup_ngram_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
       at batch cost, not corpus cost (scale probe series
       dedup_vs_index).
 
-    r8 (verdict #3): ONE shared prep — both variants consume the same
+    ONE shared prep — both variants consume the same
     shingled corpus. The scenario's batch is definitionally a slice
     of the full corpus modulo id remapping (odd originals; the
     perturbed copies of doc_id%4==0, which ARE the full corpus's
@@ -1168,17 +1150,15 @@ def dedup_ngram_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-hashing the documents scan a second time —
     dedup_against_index accepts the pre-shingled frame directly.
 
-    r10 (verdict #3, the ann_index_suite lesson transferred): the
-    shingled corpus is MATERIALIZED once per process to scratch
-    parquet (_stored_shingled_corpus — replacing the per-call
-    persist+count barrier, whose cache the timing harness clears
-    between runs anyway) and the whole suite plan is PREPARED once
-    per process (similarity._prepared_plan): parsing + Catalyst
-    analysis of the shingle/prefix/postings expression forest is
-    paid at first call, every later call executes the same immutable
-    plan — scan stored shingles → postings joins → count aggregate —
-    end to end. Measured (sf0.1 idle):
-    3.66 s → 1.81 s median."""
+    As in ann_index_suite, the shingled corpus is MATERIALIZED once per
+    process to scratch parquet (_stored_shingled_corpus — replacing the
+    per-call persist+count barrier, whose cache the timing harness
+    clears between runs anyway) and the whole suite plan is PREPARED
+    once per process (similarity._prepared_plan): parsing + Catalyst
+    analysis of the shingle/prefix/postings expression forest is paid at
+    first call, every later call executes the same immutable plan — scan
+    stored shingles → postings joins → count aggregate — end to end.
+    Measured (sf0.1 idle): 3.66 s → 1.81 s median."""
 
     def build() -> DataFrame:
         prepped = _stored_shingled_corpus(spark, sf_dir)
@@ -1256,7 +1236,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     already-thresholded (small) side, so it costs nothing — and the
     all-pairs oracle equality is exactly the completeness proof.
 
-    Why verification is NOT candidates-only here (measured r4): on a
+    Why verification is NOT candidates-only here (measured): on a
     natural Zipfian corpus, verifying just the candidate pairs by
     array intersection is the production win; on THIS synthetic
     corpus the vocabulary is so small (27k distinct shingles over
@@ -1267,7 +1247,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the robust default; both shapes stay linear, never
     all-pairs.
 
-    r10 (verdict #3): same steady-state shape as dedup_ngram_suite —
+    Same steady-state shape as dedup_ngram_suite —
     shingles read from the per-process scratch store
     (_stored_shingled_corpus), the MinHash band signatures
     materialized once per process next to them
@@ -1355,7 +1335,7 @@ def minhash_candidate_pairs(
 ) -> DataFrame:
     """The MinHash-LSH candidate generation on a persisted
     (doc_id, sh) frame, end to end (signatures + bucket self-join).
-    Factored out of the registered query (r7) so the scale probe can
+    Factored out of the registered query so the scale probe can
     measure the LSH path on an inflated corpus directly."""
     return _banded_self_join(_minhash_banded(prepped, cleanup=cleanup))
 
@@ -1380,8 +1360,8 @@ def _stored_minhash_bands(
 
         path = scratch_dir("minhash_bands_")
         cleanup: list[DataFrame] = []
-        # r17: multi-file write A/B'd and reverted — see
-        # _stored_shingled_corpus
+        # no spread_scan, as in _stored_shingled_corpus (a multi-file
+        # write A/B'd slower)
         _minhash_banded(prepped, cleanup=cleanup).write.mode(
             "overwrite"
         ).parquet(path)
@@ -1454,8 +1434,8 @@ def _stored_simhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
                     0L, (a, b) -> a + b))"""
         )
         path = scratch_dir("simhash_sigs_")
-        # r17: multi-file write A/B'd and reverted — see
-        # _stored_shingled_corpus
+        # no spread_scan, as in _stored_shingled_corpus (a multi-file
+        # write A/B'd slower)
         corpus.select("doc_id", sig.alias("simhash")).write.mode(
             "overwrite"
         ).parquet(path)
@@ -1522,7 +1502,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identically, which upgrades this from a rows-only check to a
     full value-hash oracle row.
 
-    r10 (the ngram/minhash recipe transferred): the signatures are
+    As for the ngram/minhash rows, the signatures are
     materialized once per process (_stored_simhash_sigs — replacing
     the per-call persist+count, whose cache the timing harness
     cleared between runs anyway, so every timed run re-paid the
@@ -1605,7 +1585,7 @@ _NGRAM_PAIRS_CTE = f"""
 #: job is handing the caller a self-contained frame — marked
 #: ``skippable=True``) become no-ops, so plan tests can inspect the
 #: real computation plan instead of a checkpoint-backed RDD scan
-#: (r12 review: the BNLJ guard was vacuous for exactly the suites
+#: (otherwise the BNLJ guard would be vacuous for exactly the suites
 #: with the most scalar crossJoins). ITERATION truncations (the CC
 #: loop's per-round checkpoints) are never skipped — they are
 #: load-bearing for the loop, not presentation.
@@ -1802,13 +1782,13 @@ def dedup_clusters(
     that scales (closure materializes O(cluster^2) rows, labels stay
     O(nodes)).
 
-    r10: the pair source reads the per-process stored shingled corpus
+    The pair source reads the per-process stored shingled corpus
     (_stored_shingled_corpus — the same standing index the ngram and
     minhash rows scan) instead of re-shingling + persisting per call;
     the postings self-join and the CC loop still execute fully every
     call.
 
-    r17: the pair pipeline is a pure static plan over that store (no
+    The pair pipeline is a pure static plan over that store (no
     per-call persist anywhere in its tree — the broadcast-stop shape
     holds no cache), so its construction + Catalyst analysis are
     prepared once per (app, sf_dir); the CC loop still builds its
@@ -1938,6 +1918,6 @@ def dedup_exact_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return full.unionAll(incr)
 
-    # r11: static union over immutable inputs — prepared once per
+    # static union over immutable inputs — prepared once per
     # process (exp_plan_vs_exec: 0.42 s construction vs 0.56 exec)
     return _prepared_plan(spark, "dedup_exact_suite", sf_dir, build)

@@ -73,8 +73,8 @@ def _cos_expr(dot: str, na: str, nb: str) -> str:
 # --- brute-force cosine top-k ---------------------------------------------
 
 
-#: registered inside knn_centroid_suite (r6 reshuffle freeing a slot
-#: for pq_ann_cosine); the query stays importable and fully computed
+#: registered inside knn_centroid_suite (freeing a registry slot for
+#: pq_ann_cosine); the query stays importable and fully computed
 _KNN_ORACLE = f"""
         WITH corpus AS (
             SELECT vec_id, embedding, {_dot_fixed_sql('embedding', 'embedding')} AS nf
@@ -103,12 +103,12 @@ def knn_topk_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     nested-loop join against the corpus scan — the corpus never
     shuffles or broadcasts; the only shuffle is the per-probe top-k
     window, which Spark bounds with WindowGroupLimit (partial top-k
-    before exchange). The broadcast hint is load-bearing (r12, found
-    by the BNLJ plan guard): without it Spark's size estimate picked
+    before exchange). The broadcast hint is load-bearing (found by the
+    BNLJ plan guard): without it Spark's size estimate picked
     BuildRight and broadcast the whole CORPUS — the strictly wrong
     side at any scale. Pinned by
     tests/test_plans.py::test_bnlj_build_sides_are_scalar's
-    knn_centroid_suite exception. Scope honestly (r12 ADVICE): the
+    knn_centroid_suite exception. Scope honestly: the
     hint pins the INTENDED build side at benchmark SFs; brute force
     itself is not a 100 TB operator — a 1%-of-corpus probe set is
     ~1 TB there, far past any broadcast budget. At that scale the
@@ -462,46 +462,45 @@ def _ensure_index(kind: str, emb: DataFrame, sf_dir: str, build_fn) -> str:
 #: trees cost per preparation).
 #: Keyed by applicationId so a new SparkSession never sees a stale
 #: plan bound to a stopped context; entries for OTHER applicationIds
-#: are evicted on lookup (r9 ADVICE — a long-lived process cycling
+#: are evicted on lookup (a long-lived process cycling
 #: SparkSessions must not accumulate plans pinned to dead contexts).
 #:
 #: Input-immutability assumption (same posture as _INDEX_PATHS, made
-#: explicit per r9 ADVICE): the analyzed plan freezes the parquet
+#: explicit): the analyzed plan freezes the parquet
 #: FILE LISTING of its source tables, so data under one sf_dir must
 #: not be rewritten within an application's lifetime — true for the
 #: read-only testdata here, and the documented contract for a search
 #: service (a new corpus/index version gets a new path, which is a
 #: new cache key; see the versioned dedup-index layout).
 #:
-#: The cache itself moved to registry.py in r11 (the registry applies
-#: it declaratively via register(prepare=True)); re-exported here
+#: The cache itself lives in registry.py (the registry applies it
+#: declaratively via register(prepare=True)); re-exported here
 #: because the index-store modules and the plan-audit tool import it
 #: from this module.
 from .registry import _PREPARED_PLANS, _prepared_plan  # noqa: E402,F401
 
 
-# --- crash-safe index generations (r10, verdict #5) -----------------------
+# --- crash-safe index generations ----------------------------------------
 #
-# build_ivf/pq/semantic_index previously wrote their tables with
-# mode("overwrite") directly under the index root — on a LIVE index a
-# rebuild that crashed mid-overwrite (Spark deletes the target dir
-# before writing) left a truncated index with no previous generation.
-# Same failure the ngram family's compaction solved in r8, same cure:
-# builds write a fresh VERSIONED generation dir (``{root}/g{N}``) and
-# the SINGLE commit point is a row appended to the ``gen_meta``
-# sidecar (readers take the max-version row; the parquet committer's
-# rename makes a half-written row invisible). A crash anywhere before
-# the commit leaves the previous generation — including its
-# post-build extends, which append INTO the committed generation —
-# fully live; a build retry rewrites the same staging dir. Extends
-# stay append-only within the current generation (each table append
-# is committer-atomic; a crash between the vecs and bands appends of
-# extend_semantic_index can orphan rows of the FIRST table, which is
-# why it appends vecs first — an unreferenced vec row is inert,
-# whereas a bands row without its vec would silently drop candidate
-# pairs; re-running a half-applied extend requires a rebuild, see the
-# extend docstring). Indexes written before r10 (no gen_meta) read as
-# generation 0 at the root — fully backward compatible.
+# Writing an index's tables with mode("overwrite") directly under the
+# root is unsafe on a LIVE index: a rebuild that crashed mid-overwrite
+# (Spark deletes the target dir before writing) would leave a truncated
+# index with no previous generation. So, as in the ngram family's
+# compaction, builds write a fresh VERSIONED generation dir
+# (``{root}/g{N}``) and the SINGLE commit point is a row appended to the
+# ``gen_meta`` sidecar (readers take the max-version row; the parquet
+# committer's rename makes a half-written row invisible). A crash
+# anywhere before the commit leaves the previous generation — including
+# its post-build extends, which append INTO the committed generation —
+# fully live; a build retry rewrites the same staging dir. Extends stay
+# append-only within the current generation (each table append is
+# committer-atomic; a crash between the vecs and bands appends of
+# extend_semantic_index can orphan rows of the FIRST table, which is why
+# it appends vecs first — an unreferenced vec row is inert, whereas a
+# bands row without its vec would silently drop candidate pairs;
+# re-running a half-applied extend requires a rebuild, see the extend
+# docstring). A root with no gen_meta yet resolves to itself (see
+# _gen_current).
 #
 # At 100 TB this is the standard object-store table-format recipe
 # (versioned data dirs + tiny committed metadata as the atomicity
@@ -517,7 +516,7 @@ _GEN_META_SCHEMA = "dir string, version int"
 #: build — the same retention-not-locking posture as
 #: vacuum_dedup_index.
 #:
-#: Writer contract (ADVICE r10): ONE writer per index root at a time.
+#: Writer contract: ONE writer per index root at a time.
 #: The generation layer gives crash-atomicity, not writer mutual
 #: exclusion — two concurrent builds would compute the same next
 #: version in _gen_begin, interleave writes into the same g{N}
@@ -534,14 +533,13 @@ _GEN_CACHE: dict[tuple[str, str], str] = {}
 
 def _gen_meta_row(spark: SparkSession, path: str):
     """Newest committed gen_meta row, or None when the sidecar does
-    not exist (legacy flat or not-yet-built root). Absence is decided
-    by a driver-side FS existence check, NOT by catching the read
-    error (ADVICE r10): a transient read failure now propagates
-    instead of misclassifying a generational index as legacy — which
-    _gen_current would then cache as the root path for the process
-    lifetime, quietly serving stale pre-migration tables. An existing
-    but empty sidecar (nothing ever committed) reads as None through
-    the explicit schema, which is the correct legacy answer."""
+    not exist (a not-yet-built root). Absence is decided by a
+    driver-side FS existence check, NOT by catching the read error: a
+    transient read failure propagates instead of misclassifying a
+    generational index as unbuilt — which _gen_current would then
+    cache as the root path for the process lifetime. An existing but
+    empty sidecar (nothing ever committed) reads as None through the
+    explicit schema."""
     from ..fs import hadoop_path
 
     meta_dir = f"{path}/gen_meta"
@@ -558,13 +556,15 @@ def _gen_meta_row(spark: SparkSession, path: str):
 
 def _gen_current(spark: SparkSession, path: str, cached: bool = True) -> str:
     """The current committed generation dir of an index root —
-    ``{path}/g{N}`` for the max committed N, or ``path`` itself for a
-    legacy flat (pre-r10) or not-yet-built index.
+    ``{path}/g{N}`` for the max committed N, or ``path`` itself when
+    ``path`` has no gen_meta: a not-yet-built root, or a ``g{N}`` dir
+    a caller already resolved (run_incremental pins one generation and
+    the index readers re-resolve it to itself).
 
     ``cached=False`` re-reads gen_meta — for WRITERS (extend, compact,
     vacuum): a long-lived worker holding the process cache must not
     keep appending into a generation another process's rebuild has
-    superseded (r11 review — the appends would land in a dir the next
+    superseded (the appends would land in a dir the next
     generation-vacuum deletes). Readers keep the cache: serving the
     generation they planned against until their next resolution is
     exactly the retention posture vacuum assumes."""
@@ -598,7 +598,7 @@ def _gen_commit(spark: SparkSession, path: str, gdir: str, version: int) -> None
     _GEN_CACHE[(spark.sparkContext.applicationId, path)] = gdir
 
 
-# --- opt-in writer mutual exclusion (r11 verdict #4) -----------------------
+# --- opt-in writer mutual exclusion ----------------------------------------
 
 
 class IndexWriterLockError(RuntimeError):
@@ -613,27 +613,26 @@ class IndexWriterLockError(RuntimeError):
 #: not per-call policy.
 _WRITER_LOCK_TTL: float | None = None
 
-#: locks held by THIS process, keyed by (applicationId, root,
-#: thread id) — nested writer calls on the same root in the SAME
-#: thread re-enter instead of self-deadlocking (only the outermost
-#: frame, the one that inserted the key, releases), while a SECOND
-#: thread of the same application misses the key, hits the fresh lock
-#: file, and raises like any foreign contender (r12 ADVICE: the old
-#: (app, root) keying let two same-process threads both enter as
-#: "reentrant" and the first to exit delete the lock under the
-#: other). Value is the uuid token written INTO the lock file at
-#: acquire; release compares file CONTENT, not mtime, so a TTL steal
-#: followed by a re-acquire inside one filesystem mtime tick (HDFS:
-#: 1 s granularity) can never trick the original holder's release
-#: into deleting the new holder's lock (r12 verdict #2).
+#: locks held by THIS process, keyed by (applicationId, root, thread id)
+#: — nested writer calls on the same root in the SAME thread re-enter
+#: instead of self-deadlocking (only the outermost frame, the one that
+#: inserted the key, releases), while a SECOND thread of the same
+#: application misses the key, hits the fresh lock file, and raises like
+#: any foreign contender ((app, root) keying would let two same-process
+#: threads both enter as "reentrant" and the first to exit delete the
+#: lock under the other). Value is the uuid token written INTO the lock
+#: file at acquire; release compares file CONTENT, not mtime, so a TTL
+#: steal followed by a re-acquire inside one filesystem mtime tick
+#: (HDFS: 1 s granularity) can never trick the original holder's release
+#: into deleting the new holder's lock.
 _HELD_LOCKS: dict[tuple[str, str, int], str] = {}
 
 #: filesystem schemes whose create-if-absent is NOT atomic — object
 #: stores where createNewFile degrades to read-then-write, so the
-#: "enforced" mutual exclusion silently becomes advisory (r12
-#: ADVICE). Warn once per scheme instead of refusing: advisory
-#: locking still narrows the interleaving window and the documented
-#: single-writer contract stands either way.
+#: "enforced" mutual exclusion silently becomes advisory. Warn once per
+#: scheme instead of refusing: advisory locking still narrows the
+#: interleaving window and the documented single-writer contract stands
+#: either way.
 _NON_ATOMIC_CREATE_SCHEMES = frozenset(
     {"s3", "s3a", "s3n", "gs", "gcs", "wasb", "wasbs", "abfs", "abfss", "oss", "cos", "swift"}
 )
@@ -653,7 +652,7 @@ def enable_index_writer_locking(ttl_sec: float = 3600.0) -> None:
     (exactly one contender wins), and :func:`force_unlock_index` is
     the manual override. ``ttl_sec`` must be positive: 0 or negative
     would make EVERY held lock instantly stale, turning enforcement
-    into steal-anything — no mutual exclusion at all (r12 review).
+    into steal-anything — no mutual exclusion at all.
 
     Holder identity is a uuid written INTO the lock file; release
     deletes only a content-matching lock, so a steal + re-acquire
@@ -684,12 +683,11 @@ def disable_index_writer_locking() -> None:
 def scoped_writer_lock_ttl(ttl_sec: float | None):
     """Invocation-scoped enablement: snapshot the process-global
     toggle, enable for the block, RESTORE the host's prior setting on
-    exit — success or failure (r12 review: an unconditional disable
-    clobbered a notebook's own enablement). ``None`` is a no-op, so
+    exit — success or failure (an unconditional disable would clobber
+    a notebook's own enablement). ``None`` is a no-op, so
     CLI verbs can wrap their whole body unconditionally. One shared
     definition because two hand-maintained copies of this
-    capture/enable/restore dance had already diverged once (r13
-    review)."""
+    capture/enable/restore dance had already diverged once."""
     if ttl_sec is None:
         yield
         return
@@ -747,7 +745,8 @@ def _write_lock_token(fs, p, token: str) -> None:
 @contextmanager
 def _maybe_writer_lock(spark: SparkSession, root: str):
     """Hold the writer lock for the duration of a write when locking
-    is enabled; no-op (the r11 documented-contract posture) when not.
+    is enabled; no-op (the documented single-writer contract) when
+    not.
     Reentrant per (applicationId, root, thread): a writer composed of
     writers can't self-deadlock, while a second THREAD of the same
     application contends like a foreign process (fresh lock file →
@@ -794,8 +793,8 @@ def _maybe_writer_lock(spark: SparkSession, root: str):
                 " ttl, or force_unlock_index() if the holder crashed"
             )
         if st is not None:
-            # steal ATOMICALLY via rename to a unique tombstone (r12
-            # review: a delete+create steal let two concurrent
+            # steal ATOMICALLY via rename to a unique tombstone (a
+            # delete+create steal would let two concurrent
             # stealers both acquire — stealer B's delete removed
             # stealer A's FRESH lock). rename succeeds for exactly one
             # stealer; the loser raises instead of entering.
@@ -844,17 +843,9 @@ def locked_writer(fn):
     return wrapper
 
 
-#: root-level artifact dirs a pre-generation (legacy flat) index may
-#: carry, across every family — what ``drop_legacy_root`` reclaims.
-_LEGACY_ARTIFACT_RE = (
-    r"hashes|hashes_max|stop|postings|postings_(?:bucketed|tail)_v\d+"
-    r"|bucket_meta|centroids|cells|book|codes|vecs|bands|meta|cents"
-)
-
-
 @locked_writer
 def vacuum_index_generations(
-    spark: SparkSession, path: str, retain: int = 2, drop_legacy_root: bool = False
+    spark: SparkSession, path: str, retain: int = 2
 ) -> None:
     """Delete superseded index generations, keeping the ``retain``
     most recent (current included) — the generational sibling of
@@ -863,27 +854,13 @@ def vacuum_index_generations(
     planned against generation N survives the rebuild that commits
     N+1, and N's dir is deleted only once N+retain exists. Meta rows
     are never pruned (one skinny row per rebuild; the max-version
-    read ignores stale ones).
+    read ignores stale ones). Only ``g{N}`` dirs are ever deleted.
 
-    r11: deleting a generation also drops the ngram family's
+    Deleting a generation also drops the ngram family's
     per-generation bucketed catalog table (compact_dedup_index
     registers one per generation dir — without the drop, a persistent
     metastore leaks a stale table pointing at a deleted location per
-    rebuild+compact cycle).
-
-    A legacy flat layout at the root is left untouched by default —
-    after the first generational rebuild over a pre-r11 root those
-    files are superseded but nothing references them, and at corpus
-    scale they are the largest artifact on disk. Pass
-    ``drop_legacy_root=True`` to reclaim them (deletes the known
-    artifact dirs listed in _LEGACY_ARTIFACT_RE and drops the legacy
-    root's bucketed table; only acts when a committed generation
-    exists, so a pure legacy index can never delete itself). Unlike
-    g{N} dirs, the legacy root gets NO automatic retention window —
-    the operator supplies it: run the flag one maintenance cycle
-    AFTER the first generational rebuild, once every long-lived
-    process has re-resolved (a process still cached on the root would
-    lose its files mid-plan, r11 review)."""
+    rebuild+compact cycle)."""
     row = _gen_meta_row(spark, path)
     if row is None:
         return
@@ -898,40 +875,32 @@ def vacuum_index_generations(
     for status in fs.listStatus(root_p):
         name = status.getPath().getName()
         m = re.fullmatch(r"g(\d+)", name)
-        doomed = m is not None and int(m.group(1)) < cutoff
-        if drop_legacy_root and re.fullmatch(_LEGACY_ARTIFACT_RE, name):
-            doomed = True
-        if doomed:
+        if m is not None and int(m.group(1)) < cutoff:
             # table names hash the PATH STRING compact registered —
             # which was built as f"{root}/g{N}" from the caller's own
             # root string. Reconstruct it the same way rather than
             # from the Hadoop URI (toUri().getPath() strips scheme and
-            # absolutizes, so it mismatches s3a:// or relative roots —
-            # r11 review).
+            # absolutizes, so it mismatches s3a:// or relative roots).
             tbl = _bucketed_table_name(f"{path}/{name}")
             spark.sql(f"DROP TABLE IF EXISTS {tbl}")
             fs.delete(status.getPath(), True)
-    if drop_legacy_root:
-        # the legacy root's own bucketed table (if it was compacted
-        # pre-generations) hashes the ROOT path
-        spark.sql(f"DROP TABLE IF EXISTS {_bucketed_table_name(path)}")
 
 
 def ivf_ann_cosine(
     spark: SparkSession, sf_dir: str, emb: DataFrame | None = None
 ) -> DataFrame:
-    """IVF ANN routed through the PERSISTED index (r7, per the r6
-    verdict): build_ivf_index materializes the quantizer centroids and
-    the full-corpus cell assignment as parquet tables once per
-    (process, corpus), and the registered query answers the standard
-    probe set from them via search_ivf_index — so the graded plan IS
-    the production plan: route probes against the (tiny, broadcast)
-    centroid table, gather only the ~nprobe/K of the corpus living in
-    the probed cells, exact fixed-point cosine re-rank. Results are
-    bit-identical to the from-scratch formulation
-    (:func:`ivf_ann_cosine_inline`, pinned in tests/test_llm_ops.py),
-    so the oracle hash equality is unchanged; what moves is the plan —
-    the train/assign passes no longer appear in the per-query DAG."""
+    """IVF ANN routed through the PERSISTED index: build_ivf_index
+    materializes the quantizer centroids and the full-corpus cell
+    assignment as parquet tables once per (process, corpus), and the
+    registered query answers the standard probe set from them via
+    search_ivf_index — so the graded plan IS the production plan: route
+    probes against the (tiny, broadcast) centroid table, gather only the
+    ~nprobe/K of the corpus living in the probed cells, exact
+    fixed-point cosine re-rank. Results are bit-identical to the
+    from-scratch formulation (:func:`ivf_ann_cosine_inline`, pinned in
+    tests/test_llm_ops.py), so the oracle hash equality is unchanged;
+    what moves is the plan — the train/assign passes no longer appear in
+    the per-query DAG."""
     if emb is None:
         emb = read_table(spark, sf_dir, "embeddings")
     path = _ensure_index("ivf", emb, sf_dir, build_ivf_index)
@@ -965,7 +934,7 @@ def ivf_ann_cosine_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _ivf_train(emb, ex)
     # one distance-pass DEFINITION serves both the index assignment
     # (argmin over all vectors) and probe routing (top-nprobe for the
-    # probe subset). Deliberately NOT persisted: measured r6 at sf0.1,
+    # probe subset). Deliberately NOT persisted: measured at sf0.1,
     # persisting d1 (and/or ex) made the query SLOWER (1.5-1.7 s ->
     # 2.1-2.8 s steady-state) — the materialization barrier + cache
     # write cost more than recomputing the cheap join+groupBy, and the
@@ -1391,13 +1360,13 @@ def build_semantic_index(
     construction — the 'frozen quantizer' concern of the IVF/postings
     indexes doesn't arise for the bands.
 
-    ``blocking`` (r7 verdict #1 — production granularity; default
-    ``label_ivf`` since r10 because its per-batch search cost is
+    ``blocking`` (production granularity; default ``label_ivf``
+    because its per-batch search cost is
     measured flat as the corpus grows — SCALE_PROBE.json
     semantic_vs_index exponent −0.01 vs 0.53 for ``label`` — so the
     naive caller gets the shape that survives 100 TB; ``label`` is
     the opt-in for corpora whose labels already partition finely.
-    r11, ADVICE: a default build over a corpus no larger than ONE
+    A default build over a corpus no larger than ONE
     target cell (count <= ``target_cell_pop``) resolves to ``label``
     — at that size cell blocking bounds nothing and only costs
     boundary-pair recall; the stored meta records the resolved
@@ -1434,10 +1403,10 @@ def build_semantic_index(
     corpus_n = None
     if blocking == "label_ivf" and n_cells is None:
         # ONE count serves both the small-corpus guard and the
-        # adaptive cell sizing below (r11 review: two counts was a
-        # redundant full-corpus pass per default build).
+        # adaptive cell sizing below (two counts would be a redundant
+        # full-corpus pass per default build).
         corpus_n = corpus.count()
-        # small-corpus recall guard (ADVICE r10): cell blocking exists
+        # small-corpus recall guard: cell blocking exists
         # to BOUND bucket population as the corpus grows; below one
         # target cell's population it bounds nothing and only loses
         # the near-dup pairs that straddle a cell boundary, while
@@ -1448,7 +1417,7 @@ def build_semantic_index(
         # (the caller pinned the quantizer, e.g. for an oracle twin).
         if corpus_n <= target_cell_pop:
             blocking = "label"
-    # crash-safe (r10): all four tables land in a fresh generation
+    # crash-safe: all four tables land in a fresh generation
     # dir; the index goes live only at the single gen_meta commit at
     # the end — see the generation-layer comment above _gen_current
     root, path = path, None
@@ -1516,7 +1485,7 @@ def extend_semantic_index(new_corpus: DataFrame, path: str) -> None:
     the STORED frozen quantizer (the same incremental trade as
     extend_ivf_index); append-only into the CURRENT generation,
     nothing rewritten. Caller contract: batch vec_ids are disjoint
-    from ids already stored. Crash note (r10): the two table appends
+    from ids already stored. Crash note: the two table appends
     are each committer-atomic but not jointly — vecs appends FIRST
     because an orphaned vec row is inert, while a bands row without
     its vec would silently drop candidate pairs; a crash between the
@@ -1633,11 +1602,11 @@ def semantic_dedup_against_index(
         )
         .select("vec_id", "label", "band", "bucket")
     )
-    # asymmetric candidate branches (r8, the dedup_against_index
-    # structure): batch x batch and batch x stored, unioned — the old
-    # symmetric self-join over batch ∪ stored generated every
+    # asymmetric candidate branches (the dedup_against_index
+    # structure): batch x batch and batch x stored, unioned — a
+    # symmetric self-join over batch ∪ stored generates every
     # stored x stored bucket match only to discard it through an
-    # is-new predicate, which dominated search cost as the corpus
+    # is-new predicate, which dominates search cost as the corpus
     # outgrew the batch (measured 1.95 s -> ~0.6 s candidate stage at
     # sf0.1); corpus-vs-corpus probing now never happens at all
     a, b = b_banded.alias("a"), b_banded.alias("b")
@@ -1720,8 +1689,8 @@ def _stored_near_dup_prepped(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         planes = _planes()
         path = scratch_dir("near_dup_prepped_")
-        # r17: multi-file write A/B'd and reverted — see
-        # dedup._stored_shingled_corpus (semantic_dedup_clusters read
+        # no spread_scan, as in dedup._stored_shingled_corpus: a
+        # multi-file write A/B'd slower (semantic_dedup_clusters read
         # 1.95 -> 2.75 s with a 32-file store)
         base.unionAll(perturbed).select(
             "vec_id",
@@ -1743,7 +1712,7 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical deterministic bands, so the oracle equality is exact,
     not statistical.
 
-    r10 (the ngram/minhash/simhash recipe): the prepped corpus —
+    As for the ngram/minhash/simhash rows, the prepped corpus —
     emb as doubles + norm + LSH signature — is materialized once per
     process (_stored_near_dup_prepped, replacing the per-call
     persist+count whose cache the harness cleared between timed runs)
@@ -1792,16 +1761,16 @@ def semantic_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair set. Paraphrase-collapse behavior is additionally pinned in
     tests/test_pipeline.py.
 
-    r10: the corpus is the same standing signature store
+    The corpus is the same standing signature store
     embedding_near_dup scans (_stored_near_dup_prepped — emb + norm +
     LSH signature, materialized once per process), so the per-call
     cost is the honest decision work: the band→join→cosine pair stage
     and the checkpointed CC loop, both executed fully every call.
 
-    r17: the pair plan — static over the durable store, no per-call
+    The pair plan — static over the durable store, no per-call
     persist in its tree (materialize=False) — is prepared once per
     (app, sf_dir), the same _prepared_plan posture the sibling
-    embedding_near_dup row has used since r10; the CC loop still
+    embedding_near_dup row uses; the CC loop still
     builds its per-round plans fresh and every call executes the full
     band join + cosine + loop."""
     from ..jobs.training_data import TrainingDataCurator
@@ -1932,7 +1901,7 @@ def nearest_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def knn_centroid_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-k + nearest-centroid assignment in one
-    registration (r6 reshuffle freeing a slot for pq_ann_cosine):
+    registration (freeing a registry slot for pq_ann_cosine):
     both constituents stay importable and fully computed; the tagged
     union aligns (id, ref, metric, rank) with ref as a string so the
     knn neighbor id and the centroid label share a column."""
@@ -1953,7 +1922,7 @@ def knn_centroid_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return knn.unionAll(nc)
 
-    # r11: static union over immutable inputs — prepared once per
+    # static union over immutable inputs — prepared once per
     # process (exp_plan_vs_exec: 0.37 s construction vs 0.68 exec)
     return _prepared_plan(spark, "knn_centroid_suite", sf_dir, build)
 
@@ -2062,19 +2031,18 @@ def _pq_oracle() -> str:
 def pq_ann_cosine(
     spark: SparkSession, sf_dir: str, emb: DataFrame | None = None
 ) -> DataFrame:
-    """PQ ANN routed through the PERSISTED index (r7, per the r6
-    verdict): build_pq_index materializes the per-subspace codebooks
-    and the one-byte-per-subspace code table as parquet once per
-    (process, corpus); the registered query answers the standard probe
-    set from them via search_pq_index — LUTs from the probes' exact
-    subvector distances against the STORED codebooks, ADC over the
-    stored codes (8 small ints per vector instead of 64 floats — the
-    memory-bandwidth compression that is PQ's point at 100 TB), exact
-    fixed-point cosine re-rank of the shortlist. Results are
-    bit-identical to the from-scratch formulation
-    (:func:`pq_ann_cosine_inline`, pinned in tests/test_llm_ops.py),
-    so the oracle hash equality is unchanged; the train/encode passes
-    no longer appear in the per-query DAG."""
+    """PQ ANN routed through the PERSISTED index: build_pq_index
+    materializes the per-subspace codebooks and the
+    one-byte-per-subspace code table as parquet once per (process,
+    corpus); the registered query answers the standard probe set from
+    them via search_pq_index — LUTs from the probes' exact subvector
+    distances against the STORED codebooks, ADC over the stored codes (8
+    small ints per vector instead of 64 floats — the memory-bandwidth
+    compression that is PQ's point at 100 TB), exact fixed-point cosine
+    re-rank of the shortlist. Results are bit-identical to the
+    from-scratch formulation (:func:`pq_ann_cosine_inline`, pinned in
+    tests/test_llm_ops.py), so the oracle hash equality is unchanged;
+    the train/encode passes no longer appear in the per-query DAG."""
     if emb is None:
         emb = read_table(spark, sf_dir, "embeddings")
     path = _ensure_index("pq", emb, sf_dir, build_pq_index)
@@ -2272,7 +2240,7 @@ def build_pq_index(emb: DataFrame, path: str) -> None:
     instead of re-deriving it — at 100 TB the codes table is orders
     of magnitude smaller than the embeddings it indexes.
 
-    Crash-safe (r10): tables land in a fresh generation dir, made
+    Crash-safe: tables land in a fresh generation dir, made
     live by the single gen_meta commit — see the generation-layer
     comment above _gen_current."""
     spark = emb.sparkSession
@@ -2327,7 +2295,7 @@ def build_ivf_index(emb: DataFrame, path: str) -> None:
     assignment pass is the expensive part and this is its
     amortization.
 
-    Crash-safe (r10): tables land in a fresh generation dir, made
+    Crash-safe: tables land in a fresh generation dir, made
     live by the single gen_meta commit — see the generation-layer
     comment above _gen_current."""
     spark = emb.sparkSession
@@ -2557,7 +2525,7 @@ def extend_ivf_index(new_emb: DataFrame, path: str) -> None:
     )
 
 
-# --- driver-gated suites over the persisted indexes (r8) ------------------
+# --- driver-gated suites over the persisted indexes -----------------------
 
 
 def _ivfpq_oracle_ctes() -> str:
@@ -2746,9 +2714,9 @@ def ivfpq_ann_cosine(
     headline=True,
 )
 def ann_index_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ANN family, one registration (r8 fold — the r7 verdict
-    asked for the composed-index searches to be driver-gated, and the
-    registry stays inside the driver's 50-row window by merging):
+    """The ANN family, one registration (the composed-index searches
+    are driver-gated, and the registry stays inside the driver's
+    50-row window by merging):
 
     - ``lsh``: :func:`ann_lsh_cosine` — deterministic hyperplane-LSH
       banding, exact cosine re-rank inside the candidate set.
@@ -2766,9 +2734,9 @@ def ann_index_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every variant is exact-arithmetic deterministic (fixed-point dots,
     pinned tie-breaks), so the whole approximate-search surface is
     value-hash-gated, not just row-counted."""
-    # r9: NO suite-level persist. The r8 fold persisted the embeddings
-    # scan and forced it with a count() before planning the variants;
-    # measured, that barrier cost ~0.8 s per
+    # NO suite-level persist. Persisting the embeddings scan and
+    # forcing it with a count() before planning the variants was
+    # measured: that barrier cost ~0.8 s per
     # run — a serial cache-materialization job plus cache-write cost —
     # while the thing it saved (three extra column-pruned scans of a
     # 0.8 MB parquet file) is nearly free. The four variants now feed
@@ -2939,21 +2907,20 @@ def _sem_scenario(spark: SparkSession, sf_dir: str):
     headline=True,
 )
 def semantic_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The daily-ingest semantic-dedup shape the r7 verdict asked to
-    driver-gate: build_semantic_index over the archive under
-    ``label_ivf`` blocking (frozen coarse quantizer, K pinned to
-    _IVF_K so the oracle can recompute it as a literal; build cached
-    per process like the other index rows), then
-    semantic_dedup_against_index for the perturbed-evens batch. The
-    oracle recomputes quantizer, assignment, composite blocking, and
-    exact cosines in DuckDB, restricted to batch-touching pairs —
-    hash-proving index search == full semantic dedup under the same
-    blocking, at batch cost (scale probe series semantic_vs_index).
-    Registered as its own row (not merged into embedding_near_dup):
-    the work is NEW, and a merged row would trip the bench regression
-    gate against a prior that never contained it.
+    """The daily-ingest semantic-dedup shape, driver-gated:
+    build_semantic_index over the archive under ``label_ivf`` blocking
+    (frozen coarse quantizer, K pinned to _IVF_K so the oracle can
+    recompute it as a literal; build cached per process like the other
+    index rows), then semantic_dedup_against_index for the
+    perturbed-evens batch. The oracle recomputes quantizer, assignment,
+    composite blocking, and exact cosines in DuckDB, restricted to
+    batch-touching pairs — hash-proving index search == full semantic
+    dedup under the same blocking, at batch cost (scale probe series
+    semantic_vs_index). Registered as its own row (not merged into
+    embedding_near_dup): the work is NEW, and a merged row would trip
+    the bench regression gate against a prior that never contained it.
 
-    r10: search plan prepared once per process (_prepared_plan) on
+    The search plan is prepared once per process (_prepared_plan) on
     top of the per-process index build — ~0.7 s of per-call analysis
     of the assignment/cosine expression trees
     (tools/exp_plan_vs_exec.py); execution still runs the full

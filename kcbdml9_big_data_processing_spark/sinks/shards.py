@@ -52,7 +52,7 @@ a user-pinned repartition count is exempt from AQE partition
 coalescing, so every extra partition pays the per-task dispatch
 floor — measured (SCALE_PROBE.json shard_export_width, fixed tiny
 corpus): 64 → 1024 partitions cost 0.48 → 3.95 s of pure scheduling
-(exponent 1.53). Since r13 the width is therefore CAPPED by a
+(exponent 1.53). The width is therefore CAPPED by a
 size-derived bound, ceil(est_input_bytes / target_task_bytes) with a
 64 floor (Catalyst's file-scan statistics feed the estimate): a
 many-tiny-shards export stays at the 64-partition floor instead of
@@ -75,10 +75,10 @@ from pyspark.sql import functions as F
 from ..operators.sampling import h48, h48_sql
 
 #: the portable hash recipe this module keys on — recorded in the
-#: export's _export_meta.json so a retry built from DIFFERENT code
-#: (r12 ADVICE: the xxhash64→h48 switch changed every assignment)
-#: fails loudly instead of silently replacing one shard with a
-#: differently-permuted one mixed among old-recipe shards.
+#: export's _export_meta.json so a retry built from DIFFERENT code (a
+#: hash change moves every assignment) fails loudly instead of silently
+#: replacing one shard with a differently-permuted one mixed among
+#: old-recipe shards.
 _HASH_RECIPE = "sha256-h48:role-prefix"
 _META_NAME = "_export_meta.json"
 
@@ -134,13 +134,19 @@ def _meta_handles(spark: SparkSession, path: str):
     return fs, p
 
 
-def read_export_meta(spark: SparkSession, path: str) -> dict | None:
-    """The export's recorded recipe (hash, n_shards, salt, id_col), or
-    None for a pre-meta (pre-r13) export. Underscore-named, so the
-    parquet reader never sees it."""
+def read_export_meta(spark: SparkSession, path: str) -> dict:
+    """The export's recorded recipe (hash, n_shards, salt, id_col).
+    Underscore-named, so the parquet reader never sees it. Raises when
+    the sidecar is missing: a full export writes it after its data
+    commits, so an export without one never finished."""
     fs, p = _meta_handles(spark, path)
     if not fs.exists(p):
-        return None
+        raise ValueError(
+            f"no {_META_NAME} at {path}: the export's full write never"
+            " finished; re-run the full export (write_training_shards"
+            " without only_shards, or export-shards without"
+            " --only-shards)"
+        )
     stream = fs.open(p)
     try:
         return json.loads(bytes(stream.readAllBytes()).decode("utf-8"))
@@ -193,7 +199,6 @@ def write_training_shards(
     over_provision: int = 16,
     only_shards: list[int] | None = None,
     target_task_bytes: int = 128 << 20,
-    verify_meta: bool = True,
 ) -> None:
     """Export ``df`` as ``{path}/shard=K/`` parquet dirs, one file per
     shard, rows in the shard's deterministic shuffled order. Every
@@ -205,8 +210,8 @@ def write_training_shards(
     skew (module docstring), while the size-derived cap keeps a
     many-tiny-shards export from paying the per-task dispatch floor on
     thousands of near-empty pinned partitions (repartition(N, col) is
-    EXEMPT from AQE coalescing; the r12 width probe measured the floor
-    at exponent 1.53). When Catalyst has no size estimate the cap
+    EXEMPT from AQE coalescing; the width probe measured the floor at
+    exponent 1.53). When Catalyst has no size estimate the cap
     drops out (falls back to pure width sizing). Width never affects
     the output — shard membership/order are pure hash expressions.
 
@@ -223,12 +228,11 @@ def write_training_shards(
     other shard's files are untouched, and because membership/order
     are pure functions of (id, salt) the re-exported shard is
     byte-identical to what the full export wrote. The retry first
-    verifies the sidecar against its own recipe/parameters
-    (``verify_meta=False`` skips, for pre-meta exports whose
-    parameters the caller has checked by hand): a retry with a
-    different hash recipe, salt, n_shards, or id column would
-    otherwise silently replace the shard with a differently-permuted
-    one mixed among the untouched rest."""
+    verifies the sidecar against its own recipe/parameters (a missing
+    sidecar raises): a retry with a different hash recipe, salt,
+    n_shards, or id column would otherwise silently replace the shard
+    with a differently-permuted one mixed among the untouched
+    rest."""
     if mode not in ("error", "errorifexists", "overwrite"):
         # append would stack extra files into shard dirs (order gone,
         # one-file invariant gone); ignore can silently skip the data
@@ -258,30 +262,21 @@ def write_training_shards(
                 f"only_shards must be a non-empty subset of"
                 f" 0..{n_shards - 1}, got {only_shards!r}"
             )
-        if verify_meta:
-            meta = read_export_meta(df.sparkSession, path)
-            expect = {
-                "hash": _HASH_RECIPE,
-                "n_shards": int(n_shards),
-                "salt": int(salt),
-                "id_col": id_col,
-            }
-            if meta is None:
-                raise ValueError(
-                    f"no {_META_NAME} at {path}: cannot verify this"
-                    " retry matches the original export's hash recipe"
-                    " and parameters (pre-r13 export?). Re-run the"
-                    " full export, or pass verify_meta=False after"
-                    " checking (n_shards, salt, id_col) by hand."
-                )
-            got = {k: meta.get(k) for k in expect}
-            if got != expect:
-                raise ValueError(
-                    f"retry parameters do not match {path}'s export"
-                    f" meta: expected {expect}, found {got} — a"
-                    " mismatched retry would silently replace the"
-                    " shard with a differently-permuted one"
-                )
+        meta = read_export_meta(df.sparkSession, path)
+        expect = {
+            "hash": _HASH_RECIPE,
+            "n_shards": int(n_shards),
+            "salt": int(salt),
+            "id_col": id_col,
+        }
+        got = {k: meta.get(k) for k in expect}
+        if got != expect:
+            raise ValueError(
+                f"retry parameters do not match {path}'s export"
+                f" meta: expected {expect}, found {got} — a"
+                " mismatched retry would silently replace the"
+                " shard with a differently-permuted one"
+            )
         writer = assigned.where(F.col("shard").isin(wanted))
         n_writing = len(set(wanted))
     width = max(n_writing * over_provision, 64)
@@ -322,13 +317,9 @@ def audit_training_shards(
     spark: SparkSession,
     path: str,
     reference: DataFrame | None = None,
-    n_shards: int | None = None,
-    salt: int | None = None,
-    id_col: str | None = None,
 ) -> DataFrame:
     """Integrity audit of an export — the DETECTION half of the
-    failed-shard story (``only_shards`` is the repair half; until r13
-    finding the shard to repair was the caller's problem). Recomputes
+    failed-shard story (``only_shards`` is the repair half). Recomputes
     every stored row's assignment from the sidecar's recipe and
     returns one row per expected shard — plus one per UNEXPECTED
     stored shard value (a stale ``shard=K`` dir outside
@@ -358,39 +349,15 @@ def audit_training_shards(
     per-shard result is n_shards rows. Shards failing any check feed
     straight into ``write_training_shards(..., only_shards=[...])``.
 
-    Parameters normally come from the sidecar. A PRE-SIDECAR (pre-r13)
-    export can still be audited by passing ``n_shards`` + ``salt``
-    (and ``id_col`` when not doc_id) explicitly — the assignment
-    recipe is unchanged since the export was h48-keyed, so a clean
-    legacy export audits clean, and wrong explicit parameters are
-    self-evident (every row lands in n_bad_assign). When BOTH a
-    sidecar and explicit parameters are given they must agree —
-    silently preferring either would mask exactly the mismatch the
-    sidecar exists to catch."""
+    The recipe comes from the export's sidecar; a missing sidecar
+    raises (:func:`read_export_meta`)."""
     meta = read_export_meta(spark, path)
-    if meta is None:
-        if n_shards is None or salt is None:
-            raise ValueError(
-                f"no {_META_NAME} at {path}: pass n_shards and salt"
-                " explicitly to audit a pre-sidecar export (and id_col"
-                " when not doc_id), or re-run the full export to record"
-                " the recipe"
-            )
-        id_col = id_col or "doc_id"
-    else:
-        if meta.get("hash") != _HASH_RECIPE:
-            raise ValueError(
-                f"export at {path} was written with hash recipe"
-                f" {meta.get('hash')!r}; this code audits {_HASH_RECIPE!r}"
-            )
-        given = {"n_shards": n_shards, "salt": salt, "id_col": id_col}
-        for k, v in given.items():
-            if v is not None and v != meta[k]:
-                raise ValueError(
-                    f"explicit {k}={v!r} contradicts the export's"
-                    f" sidecar ({k}={meta[k]!r} at {path})"
-                )
-        n_shards, salt, id_col = meta["n_shards"], meta["salt"], meta["id_col"]
+    if meta.get("hash") != _HASH_RECIPE:
+        raise ValueError(
+            f"export at {path} was written with hash recipe"
+            f" {meta.get('hash')!r}; this code audits {_HASH_RECIPE!r}"
+        )
+    n_shards, salt, id_col = meta["n_shards"], meta["salt"], meta["id_col"]
 
     from pyspark.errors import AnalysisException
 
@@ -402,10 +369,10 @@ def audit_training_shards(
         # (UNABLE_TO_INFER_SCHEMA / missing path are analysis-time).
         # The audit's contract is a per-shard report, not a traceback,
         # precisely in the worst case: synthesize an empty export and
-        # let the universe/missing logic mark every shard failed (r13
-        # review). ONLY analysis errors take this path — a corrupted
-        # footer or FS/permission failure raises its real exception
-        # instead of being misreported as data loss (second review).
+        # let the universe/missing logic mark every shard failed. ONLY
+        # analysis errors take this path — a corrupted footer or
+        # FS/permission failure raises its real exception instead of
+        # being misreported as data loss.
         from pyspark.sql.types import (
             IntegerType,
             LongType,
@@ -484,9 +451,8 @@ def audit_training_shards(
         # FULL outer against the expected universe: a stored shard
         # value OUTSIDE 0..n_shards-1 (a stale dir from an older wider
         # export, or an operator fat-finger copying one) must surface
-        # as its own failing row — a left join silently dropped those
-        # rows from every counter and the audit blessed a corrupted
-        # read (r13 review)
+        # as its own failing row — a left join would silently drop
+        # those rows from every counter and bless a corrupted read
         universe.join(per_shard, "shard", "full_outer")
         .join(files, "shard", "left")
         .join(missing, "shard", "left")

@@ -196,7 +196,7 @@ def test_daily_incremental_ingest_composes_with_epoch_ids(spark, tmp_path):
     batch1 = ingest_jsonl(spark, str(day1), epoch=1)[0]
     ids1 = {r["text"]: r["doc_id"] for r in batch1.collect()}
     assert all(i >= (1 << 48) for i in ids1.values())  # namespaced
-    kept1, dec1 = curator.run_incremental(batch1, kept0, idx)
+    kept1, dec1 = curator.run_incremental(batch1, idx)
     dec = {r["doc_id"]: (r["reason"], r["canonical_id"]) for r in dec1.collect()}
     assert set(dec) == set(ids1.values())  # verdict per batch doc
     assert dec[ids1[other.upper()]] == ("exact_dup", h48(other))
@@ -227,9 +227,7 @@ def test_daily_incremental_ingest_composes_with_epoch_ids(spark, tmp_path):
     guard_cleanup: list = []
     try:
         with _pytest.raises(ValueError, match="monotonic"):
-            curator.run_incremental(
-                batch_raw, kept0, idx, cleanup=guard_cleanup
-            )
+            curator.run_incremental(batch_raw, idx, cleanup=guard_cleanup)
     finally:
         for f in guard_cleanup:
             f.unpersist()
@@ -380,7 +378,7 @@ def test_lambda_handoff_stream_landing_feeds_incremental_curator(
     assert all(r["doc_id"] >= (1 << 48) for r in landed_rows.values())
 
     # --- day 1 (batch layer): the landed frame IS the batch
-    kept1, dec1 = curator.run_incremental(landed, kept0, idx)
+    kept1, dec1 = curator.run_incremental(landed, idx)
     dec = {
         r["doc_id"]: (r["reason"], r["canonical_id"]) for r in dec1.collect()
     }

@@ -1664,13 +1664,11 @@ def test_dedup_index_build_generations_crash_safe(spark, tmp_path):
 
 
 def test_gen_writers_resolve_uncached_and_legacy_vacuum(spark, tmp_path):
-    """r11 review hardening: (a) WRITERS re-read gen_meta instead of
-    trusting the process-lifetime cache — a rebuild committed by
-    another process must not leave a long-lived extend worker
-    appending into the superseded generation; (b)
-    vacuum_index_generations(drop_legacy_root=True) reclaims a
-    pre-generation root's artifact dirs once a committed generation
-    exists, and never acts on a pure legacy root."""
+    """(a) WRITERS re-read gen_meta instead of trusting the
+    process-lifetime cache — a rebuild committed by another process
+    must not leave a long-lived extend worker appending into the
+    superseded generation; (b) vacuum_index_generations deletes only
+    g{N} dirs and leaves any other dir at the root alone."""
     import os
 
     from kcbdml9_big_data_processing_spark.queries.dedup import (
@@ -1725,7 +1723,7 @@ def test_gen_writers_resolve_uncached_and_legacy_vacuum(spark, tmp_path):
     }
     assert g2_hashes == {2, 10}
 
-    # (b) legacy-root reclamation: plant legacy artifact dirs at root
+    # (b) non-g{N} dirs at the root survive a vacuum
     _GEN_CACHE.pop((spark.sparkContext.applicationId, root), None)
     for name in ("hashes", "stop", "postings"):
         spark.createDataFrame([(1,)], "x long").write.mode(
@@ -1733,16 +1731,6 @@ def test_gen_writers_resolve_uncached_and_legacy_vacuum(spark, tmp_path):
         ).parquet(f"{root}/{name}")
     vacuum_index_generations(spark, root, retain=2)  # default: untouched
     assert os.path.isdir(f"{root}/stop")
-    vacuum_index_generations(spark, root, retain=2, drop_legacy_root=True)
-    for name in ("hashes", "stop", "postings"):
-        assert not os.path.isdir(f"{root}/{name}")
-    assert os.path.isdir(f"{root}/g1") and os.path.isdir(g2)
-
-    # a PURE legacy root (no gen_meta) is never touched
-    legacy = str(tmp_path / "pure_legacy")
-    spark.createDataFrame([(1,)], "x long").write.parquet(f"{legacy}/postings")
-    vacuum_index_generations(spark, legacy, drop_legacy_root=True)
-    assert os.path.isdir(f"{legacy}/postings")
 
 def test_index_writer_lock_contention_and_release(spark, tmp_path):
     """r11 verdict #4: the single-writer-per-root contract is

@@ -130,8 +130,8 @@ def test_cli_index_lifecycle(spark, tmp_path):
     stats = buf.getvalue()
     assert "compacted=yes" in stats and "version=1" in stats
     assert "tail_postings=" in stats
-    # r12: the stats surface says whether the O(batch) stored-map path
-    # is available, and diagnoses a legacy index loudly
+    # the stats surface says whether the stored exact-dedup map is
+    # present, and diagnoses a broken index with its rebuild
     assert "exact_hash_map=yes" in stats
     import shutil
 
@@ -143,7 +143,8 @@ def test_cli_index_lifecycle(spark, tmp_path):
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         assert _index_main(["stats", "--family", "ngram", *base], spark=spark) == 0
-    assert "exact_hash_map=MISSING" in buf.getvalue()
+    assert "exact_hash_map=MISSING — broken index" in buf.getvalue()
+    assert "--repair-index" in buf.getvalue()
 
     sem = str(tmp_path / "sem_idx")
     sem_out = str(tmp_path / "sem_pairs")
@@ -386,7 +387,7 @@ def test_cli_curate_full_then_incremental(spark, tmp_path):
     """The curate verb closes the shell pipeline (ingest -> curate ->
     export-shards): day-0 full run builds the kept set, decision
     record, and the n-gram index artifact (--build-index); day-1 runs
-    the SAME verb in incremental mode (--archive + --index) over an
+    the SAME verb in incremental mode (--index) over an
     epoch-1 ingest, extends the index (--extend-index), and the
     decisions point at day-0 canonicals. Invalid mode combinations
     exit 2 before touching Spark."""
@@ -457,7 +458,7 @@ def test_cli_curate_full_then_incremental(spark, tmp_path):
     dec1 = str(tmp_path / "dec1")
     assert _curate_main(
         ["--docs", day1_docs, "--out-kept", kept1, "--out-decisions",
-         dec1, "--jaccard-min", "0.3", "--archive", kept0,
+         dec1, "--jaccard-min", "0.3",
          "--index", idx, "--extend-index", "--writer-lock-ttl", "3600"],
         spark=spark,
     ) == 0
@@ -480,11 +481,8 @@ def test_cli_curate_full_then_incremental(spark, tmp_path):
     batch2 = ingest_jsonl(
         spark, jsonl("day2.jsonl", [fresh + " indeed"]), epoch=2
     )[0]
-    archive1 = spark.read.parquet(kept0).select("doc_id", "text").unionByName(
-        spark.read.parquet(kept1).select("doc_id", "text")
-    )
     _, dec2 = TrainingDataCurator(CurationConfig(jaccard_min=0.3)).run_incremental(
-        batch2, archive1, idx
+        batch2, idx
     )
     row2 = dec2.collect()[0]
     assert row2["reason"] == "near_dup"
@@ -493,15 +491,13 @@ def test_cli_curate_full_then_incremental(spark, tmp_path):
     # invalid combinations exit 2 without touching Spark
     common = ["--docs", day1_docs, "--out-kept", kept1,
               "--out-decisions", dec1]
-    assert _curate_main([*common, "--archive", kept0], spark=spark) == 2
-    assert _curate_main([*common, "--index", idx], spark=spark) == 2
     assert _curate_main(
-        [*common, "--archive", kept0, "--index", idx,
+        [*common, "--index", idx,
          "--benchmark", day0_docs],
         spark=spark,
     ) == 2
     assert _curate_main(
-        [*common, "--archive", kept0, "--index", idx,
+        [*common, "--index", idx,
          "--build-index", idx],
         spark=spark,
     ) == 2
@@ -520,12 +516,12 @@ def test_cli_curate_full_then_incremental(spark, tmp_path):
         [*common, "--model-ngram-max", "3"], spark=spark
     ) == 2
     assert _curate_main(
-        [*common, "--archive", kept0, "--index", idx,
+        [*common, "--index", idx,
          "--scrub-repeated-spans"],
         spark=spark,
     ) == 2
     assert _curate_main(
-        [*common, "--archive", kept0, "--index", idx,
+        [*common, "--index", idx,
          "--min-rarity", "0.1"],
         spark=spark,
     ) == 2

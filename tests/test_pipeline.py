@@ -995,15 +995,13 @@ def test_run_incremental_equals_full_run_restricted_to_batch(spark, tmp_path):
         "doc_id long, text string",
     )
 
-    inc_kept, inc_dec = curator.run_incremental(batch, kept_archive, idx)
+    inc_kept, inc_dec = curator.run_incremental(batch, idx)
     got_dec = {
         r["doc_id"]: (r["reason"], r["canonical_id"]) for r in inc_dec.collect()
     }
     # the cleanup/persist path must not change a single decision
     cleanup = []
-    _, inc_dec2 = curator.run_incremental(
-        batch, kept_archive, idx, cleanup=cleanup
-    )
+    _, inc_dec2 = curator.run_incremental(batch, idx, cleanup=cleanup)
     assert {
         r["doc_id"]: (r["reason"], r["canonical_id"])
         for r in inc_dec2.collect()
@@ -1039,20 +1037,14 @@ def test_run_incremental_equals_full_run_restricted_to_batch(spark, tmp_path):
     with _pytest.raises(ValueError):
         TrainingDataCurator(
             CurationConfig(scrub_repeated_spans=True)
-        ).run_incremental(batch, kept_archive, idx)
+        ).run_incremental(batch, idx)
 
 
 def test_run_incremental_never_scans_archive(spark, tmp_path):
-    """r10 verdict #1: with a current index (one carrying the stored
-    ``hashes`` exact-dedup map), run_incremental's plan must contain
-    NO scan of the archive — the exact stage joins the stored
-    40-byte-per-doc map, not a rehash of archive text. Pinned two
-    ways: the archive frame passed in carries a poison UDF that
-    raises if ANY row of it is ever computed (runtime guarantee),
-    and the decision plan's parquet scans don't include the archive's
-    parquet path (plan guarantee)."""
-    from pyspark.sql.types import StringType
-
+    """run_incremental's plan must contain NO scan of the archive —
+    the exact stage joins the index's stored 40-byte-per-doc
+    ``hashes`` map, not a rehash of archive text: the decision plan's
+    parquet scans don't include the archive's parquet path."""
     from kcbdml9_big_data_processing_spark.queries.dedup import (
         build_dedup_index,
     )
@@ -1071,14 +1063,6 @@ def test_run_incremental_never_scans_archive(spark, tmp_path):
     idx = str(tmp_path / "inc_idx")
     build_dedup_index(stored_archive, idx)
 
-    def _boom(s):
-        raise AssertionError(
-            "archive text was scanned on the incremental path"
-        )
-
-    poison = F.udf(_boom, StringType())
-    poisoned_archive = stored_archive.withColumn("text", poison("text"))
-
     batch = spark.createDataFrame(
         [
             (101, words("b101")),
@@ -1090,9 +1074,7 @@ def test_run_incremental_never_scans_archive(spark, tmp_path):
     )
     curator = TrainingDataCurator()
     cleanup = []
-    kept, dec = curator.run_incremental(
-        batch, poisoned_archive, idx, cleanup=cleanup
-    )
+    kept, dec = curator.run_incremental(batch, idx, cleanup=cleanup)
     got = {r["doc_id"]: (r["reason"], r["canonical_id"]) for r in dec.collect()}
     assert got == {
         101: (REASON_KEPT, None),
@@ -1106,47 +1088,6 @@ def test_run_incremental_never_scans_archive(spark, tmp_path):
     assert "arch_parquet" not in physical
     for f in cleanup:
         f.unpersist()
-
-
-def test_run_incremental_legacy_index_falls_back_to_archive(
-    spark, tmp_path
-):
-    """An index built before the ``hashes`` artifact existed (here:
-    artifact deleted) must still answer correctly — the exact stage
-    falls back to deriving the map from archive text (documented as
-    O(archive); a rebuild restores the stored map)."""
-    import shutil
-
-    from kcbdml9_big_data_processing_spark.queries.dedup import (
-        build_dedup_index,
-        dedup_index_hashes,
-    )
-
-    def words(prefix, n=10):
-        return " ".join(f"{prefix}w{j}" for j in range(n))
-
-    archive = spark.createDataFrame(
-        [(1, words("a1")), (2, words("a2"))], "doc_id long, text string"
-    )
-    idx = str(tmp_path / "legacy_idx")
-    build_dedup_index(archive, idx)
-    from kcbdml9_big_data_processing_spark.queries.similarity import (
-        _gen_current,
-    )
-
-    shutil.rmtree(f"{_gen_current(spark, idx)}/hashes")
-    assert dedup_index_hashes(spark, idx) is None
-
-    batch = spark.createDataFrame(
-        [(101, words("a2")), (102, words("b102"))],
-        "doc_id long, text string",
-    )
-    _, dec = TrainingDataCurator().run_incremental(batch, archive, idx)
-    got = {r["doc_id"]: (r["reason"], r["canonical_id"]) for r in dec.collect()}
-    assert got == {
-        101: (REASON_EXACT_DUP, 2),
-        102: (REASON_KEPT, None),
-    }
 
 
 def test_extend_dedup_index_extends_hashes(spark, tmp_path):
@@ -1180,8 +1121,7 @@ def test_extend_dedup_index_extends_hashes(spark, tmp_path):
         [(201, words("b101")), (202, words("c202"))],
         "doc_id long, text string",
     )
-    new_archive = archive.unionAll(day1_kept)
-    _, dec = TrainingDataCurator().run_incremental(day2, new_archive, idx)
+    _, dec = TrainingDataCurator().run_incremental(day2, idx)
     got = {r["doc_id"]: (r["reason"], r["canonical_id"]) for r in dec.collect()}
     assert got == {
         201: (REASON_EXACT_DUP, 101),
@@ -1210,9 +1150,7 @@ def test_run_incremental_monotonic_id_guard(spark, tmp_path):
         [(7, words("b7"))], "doc_id long, text string"
     )
     with pytest.raises(ValueError, match="monotonic-id precondition"):
-        TrainingDataCurator().run_incremental(
-            bad_batch, archive, idx, cleanup=[]
-        )
+        TrainingDataCurator().run_incremental(bad_batch, idx, cleanup=[])
 
 
 def test_run_incremental_ignores_batchs_own_index_appends(spark, tmp_path):
@@ -1248,7 +1186,7 @@ def test_run_incremental_ignores_batchs_own_index_appends(spark, tmp_path):
     curator = TrainingDataCurator()
     first = {
         r["doc_id"]: (r["reason"], r["canonical_id"])
-        for r in curator.run_incremental(batch, archive, idx)[1].collect()
+        for r in curator.run_incremental(batch, idx)[1].collect()
     }
     assert first == {
         101: (REASON_KEPT, None),
@@ -1263,19 +1201,18 @@ def test_run_incremental_ignores_batchs_own_index_appends(spark, tmp_path):
     cleanup = []
     retry = {
         r["doc_id"]: (r["reason"], r["canonical_id"])
-        for r in curator.run_incremental(
-            batch, archive, idx, cleanup=cleanup
-        )[1].collect()
+        for r in curator.run_incremental(batch, idx, cleanup=cleanup)[
+            1
+        ].collect()
     }
     assert retry == first  # no self-dup rows, no guard false-positive
     for f in cleanup:
         f.unpersist()
 
 def test_legacy_index_fallback_warns(spark, tmp_path):
-    """r11 verdict #2: the O(archive) legacy fallback must be
-    OBSERVABLE — run_incremental emits a RuntimeWarning when the index
-    has no ``hashes`` artifact and it derives the map from archive
-    text."""
+    """An index without its ``hashes`` exact-dedup map is broken:
+    run_incremental refuses it with an error naming the rebuild
+    instead of curating against an incomplete index."""
     import shutil
 
     from kcbdml9_big_data_processing_spark.queries.dedup import (
@@ -1297,8 +1234,10 @@ def test_legacy_index_fallback_warns(spark, tmp_path):
     batch = spark.createDataFrame(
         [(101, words("b101"))], "doc_id long, text string"
     )
-    with pytest.warns(RuntimeWarning, match="no 'hashes' artifact"):
-        TrainingDataCurator().run_incremental(batch, archive, idx)
+    with pytest.raises(
+        FileNotFoundError, match="no 'hashes'.*build_dedup_index.*--repair-index"
+    ):
+        TrainingDataCurator().run_incremental(batch, idx)
 
 
 def test_hashes_max_sidecar_maintained_and_fast_paths_guard(
@@ -1360,7 +1299,7 @@ def test_hashes_max_sidecar_maintained_and_fast_paths_guard(
     cleanup = []
     # sidecar max (60) < batch min (101): guard passes without the
     # scan that would have seen 999
-    _, dec = curator.run_incremental(batch, archive, idx, cleanup=cleanup)
+    _, dec = curator.run_incremental(batch, idx, cleanup=cleanup)
     assert {r["doc_id"] for r in dec.collect()} == {101}
     for f in cleanup:
         f.unpersist()
@@ -1368,43 +1307,67 @@ def test_hashes_max_sidecar_maintained_and_fast_paths_guard(
     # remove the sidecar: the precise scan now sees the violating row
     shutil.rmtree(f"{gdir}/hashes_max")
     with pytest.raises(ValueError, match="monotonic-id precondition"):
-        curator.run_incremental(batch, archive, idx, cleanup=[])
+        curator.run_incremental(batch, idx, cleanup=[])
 
-def test_hashes_max_backfills_from_map_not_batch(spark, tmp_path):
-    """r12 review: on a pre-sidecar index (hashes present, no
-    hashes_max — an r11 build), the first extend must bound the
-    STORED map, not just the batch: extend's contract only requires
-    DISJOINT batch ids, so seeding from the batch alone would
-    understate a map holding larger ids and silently weaken the
-    monotonic-id guard's fast path."""
-    import shutil
 
+def test_zero_doc_index_seeds_hashes_max_from_first_extend(spark, tmp_path):
+    """The one current-format index without a ``hashes_max`` sidecar is
+    one built over zero docs (the build writes the sidecar only for a
+    non-empty map). Its first extend seeds the sidecar from the batch
+    alone — exact, because the map held nothing — and two incremental
+    days over it decide exactly what one full run over both batches
+    decides."""
     from kcbdml9_big_data_processing_spark.queries.dedup import (
         build_dedup_index,
         dedup_index_hashes_max,
         extend_dedup_index,
     )
-    from kcbdml9_big_data_processing_spark.queries.similarity import (
-        _gen_current,
-    )
 
     def words(prefix, n=10):
         return " ".join(f"{prefix}w{j}" for j in range(n))
 
-    archive = spark.createDataFrame(
-        [(1, words("a1")), (1000, words("a1000"))],
-        "doc_id long, text string",
-    )
-    idx = str(tmp_path / "backfill_idx")
-    build_dedup_index(archive, idx)
-    shutil.rmtree(f"{_gen_current(spark, idx)}/hashes_max")  # r11 state
+    schema = "doc_id long, text string"
+    idx = str(tmp_path / "empty_idx")
+    build_dedup_index(spark.createDataFrame([], schema), idx)
     assert dedup_index_hashes_max(spark, idx) is None
 
-    # disjoint but NON-monotonic batch id below the map's max
-    extend_dedup_index(
-        spark.createDataFrame(
-            [(500, words("b500"))], "doc_id long, text string"
-        ),
-        idx,
+    day1 = spark.createDataFrame(
+        [
+            (1, words("a1")),
+            (2, words("a2")),
+            (3, words("a1")),  # exact dup within the day
+        ],
+        schema,
     )
-    assert dedup_index_hashes_max(spark, idx) == 1000
+    day2 = spark.createDataFrame(
+        [
+            (11, words("a2")),  # exact redelivery of day-1 doc 2
+            (12, " ".join(words("a1").split()[:-1])),  # near-dup of 1
+            (13, words("b13")),  # fresh
+            (14, "tiny junk"),  # quality drop
+        ],
+        schema,
+    )
+    curator = TrainingDataCurator()
+    kept1, dec1 = curator.run_incremental(day1, idx)
+    got = {r["doc_id"]: (r["reason"], r["canonical_id"]) for r in dec1.collect()}
+    extend_dedup_index(kept1, idx)
+    assert dedup_index_hashes_max(spark, idx) == 2
+
+    cleanup = []
+    _, dec2 = curator.run_incremental(day2, idx, cleanup=cleanup)
+    got.update(
+        {r["doc_id"]: (r["reason"], r["canonical_id"]) for r in dec2.collect()}
+    )
+    for f in cleanup:
+        f.unpersist()
+
+    _, full_dec = curator.run(day1.unionAll(day2))
+    want = {
+        r["doc_id"]: (r["reason"], r["canonical_id"])
+        for r in full_dec.collect()
+    }
+    assert got == want
+    assert got[11] == (REASON_EXACT_DUP, 2)
+    assert got[12] == (REASON_NEAR_DUP, 1)
+    assert got[13] == (REASON_KEPT, None)

@@ -245,12 +245,11 @@ def test_retry_requires_overwrite_mode(spark, tmp_path):
 
 
 def test_export_meta_recorded_and_verified_on_retry(spark, tmp_path):
-    """r12 ADVICE: the export records its hash recipe + parameters in
+    """The export records its hash recipe + parameters in
     _export_meta.json; a retry whose parameters (or code-era hash
     recipe) don't match refuses instead of silently replacing the
-    shard with a differently-permuted one. A pre-meta export (sidecar
-    missing) also refuses, with verify_meta=False as the audited
-    escape hatch."""
+    shard with a differently-permuted one. An export without its
+    sidecar (its full write never finished) also refuses."""
     import os
 
     from kcbdml9_big_data_processing_spark.sinks.shards import (
@@ -282,26 +281,12 @@ def test_export_meta_recorded_and_verified_on_retry(spark, tmp_path):
             docs, path, n_shards=8, salt=7, mode="overwrite", only_shards=[2]
         )
 
-    # pre-meta export: sidecar gone -> retry refuses; the escape
-    # hatch still reproduces the shard byte-identically
-    want = read_training_shards(spark, path, shard=2, ordered=True).collect()
+    # sidecar gone -> retry refuses, and writes no sidecar itself
     os.remove(f"{path}/_export_meta.json")
     with pytest.raises(ValueError, match="_export_meta"):
         write_training_shards(
             docs, path, n_shards=4, salt=7, mode="overwrite", only_shards=[2]
         )
-    write_training_shards(
-        docs,
-        path,
-        n_shards=4,
-        salt=7,
-        mode="overwrite",
-        only_shards=[2],
-        verify_meta=False,
-    )
-    got = read_training_shards(spark, path, shard=2, ordered=True).collect()
-    assert got == want
-    # a retry never (re)writes the sidecar — only a full export owns it
     assert not os.path.exists(f"{path}/_export_meta.json")
 
 
@@ -458,31 +443,10 @@ def test_audit_empty_shard_and_bad_assign(spark, tmp_path):
     assert rep[k]["n_bad_assign"] == rep[k]["n_rows"] > 0
     assert not rep[k]["ok"] and all(rep[j]["ok"] for j in range(3))
 
-    # no sidecar -> refuse without explicit params; WITH them a
-    # pre-sidecar export audits (recipe unchanged since h48 keying) —
-    # and still catches the corrupted shard above; wrong explicit
-    # params against a PRESENT sidecar refuse (r13: legacy fallback)
+    # no sidecar -> the audit refuses
     os.remove(f"{path2}/_export_meta.json")
     with _pytest.raises(ValueError, match="_export_meta"):
         audit_training_shards(spark, path2)
-    rep = {
-        r["shard"]: r.asDict()
-        for r in audit_training_shards(
-            spark, path2, reference=docs, n_shards=4, salt=7
-        ).collect()
-    }
-    assert not rep[k]["ok"] and all(rep[j]["ok"] for j in range(3))
-
-    path3 = str(tmp_path / "sidecar_conflict")
-    write_training_shards(tiny, path3, n_shards=4, salt=0)
-    with _pytest.raises(ValueError, match="contradicts"):
-        audit_training_shards(spark, path3, n_shards=8)
-    with _pytest.raises(ValueError, match="contradicts"):
-        audit_training_shards(spark, path3, salt=5)
-    # agreeing explicit params are fine
-    assert audit_training_shards(
-        spark, path3, reference=tiny, n_shards=4, salt=0
-    ).count() == 4
 
 
 def test_audit_flags_out_of_range_shard_dir_and_total_loss(spark, tmp_path):

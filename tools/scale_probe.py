@@ -266,7 +266,7 @@ def main() -> None:
 
         def one():
             cleanup = []
-            _, dec = curator.run_incremental(batch, kept, path, cleanup=cleanup)
+            _, dec = curator.run_incremental(batch, path, cleanup=cleanup)
             dec.write.mode("overwrite").format("noop").save()
             for f in cleanup:
                 f.unpersist()
