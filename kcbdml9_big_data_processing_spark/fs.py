@@ -1,8 +1,6 @@
 """Driver-side Hadoop FileSystem helpers — the single home for the
-``jvm Path + getFileSystem(hadoopConfiguration)`` dance (r15 review:
-the pattern had accumulated five near-copies across dedup/similarity/
-shards and a sixth was about to land in jobs/runs.py; all six now
-resolve through :func:`hadoop_path` — the one remaining raw
+``jvm Path + getFileSystem(hadoopConfiguration)`` dance: every caller
+resolves through :func:`hadoop_path` (the one remaining raw
 ``jvm...Path`` construction, the lock-steal tombstone in
 queries/similarity.py, builds a Path against an fs handle this
 module already resolved). Using the Hadoop FS API (not os.path)

@@ -46,8 +46,9 @@ def repetition_signals(docs: DataFrame, text_col: str = "text") -> DataFrame:
     - ``dup_3gram_frac``: fraction of word-3-gram occurrences that are
       repeats — catches looped phrases with a rotating vocabulary.
 
-    r7 formulation, ~8x cheaper per row (3.1 s -> 0.4 s standalone at
-    sf0.1, measured per metric) with identical values:
+    The formulation is ~8x cheaper per row than a naive one (3.1 s ->
+    0.4 s standalone at sf0.1, measured per metric) with identical
+    values:
 
     - the most-frequent-word count is an O(n log n) sort + O(n)
       longest-equal-run aggregate over the sorted tokens instead of
@@ -170,9 +171,9 @@ def contamination_flags(
     Shape for 100 TB: the benchmark's distinct shingle fingerprints
     (xxhash64 longs) are BROADCAST and the corpus's exploded shingles
     probe them through a broadcast hash join — the hash table builds
-    ONCE per task, so per-shingle membership is O(1). (The r6 shape
-    intersected each doc's shingle array against the broadcast set
-    ARRAY, which re-scans all |bench| entries per document — measured
+    ONCE per task, so per-shingle membership is O(1). (Intersecting
+    each doc's shingle array against the broadcast set ARRAY instead
+    re-scans all |bench| entries per document — measured
     3.2 s -> 1.0 s standalone at sf0.1 with a ~13k-shingle bench, and
     the gap grows linearly with eval-set size.) Corpus CONTENT still
     never shuffles: the per-doc count aggregates map-side down to one
@@ -213,7 +214,7 @@ def contamination_flags(
     # explode_outer, not explode: a null-text doc shingles to a NULL
     # array, and plain explode would emit no rows for it — the doc
     # would vanish from the output, breaking the one-row-per-input-doc
-    # contract (r7 ADVICE). The outer variant emits one NULL-key row,
+    # contract. The outer variant emits one NULL-key row,
     # which matches nothing in the left join and aggregates to
     # (doc_id, 0, false) like any other clean doc.
     exploded = docs.select(
@@ -320,8 +321,8 @@ def repeated_spans(
     queries/dedup._exact_jaccard_pairs). Without ``cleanup`` the
     operator stays fully lazy: the explode recomputes once per
     consumer, the honest trade for a caller that cannot own an
-    unpersist (r6 ADVICE — an unconditional persist leaked executor
-    memory per call in long-lived sessions).
+    unpersist (an unconditional persist would leak executor memory
+    per call in long-lived sessions).
 
     Scale shape: only (doc_id, 8-byte fingerprint) rows ever shuffle —
     never span text; work is one explode (~n_tokens rows per doc), one
@@ -352,7 +353,7 @@ def repeated_spans(
     # plain count, not count_distinct: ``ex`` explodes each doc's
     # array_distinct'd fingerprints, so (doc, fp) rows are unique by
     # construction — the count IS the distinct-doc count, without the
-    # distinct aggregation's extra dedup pass (r8, measured ~6%)
+    # distinct aggregation's extra dedup pass (measured ~6%)
     shared = (
         ex.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("n_docs"))

@@ -25,9 +25,8 @@ def _aqe_off(spark):
     """Plan with AQE disabled: the pre-execution AQE plan is an
     unfinalized AdaptiveSparkPlan that hides codegen markers and
     exchanges; the structural plan is what these inspectors assert
-    on (AQE only improves it at runtime). One shared toggle — the
-    save/set/restore idiom had grown four hand-written copies (r13
-    review)."""
+    on (AQE only improves it at runtime). One shared toggle for the
+    save/set/restore idiom."""
     prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     try:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -161,8 +160,8 @@ def _struct_fields(struct: str) -> list[str]:
     """Top-level field names of a ``struct<...>`` simpleString —
     split on depth-0 commas, where depth counts BOTH ``<>`` (nested
     struct/array/map) and ``()`` (parameterized scalars:
-    ``decimal(12,2)``, ``char(8)`` — their commas sheared a phantom
-    field until the r13 review executed the parser on one)."""
+    ``decimal(12,2)``, ``char(8)`` — their commas would otherwise
+    shear a phantom field)."""
     assert struct.startswith("struct<") and struct.endswith(">"), struct
     body = struct[len("struct<"):-1]
     fields, depth, start = [], 0, 0
@@ -250,7 +249,7 @@ def pushed_predicate_count(df: DataFrame) -> int:
     tools/pin_scan_schemas.py): fewer substantive predicates than the
     pin means a filter regressed; more is an improvement and passes.
 
-    Known parser limitation (r13 ADVICE): the depth tracker counts
+    Known parser limitation: the depth tracker counts
     every ``(`` ``[`` — including ones inside STRING LITERAL values
     (``EqualTo(source,a)b)``, an In-list entry containing brackets),
     which would mis-split atoms for predicates over free-text
@@ -377,7 +376,7 @@ def bnlj_build_sides(df: DataFrame) -> list[tuple[str, bool, str]]:
     scalar-stat crossJoins rely on: a BNLJ is only acceptable when its
     broadcast side is structurally ≤1 row (a global aggregate /
     literal frame) — anything else is a real cartesian hiding in the
-    plan (r11 verdict #5). The full subtree text lets callers pin the
+    plan. The full subtree text lets callers pin the
     one deliberate exception (the brute-force knn baseline broadcasts
     its multi-row-but-tiny PROBE side) to the intended build side."""
     with _aqe_off(df.sparkSession):
@@ -439,8 +438,8 @@ def shuffle_exchanges_carrying(
     PATH FEEDING the exchange's copy of the column (the
     unique_doc_ids posture: heavy bytes may ride a shuffle only AFTER
     the duplicate-id semi filter has shrunk the input to the
-    violation set). Structural, not textual (r14 ADVICE): the old
-    ``'LeftSemi' in subtree.toString()`` check would have passed a
+    violation set). Structural, not textual: a
+    ``'LeftSemi' in subtree.toString()`` check would pass a
     future plan whose semi join sits in an UNRELATED branch below a
     text-carrying exchange — now the walk descends only through
     children whose output still carries the column and demands a join

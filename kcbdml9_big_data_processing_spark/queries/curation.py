@@ -60,7 +60,7 @@ from ..sinks.shards import (
 )
 from ..sources.parquet import read_table, spread_scan
 from .dedup import _truncate_lineage
-from .registry import _prepared_lifecycle_plan, register
+from .registry import _prepared_lifecycle_plan, build_once_dir, register
 from .text import _SW_ARR_SQL, _tokens_sql
 
 _WS = r"\s+"
@@ -90,32 +90,21 @@ _CHUNK_OVERLAP = 4
 _SHARD_N = 8
 _SHARD_SALT = 12
 
-#: per-process cache of WRITTEN training-shard exports, keyed by
-#: sf_dir — the _INDEX_PATHS build-once/read-many posture: the suite
-#: exports real shards into a scratch dir on first call, and every
-#: call's shard/shard_pos variants READ the written files, so the
-#: oracle hash pins the artifact write_training_shards actually
-#: produced (membership, order keys, and the partitioned layout), not
-#: just the assignment expressions. Parquet on disk outlives any one
-#: SparkSession; scratch dirs are reclaimed at process exit.
-_SHARD_EXPORT_PATHS: dict[str, str] = {}
-
-
 def _shard_export(docs: DataFrame, sf_dir: str) -> DataFrame:
-    path = _SHARD_EXPORT_PATHS.get(sf_dir)
-    if path is None:
-        from ..tmpdirs import scratch_dir
-
-        path = scratch_dir("shard_export_")
-        write_training_shards(
-            docs.select("doc_id"),
-            path,
-            _SHARD_N,
-            salt=_SHARD_SALT,
-            mode="overwrite",
-        )
-        _SHARD_EXPORT_PATHS[sf_dir] = path
-    return read_training_shards(docs.sparkSession, path)
+    """The suite's training-shard export, written once per (app, sf_dir)
+    by write_training_shards and READ back by every call, so the oracle
+    hash pins the artifact actually produced (membership, order keys
+    and the partitioned layout), not just the assignment expressions."""
+    spark = docs.sparkSession
+    path = build_once_dir(
+        spark,
+        "shard_export",
+        sf_dir,
+        lambda p: write_training_shards(
+            docs.select("doc_id"), p, _SHARD_N, salt=_SHARD_SALT, mode="overwrite"
+        ),
+    )
+    return read_training_shards(spark, path)
 
 
 def _mix_threshold_sql() -> str:
@@ -523,14 +512,11 @@ def _llm_union_build(
     rar = rarity_scores(docs).select(
         F.lit("rarity").alias("variant"), "doc_id", F.col("rarity").alias("value")
     )
-    # the training-shard export (r11 verdict #1: the one operator with
-    # no driver oracle row). The variants read a REAL export written
-    # by write_training_shards into a per-process scratch dir
-    # (build-once/read-many, see _SHARD_EXPORT_PATHS): membership
-    # ('shard') plus the within-shard sort key ('shard_pos', 48-bit so
-    # the DOUBLE melt carries it exactly) are hash-checked against the
-    # oracle's independent recomputation — pinning the written
-    # artifact end to end, keying through layout.
+    # the training-shard export: membership ('shard') plus the
+    # within-shard sort key ('shard_pos', 48-bit so the DOUBLE melt
+    # carries it exactly), read back from the written export
+    # (_shard_export), are hash-checked against the oracle's
+    # independent recomputation.
     shard_v = (
         _shard_export(docs, sf_dir)
         .select(
@@ -720,10 +706,10 @@ def curation_run(spark: SparkSession, sf_dir: str) -> DataFrame:
         # signals, content hashing, shingling, the final kept-join and
         # decision branches) — persist the synthetic corpus once so
         # each consumer reads the cache instead of re-deriving the
-        # 3-way union from the parquet scan. r16: spread_scan was
-        # A/B'd here (32 and 8) and LOST — the pipeline's dozens of
-        # small stages multiply per-task overhead faster than the <=3
-        # heavy map tasks gain; see OPTIMIZATION_r16.md.
+        # 3-way union from the parquet scan. No spread_scan: the
+        # pipeline's dozens of small stages multiply per-task overhead
+        # faster than the <=3 heavy map tasks gain (A/B'd at 32 and 8
+        # ways, OPTIMIZATION_r16.md).
         .persist()
     )
     # stage caches (quality flags, hash-tagged frame) collect here; the
@@ -828,7 +814,7 @@ def span_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
             " ",
         ).alias("text"),
     )
-    # r16: spread AFTER the union, not at the read — the operator
+    # spread AFTER the union, not at the read — the operator
     # derives three consumers from its input, and a spread at the read
     # is re-planned per union branch with different pushed filters
     # below it (non-reusable exchanges: pinned count went 2 -> 7);

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 from ..functions.exact import davg, davg_sql, dsum, dsum_sql, epoch_millis
 from ..sources.parquet import read_table
 from .parity import LATEST_EVENT_ORACLE
-from .registry import register
+from .registry import _prepared_plan, register
 
 
 # --- TPC-H Q1 analog -----------------------------------------------------
@@ -322,8 +322,7 @@ def user_value_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     prepare=True,
 )
 def user_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user summary in one registration (r6 reshuffle freeing a
-    slot for the CDC suite): the PIVOT value matrix joined 1:1 on
+    """Per-user summary in one registration: the PIVOT value matrix joined 1:1 on
     user_id with the recency-compaction latest event. Both
     constituents stay importable individually and keep their full
     computation (pivot aggregate + WindowGroupLimit top-1)."""
@@ -507,7 +506,7 @@ def user_reach_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
         # count(user_id), not count(*): a NULL user_id forms its own
         # pair group, which COUNT(DISTINCT) and the HLL both ignore —
         # count(*) would diverge from the oracle on any null-bearing
-        # input (r13 review; latent in the null-free testdata)
+        # input (latent in the null-free testdata)
         F.count(F.col("user_id")).alias("exact_users"),
         F.approx_count_distinct("user_id", 0.01).alias("_approx_users"),
     )
@@ -534,7 +533,7 @@ def approx_value_percentiles(
     and checks p·n lands inside it ± (n/accuracy + 1) — the same
     bounded-error-witness construction that driver-gates
     user_reach_approx, pytest-pinned at two SFs (tests/test_approx.py)
-    AND driver-gated since r14 through grouped_stats_suite's
+    AND driver-gated through grouped_stats_suite's
     ``approx_percentiles`` variant (exact n + the bound booleans vs an
     oracle emitting constant TRUE — the sketch values themselves are
     engine-specific and stay out of the hash). The verification pass
@@ -974,13 +973,12 @@ def join_revenue_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     join pipeline and plan; outputs conform to (variant, key,
     measure).
 
-    r11: the union-of-four-pipelines plan is PREPARED once per
+    The union-of-four-pipelines plan is PREPARED once per
     process (_prepared_plan) — exp_plan_vs_exec measured per-call
     Catalyst construction+analysis at 1.2 s vs 0.88 s execution
     (four full TPC-H pipelines re-analyzed per call, the same
     analysis-bound shape the ngram/ann suites had). Inputs are
     immutable per (app, sf_dir), so re-analysis buys nothing."""
-    from .similarity import _prepared_plan
 
     def build() -> DataFrame:
         q3 = shipping_priority(spark, sf_dir).select(
@@ -1108,7 +1106,6 @@ def grouped_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly-representable doubles (counts < 2^53, fixed-point
     averages, rank-selected raw values), so the cross-engine hash
     stays bit-exact."""
-    from .similarity import _prepared_plan
 
     def build() -> DataFrame:
         ets = event_type_stats(spark, sf_dir).select(
@@ -1130,7 +1127,7 @@ def grouped_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "stack(3, 'p50', p50, 'p90', p90, 'p99', p99) AS (metric, value)"
             ),
         ).select("variant", "key", "metric", "value")
-        # r14: the GK-sketch swap's self-witness, driver-gated the same
+        # the GK-sketch swap's self-witness, driver-gated the same
         # way as user_reach_approx — the sketch values themselves are
         # engine-specific (never hash-comparable), so the row carries
         # the exact group count plus the exact-rank bound booleans; the
@@ -1162,6 +1159,6 @@ def grouped_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return ets.unionAll(pct).unionAll(apx).unionAll(cod).unionAll(late)
 
-    # r11: four static pipelines over immutable inputs — prepared once
+    # four static pipelines over immutable inputs — prepared once
     # per process (exp_plan_vs_exec: 0.64 s construction vs 0.79 exec)
     return _prepared_plan(spark, "grouped_stats_suite", sf_dir, build)

@@ -27,7 +27,7 @@ from ..schemas import EVENT_PROPS_SCHEMA
 from ..sinks.parquet import write_partitioned_archive
 from ..sources.parquet import read_partitioned_archive, read_table
 from ..tmpdirs import scratch_dir
-from .registry import register
+from .registry import _prepared_plan, register
 
 HOUR = 3600
 NINETY_SECONDS = 90
@@ -126,14 +126,10 @@ def bytes_90s(spark: SparkSession, sf_dir: str) -> DataFrame:
     Independent single-shuffle aggregates over one shared scan;
     the union is plan-level concatenation, no extra exchange.
 
-    r10: the sliding-window extension (previously its own
-    `bytes_antenna_sliding` row) rides this row as a fourth branch —
-    it shares the exact metric layout and the `type` column
-    discriminates it, the same consolidation that folded the antenna
-    stream into stream_bytes_90s_suite in r6. Filter
-    type != 'antenna_bytes_sliding' for the strict reference shape.
-    The freed slot gates stream_running_totals (queries/stream.py)."""
-    from .similarity import _prepared_plan
+    The sliding-window extension (``bytes_antenna_sliding``) rides
+    this row as a fourth branch — it shares the exact metric layout
+    and the `type` column discriminates it. Filter
+    type != 'antenna_bytes_sliding' for the strict reference shape."""
 
     def build():
         return (
@@ -143,7 +139,7 @@ def bytes_90s(spark: SparkSession, sf_dir: str) -> DataFrame:
             .unionAll(bytes_antenna_sliding(spark, sf_dir))
         )
 
-    # r11: static four-variant union over immutable inputs — prepared
+    # static four-variant union over immutable inputs — prepared
     # once per process (exp_plan_vs_exec: 0.58 s construction/call)
     return _prepared_plan(spark, "bytes_90s", sf_dir, build)
 
@@ -208,7 +204,6 @@ def bytes_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums per antenna, email (through the J1 enrichment join), and app,
     unioned with the `type` discriminator (BatchJobImpl.scala:46-77,
     JdbcProvisioner.scala:54-55)."""
-    from .similarity import _prepared_plan
 
     def build():
         return (
@@ -217,7 +212,7 @@ def bytes_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             .unionAll(bytes_app_hourly(spark, sf_dir))
         )
 
-    # r11: static three-variant union over immutable inputs — prepared
+    # static three-variant union over immutable inputs — prepared
     # once per process (exp_plan_vs_exec: 0.43 s construction/call)
     return _prepared_plan(spark, "bytes_hourly", sf_dir, build)
 
@@ -350,7 +345,7 @@ def bytes_antenna_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     per overlap map-side, then it's the same single-shuffle partial+
     final aggregate as tumbling; state at any moment is bounded by
     duration/slide windows per key. Registered as a branch of the
-    bytes_90s row (r10 consolidation — see _SLIDING_ORACLE above);
+    bytes_90s row (see _SLIDING_ORACLE above);
     stays importable for jobs/tests."""
     ev = read_table(spark, sf_dir, "events")
     agg = ev.groupBy(
@@ -409,8 +404,7 @@ def session_window_bytes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: registered via user_summary (queries/olap.py), which joins this
-#: with user_value_pivot on user_id — r6 registry reshuffle freeing a
-#: slot for the CDC suite
+#: with user_value_pivot on user_id
 LATEST_EVENT_ORACLE = """
         SELECT user_id, event_id, ts, event_type
         FROM (
@@ -503,8 +497,6 @@ def events_near_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation sits inside the driver's oracle gate."""
     from ..operators.temporal import interval_join
 
-    from .similarity import _prepared_plan
-
     def build():
         ev = read_table(spark, sf_dir, "events")
         errors = ev.where(F.col("event_type") == "error").select(
@@ -529,6 +521,6 @@ def events_near_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    # r11: static plan over immutable inputs — prepared once per
+    # static plan over immutable inputs — prepared once per
     # process (exp_plan_vs_exec: 0.29 s construction vs 0.52 exec)
     return _prepared_plan(spark, "events_near_errors", sf_dir, build)

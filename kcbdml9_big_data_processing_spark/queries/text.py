@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..functions.exact import davg, davg_sql, dsum, dsum_sql
 from ..sources.parquet import read_table, spread_scan
-from .registry import register
+from .registry import _prepared_plan, register
 
 #: whitespace tokenizer shared by every query (and its oracle).
 _WS = r"\s+"
@@ -270,14 +270,14 @@ def doc_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver's 50-row window): the nine text metrics, the min-MD5
     rolling-hash fingerprint, and the PII redaction output (clean text
     + match counts) — computed in ONE scan as pure per-row columns
-    (every constituent is a projection over the same row, so the
-    r6-earlier 1:1 self-joins were two shuffles and two extra scans of
-    pure overhead; Catalyst cannot eliminate a self-join). Each
+    (every constituent is a projection over the same row, so 1:1
+    self-joins would be two shuffles and two extra scans of pure
+    overhead; Catalyst cannot eliminate a self-join). Each
     constituent stays importable individually. (The @register lives
     below redact_pii so the oracle fragments exist at decoration
     time.)
 
-    r16: the scan is spread (spread_scan) before the projection — the
+    The scan is spread (spread_scan) before the projection — the
     single-row-group input otherwise runs the whole MD5-shingle +
     regex-redaction projection as ONE task (guide §2.5)."""
     docs = spread_scan(read_table(spark, sf_dir, "documents"))
@@ -446,7 +446,7 @@ def language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     All per-row array expressions, shuffle-free at any corpus size;
     one projection instead of two passes.
 
-    r7: the token and bigram arrays are BOUND once per row and the ten
+    The token and bigram arrays are BOUND once per row and the ten
     score columns come out of one ``inline(array(struct))`` generator —
     ten independent columns would each re-inline their source array
     expression (interpreted higher-order exprs get no CSE — see
@@ -457,8 +457,8 @@ def language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     the generator (``inline``) is the one construct that expands a
     struct to columns while evaluating its input once.
 
-    r10: the plan is prepared once per process
-    (similarity._prepared_plan — the ann/ngram recipe): the ten
+    The plan is prepared once per process
+    (registry._prepared_plan — the ann/ngram recipe): the ten
     profile array literals (hundreds of F.lit elements each) cost
     ~0.4 s of construction + Catalyst analysis per call at idle
     steady-state (A/B median-of-5: 2.55 -> 2.14 s; a
@@ -467,7 +467,7 @@ def language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     score arithmetic still executes fully every call."""
 
     def build() -> DataFrame:
-        # r16: spread the single-row-group scan — the ten-profile
+        # spread the single-row-group scan — the ten-profile
         # score arithmetic otherwise runs as ONE task (guide §2.5)
         docs = spread_scan(read_table(spark, sf_dir, "documents"))
         toks = _tokens()
@@ -498,8 +498,6 @@ def language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.array(F.struct(toks.alias("t"), grams.alias("g"))), scores
         )[0]
         return docs.select("doc_id", "lang", F.inline(F.array(bound)))
-
-    from .similarity import _prepared_plan
 
     return _prepared_plan(spark, "language_id", sf_dir, build)
 
@@ -576,7 +574,7 @@ def _redact_cols(text) -> list:
 # oracle composes the redaction fragment defined just above; the
 # redact_pii registration folded into doc_profile to free a registry
 # slot for stream_curated_ingest while keeping every constituent
-# hash-checked (r6 registry reshuffle — see ROUND_NOTES.md)
+# hash-checked
 register(
     "doc_profile",
     oracle=f"""
@@ -691,9 +689,8 @@ def bigram_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def term_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus term-statistics family in one long-format result (r10:
-    ``tfidf_top_terms`` + ``bigram_lift`` consolidated to free a
-    registry slot for ``quality_clf`` — the r6 suite recipe: every
+    """Corpus term-statistics family in one long-format result
+    (``tfidf_top_terms`` + ``bigram_lift`` in one registry slot: every
     constituent keeps its full computation and oracle phrasing inside
     the union, and the plain functions stay importable individually):
 
@@ -702,7 +699,6 @@ def term_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     - ``bigram_lift``: corpus top bigrams by collocation lift (see
       :func:`bigram_lift`); doc_id is NULL, n = bigram count,
       value = lift."""
-    from .similarity import _prepared_plan
 
     def build():
         tf = tfidf_top_terms(spark, sf_dir).select(
@@ -721,6 +717,6 @@ def term_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return tf.unionAll(bg)
 
-    # r11: static union over immutable inputs — prepared once per
+    # static union over immutable inputs — prepared once per
     # process (exp_plan_vs_exec: 0.46 s construction vs 0.73 exec)
     return _prepared_plan(spark, "term_stats_suite", sf_dir, build)

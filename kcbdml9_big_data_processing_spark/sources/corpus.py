@@ -43,8 +43,7 @@ _CORRUPT = "_corrupt_record"
 #: violation set is replicated to every executor, so past this many
 #: ids (~32 MB of longs plus hash-relation overhead at 4M) the pass
 #: falls back to shuffle joins instead of letting the invariant
-#: ENFORCER become the driver OOM (r14 verdict "what's wrong" #1: the
-#: contract was documented but nothing enforced it).
+#: ENFORCER become the driver OOM.
 _DUP_BROADCAST_CAP = 4_000_000
 
 
@@ -99,7 +98,7 @@ def unique_doc_ids(
     orderable (struct min); frames carrying maps should drop them
     first.
 
-    100 TB shape (r13 verdict "what's wrong" #1): the naive
+    100 TB shape: the naive
     ``groupBy(doc_id).agg(min(struct(everything)))`` moves every
     document's TEXT through the exchange to adjudicate ids that are
     almost always already unique. Instead the pass is keyed on the
@@ -117,16 +116,14 @@ def unique_doc_ids(
     point (a landing area's redeliveries, a crawl's boilerplate
     collisions); a corpus where most ids collide should go through
     exact dedup's content keying instead. The contract is ENFORCED,
-    not assumed (r14 verdict), and since r16 enforcement is FREE in
-    the common case instead of a third lineage evaluation (r15
-    ADVICE): the violation set is fetched with ``take(cap + 1)`` —
+    not assumed, and enforcement is FREE in the common case: the
+    violation set is fetched with ``take(cap + 1)`` —
     one action on the already-column-pruned aggregation, no text
     touched, driver memory bounded by the SAME cap the broadcast
     itself implies (a broadcast collects to the driver anyway) — and
     when it fits, BOTH joins run against the fetched ids as a local
     relation, so ``df``'s aggregation lineage is evaluated exactly
-    ONCE per call (the old hinted path evaluated it twice, the r15
-    eager count three times). Past ``max_broadcast_ids`` the pass
+    ONCE per call. Past ``max_broadcast_ids`` the pass
     warns loudly and falls back to lineage shuffle joins — slower
     (corpus text rides the exchange), but an upstream bug that
     duplicates most ids (a crawler stamping one id, an epoch
@@ -137,7 +134,7 @@ def unique_doc_ids(
     duplicate filter; above it, the fallback still collapses
     identically.
 
-    PRECONDITION — deterministic lineage (r14 ADVICE): the pass may
+    PRECONDITION — deterministic lineage: the pass may
     evaluate ``df``'s lineage more than once (once below the cap; the
     over-cap fallback adds the two join evaluations). A frame whose
     lineage is non-deterministic across scans (rand()/uuid()-derived
@@ -170,8 +167,7 @@ def unique_doc_ids(
         if small:
             # the fetched ids ARE the violation set: replan both joins
             # against a local relation so the corpus aggregation never
-            # re-executes (r15 ADVICE — the eager count used to be a
-            # third full evaluation of df's pruned agg lineage)
+            # re-executes
             dup_ids = df.sparkSession.createDataFrame(
                 fetched, schema=dup_ids.schema
             )
@@ -195,8 +191,8 @@ def unique_doc_ids(
     # NULL doc_id (content_doc_ids refuses at execution), but this is
     # a public invariant-enforcer for ARBITRARY frames, and a plain
     # join key treats NULL != NULL — multiple null-id rows would all
-    # sail through the anti join where the old groupBy collapsed them
-    # to one (r14 self-review). Null-safe equality keeps the null
+    # sail through the anti join where a groupBy collapses them to
+    # one. Null-safe equality keeps the null
     # group a group, exactly like groupBy does.
     on = F.col("doc_id").eqNullSafe(F.col("__dup_id"))
     clean = df.join(hinted, on, "left_anti")
@@ -410,7 +406,7 @@ def _csv_header_predicate(columns: tuple[str, ...], sep: str) -> Column:
     """Is this raw line the layout's header row? Field-wise
     comparison after stripping a trailing ``\\r`` (CRLF files) and
     trimming each field ('text, lang') — byte equality missed both
-    and let the header land silently as a junk data row (r13 ADVICE).
+    and let the header land silently as a junk data row.
     Also the CLI's did-any-line-match probe for the no-header-found
     warning. Quoted header fields are out of scope: headers are bare
     column names by construction (``columns`` validates against the
@@ -456,10 +452,10 @@ def ingest_csv(
     quarantine's verbatim-line contract. With ``header=True`` every
     line that IS the header row is dropped — per file, since all
     files of one layout share it; the match is field-wise after
-    trimming a trailing ``\\r`` and per-field whitespace (r13 ADVICE:
-    a CRLF file, or a header written ``'text, lang'``, never matched
-    the old byte-equality and its header landed silently as a junk
-    data row — all-string layouts have no type mismatch to flag it).
+    trimming a trailing ``\\r`` and per-field whitespace (a CRLF file,
+    or a header written ``'text, lang'``, never matches byte equality,
+    and its header would land silently as a junk data row — all-string
+    layouts have no type mismatch to flag it).
     A data row that equals the header up to field whitespace is
     degenerate under the quality gate anyway."""
     fields = {f.name: f for f in DOCUMENTS_SCHEMA}

@@ -76,7 +76,7 @@ def curate_stream(
     # the stream and the batch curator must agree on what "same
     # content" means, or a doc the stream admits as unique could be
     # exact-dup by batch rules and vice versa — one definition, zero
-    # drift (a hand-copied hash lived here through r13)
+    # drift
     from ..queries.dedup import content_hash_expr
 
     return (

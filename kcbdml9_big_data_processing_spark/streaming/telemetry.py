@@ -128,7 +128,7 @@ def make_state_listener(
     :func:`state_plateaus` work on a live series unchanged — the
     monitoring story and the test guard share one code path. The live
     series is a RING of the last ``max_batches`` batches per query
-    (r14 ADVICE: an uncapped append-per-batch list means the
+    (an uncapped append-per-batch list would mean the
     state-growth watchdog itself carries unbounded driver state over
     the week-long deployments it exists for — the same failure mode,
     one level up; 256 ≈ recentProgress's ~100 with headroom). The
@@ -137,14 +137,14 @@ def make_state_listener(
     what a state-growth ALARM should key on anyway — a violation must
     not age out of the window before anyone looks.
 
-    ``store`` (r15 review): listeners are SESSION-wide — every
+    ``store``: listeners are SESSION-wide — every
     registered listener receives every query's progress events — so
     two consumers sharing the default ``LAST_STATE['live']`` dict
     would double-append each other's batches and read each other's
     series across job restarts. A consumer owning its lifecycle (the
     StreamingJob watchdog) passes its own dict and reads only that;
     the global default stays for ad-hoc single-listener use.
-    ``accept`` (second r15 review pass): an optional ``name -> bool``
+    ``accept``: an optional ``name -> bool``
     predicate evaluated per event — without it a per-job store still
     RECEIVES every session query's series (read-side filtering alone
     leaves foreign rings consuming this consumer's driver memory and

@@ -2,11 +2,11 @@
 
 Queries that materialize through the filesystem (bounded-stream
 parquet drains, persisted ANN/dedup index caches, bucketed-table
-scratch) used to ``tempfile.mkdtemp`` directly and never clean up —
-every bench/test run leaked a handful of directories into /tmp
-(ADVICE r6). This module gives them one root per process, removed at
-interpreter exit, so every scratch path disappears together without
-each call site owning a ``finally``. Within the process the dirs stay
+scratch, the registry's build-once artifacts) get their directories
+here instead of from a bare ``tempfile.mkdtemp``, which would leak a
+handful of directories per bench/test run. One root per process,
+removed at interpreter exit, so every scratch path disappears together
+without each call site owning a ``finally``. Within the process the dirs stay
 alive as long as any DataFrame might lazily re-read them — exactly
 the lifetime a cached persisted index or a drained sink needs.
 """

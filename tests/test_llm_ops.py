@@ -1035,6 +1035,40 @@ def test_bucket_meta_absent_is_none_unreadable_raises(spark, tmp_path):
         _bucket_meta(spark, str(tmp_path / "broken"))
 
 
+def test_semantic_meta_missing_raises_unreadable_propagates(spark, tmp_path):
+    """Every build writes a semantic index's blocking policy, so a
+    generation without ``meta`` raises naming the rebuild instead of
+    searching under a guessed ``label`` policy, and an unreadable
+    ``meta`` propagates its read error."""
+    import shutil
+
+    from kcbdml9_big_data_processing_spark.queries.similarity import (
+        _gen_current,
+        _sem_meta,
+        build_semantic_index,
+    )
+    from conftest import SF_SMOKE
+    from kcbdml9_big_data_processing_spark.sources.parquet import read_table
+
+    corpus = read_table(spark, SF_SMOKE, "embeddings").select(
+        "vec_id",
+        F.lit("all").alias("label"),
+        F.expr("transform(embedding, x -> cast(x as double))").alias("emb"),
+    )
+    root = str(tmp_path / "semidx")
+    build_semantic_index(corpus, root, blocking="label")
+    meta = f"{_gen_current(spark, root)}/meta"
+    shutil.rmtree(meta)
+    with pytest.raises(FileNotFoundError, match="build_semantic_index"):
+        _sem_meta(spark, root)
+
+    broken = tmp_path / "broken" / "meta"
+    broken.mkdir(parents=True)
+    (broken / "part-0.parquet").write_text("not parquet")
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        _sem_meta(spark, str(tmp_path / "broken"))
+
+
 def test_semantic_index_label_ivf_blocking(spark, tmp_path):
     """r7 verdict #1 — production-granularity blocking: a semantic
     index built with ``label_ivf`` composite blocking (frozen coarse

@@ -123,7 +123,7 @@ import pytest
 
 from kcbdml9_big_data_processing_spark.plans.inspect import bnlj_build_sides
 from kcbdml9_big_data_processing_spark.queries import QUERIES
-from kcbdml9_big_data_processing_spark.queries.registry import _PREPARED_PLANS
+from kcbdml9_big_data_processing_spark.queries.registry import clear_prepared_plans
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
@@ -145,7 +145,7 @@ def test_bnlj_build_sides_are_scalar(spark, name, monkeypatch):
     from kcbdml9_big_data_processing_spark.queries import dedup as _dedup
 
     monkeypatch.setattr(_dedup, "_SKIP_RESULT_TRUNCATION", True)
-    _PREPARED_PLANS.clear()
+    clear_prepared_plans()
     df = QUERIES[name].fn(spark, SF_SMOKE)
     for summary, scalar_ok, text in bnlj_build_sides(df):
         if scalar_ok:
@@ -240,7 +240,7 @@ def test_plan_shuffles_and_python_boundary(spark, name, monkeypatch):
     from kcbdml9_big_data_processing_spark.queries import dedup as _dedup
 
     monkeypatch.setattr(_dedup, "_SKIP_RESULT_TRUNCATION", True)
-    _PREPARED_PLANS.clear()
+    clear_prepared_plans()
     df = QUERIES[name].fn(spark, SF_SMOKE)
 
     nodes = python_eval_nodes(df)

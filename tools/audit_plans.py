@@ -74,14 +74,14 @@ def main() -> int:
         # fresh frame: queryExecution caches the AQE-wrapped plan on
         # first access, which would hide the codegen markers. Queries
         # routed through _prepared_plan return the SAME DataFrame
-        # object on re-invocation (that is the point of the cache), so
-        # evict it first or the "fresh" frame is the stale one and the
-        # span count reads 0 (r10).
-        from kcbdml9_big_data_processing_spark.queries.similarity import (
-            _PREPARED_PLANS,
+        # object on re-invocation (that is the point of the store), so
+        # drop prepared plans first or the "fresh" frame is the stale
+        # one and the span count reads 0.
+        from kcbdml9_big_data_processing_spark.queries.registry import (
+            clear_prepared_plans,
         )
 
-        _PREPARED_PLANS.clear()
+        clear_prepared_plans()
         spans = wholestage_codegen_spans(spec.fn(spark, sf_dir))
         # a checkpoint-truncated result plans as a bare RDD scan — say
         # so instead of presenting an artificially clean "0 exchanges"

@@ -1,9 +1,9 @@
 """Split a registered query's per-call cost into (a) DataFrame
 construction + Catalyst analysis and (b) execution, the diagnostic
-that found the ann/ngram prepared-plan wins (r9/r10): if (a) is a
-large share and the query's inputs are immutable per (app, sf_dir),
-routing it through similarity._prepared_plan converts (a) into a
-pay-once cost without touching what executes.
+that found the ann/ngram prepared-plan wins: if (a) is a large share
+and the query's inputs are immutable per (app, sf_dir), routing it
+through registry._prepared_plan converts (a) into a pay-once cost
+without touching what executes.
 
 Queries that cache/prepare internally (ngram/minhash/ann suites)
 show construction ~0 after their warm-up — that's the pattern

@@ -36,7 +36,7 @@ def main() -> int:
     from kcbdml9_big_data_processing_spark.queries import QUERIES
     from kcbdml9_big_data_processing_spark.queries import dedup as _dedup
     from kcbdml9_big_data_processing_spark.queries.registry import (
-        _PREPARED_PLANS,
+        clear_prepared_plans,
     )
     from kcbdml9_big_data_processing_spark.session import get_spark
 
@@ -48,7 +48,7 @@ def main() -> int:
     for name, spec in sorted(QUERIES.items()):
         if name.startswith("stream_"):
             continue
-        _PREPARED_PLANS.clear()
+        clear_prepared_plans()
         out[name] = shuffle_exchange_count(spec.fn(spark, SF))
         print(f"{name}: {out[name]}")
     with open(OUT, "w") as f:

@@ -42,7 +42,7 @@ def main() -> int:
     from kcbdml9_big_data_processing_spark.queries import QUERIES
     from kcbdml9_big_data_processing_spark.queries import dedup as _dedup
     from kcbdml9_big_data_processing_spark.queries.registry import (
-        _PREPARED_PLANS,
+        clear_prepared_plans,
     )
     from kcbdml9_big_data_processing_spark.session import get_spark
 
@@ -53,7 +53,7 @@ def main() -> int:
     for name, spec in sorted(QUERIES.items()):
         if name.startswith("stream_"):
             continue
-        _PREPARED_PLANS.clear()
+        clear_prepared_plans()
         df = spec.fn(spark, SF)
         out[name] = summarize(scan_read_schemas(df))
         floors[name] = pushed_predicate_count(df)
