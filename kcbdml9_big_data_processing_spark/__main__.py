@@ -266,9 +266,9 @@ def _index_stats(spark, family: str, path: str) -> int:
         # families below
         path = _gen_current(spark, path)
         print(f"generation_dir={path}")
-        from .queries.dedup import _dir_has_parquet
+        from .fs import dir_has_parquet
 
-        if _dir_has_parquet(spark, f"{path}/hashes"):
+        if dir_has_parquet(spark, f"{path}/hashes"):
             print("exact_hash_map=yes")
         else:
             print(
@@ -781,15 +781,15 @@ def _curate_main(argv: list[str], spark=None) -> int:
 
     ``--run-root`` is the CRASH-SAFE orchestration of the same
     pipeline (jobs/runs.py): kept/decisions/index maintenance stage
-    under a versioned run dir and publish at one run_meta append, so
+    under a versioned run dir and publish at one run_meta record, so
     a mid-run crash can never tear the daily-incremental contract
     (archive = prior kept set, index in lockstep). First run full,
     later runs incremental against the last PUBLISHED run; recovery
     flags --retry-torn / --repair-index; exit 4 = a torn prior
     attempt needs one of them (stderr names which). ``--vacuum-runs``
     reclaims run dirs superseded by the latest full run's
-    lineage, keeping ``--retain-runs`` (default 2) of them — meta
-    rows and the standing archive are never touched."""
+    lineage, keeping ``--retain-runs`` (default 2) of them — run
+    records and the standing archive are never touched."""
     ap = argparse.ArgumentParser(prog="kcbdml9-spark curate")
     ap.add_argument(
         "--docs",
@@ -808,7 +808,7 @@ def _curate_main(argv: list[str], spark=None) -> int:
         default=None,
         metavar="ROOT",
         help="CRASH-SAFE MODE: stage kept+decisions+index maintenance"
-        " under ROOT/runs/r{N} and publish with one run_meta append;"
+        " under ROOT/runs/r{N} and publish with one run_meta record;"
         " first run is full, later runs incremental against the last"
         " published run (jobs/runs.py). Replaces --out-kept/"
         "--out-decisions/--index/--build-index/"
@@ -843,7 +843,7 @@ def _curate_main(argv: list[str], spark=None) -> int:
         action="store_true",
         help="RUN-ROOT: delete run dirs superseded by the latest full"
         " run's lineage, keeping --retain-runs most recent of them"
-        " (meta rows are never pruned; the standing archive is never"
+        " (run records are never pruned; the standing archive is never"
         " touched)",
     )
     ap.add_argument(

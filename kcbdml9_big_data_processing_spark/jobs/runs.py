@@ -13,8 +13,8 @@ down: its batch job appends four tables with no transaction —
 BatchJobImpl.scala:90-100; SURVEY.md §7.4 flagged it; the index family's
 generations fix it for indexes.)
 
-This module lifts the index family's recipe (versioned dirs + a tiny
-append-only meta table as the single atomicity point —
+This module lifts the index family's recipe (versioned dirs + one
+small commit record as the single atomicity point —
 queries/similarity._gen_begin/_gen_commit) to the RUN level:
 
 - every run stages ALL its outputs under ``{root}/runs/r{N:06d}``
@@ -22,19 +22,22 @@ queries/similarity._gen_begin/_gen_commit) to the RUN level:
 - the index lives at ``{root}/index`` and keeps its own generation
   machinery (a full run's build commits a fresh generation; an
   incremental run's extend appends — bracketed by markers, below);
-- the run goes live only at the single ``{root}/run_meta`` append.
-  Readers (the next run, external consumers) resolve the current
-  archive as the max-run_id row's ``{dir}/kept`` — an unpublished run
-  dir is INVISIBLE.
+- the run goes live only at its one record in the ``{root}/run_meta``
+  log (``r{N:06d}.json``, committed by the driver with an atomic
+  rename — fs.write_record). Readers (the next run, external
+  consumers) resolve the current archive as the max-run_id record's
+  ``{dir}/kept`` — an unpublished run dir is INVISIBLE.
 
 Torn-run detection and idempotent retry: the next run_id is always
 ``latest committed + 1``, so a crashed attempt and its retry compute
 the SAME run dir. Finding that dir already present means the prior
-attempt tore somewhere before its meta append; the recovery depends
-on how far it got, read off the staged markers:
+attempt tore somewhere before its run record; the recovery depends
+on how far it got, read off the staged records (``intent``, written
+at run start with the mode and the index generation it observed, and
+the ``index_started``/``index_done`` markers):
 
 - ``index_done`` present — every write finished, only the publish is
-  missing: the retry APPENDS THE META ROW AND MOVES ON (auto-resume;
+  missing: the retry COMMITS THE RUN RECORD AND MOVES ON (auto-resume;
   the new batch then curates against the just-published archive as
   the next run). Nothing recomputes.
 - ``index_started`` present without ``index_done``, on an INCREMENTAL
@@ -46,10 +49,10 @@ on how far it got, read off the staged markers:
   generation layer's whole point), clears the torn dir, and redoes
   the batch.
 - a FULL intent whose index BUILD already COMMITTED its generation
-  (crash between build_dedup_index's internal gen_meta append and the
+  (crash between build_dedup_index's internal gen_meta commit and the
   ``index_done`` marker) — detected by comparing the index's current
-  generation version against the ``index_gen`` marker staged at run
-  start (without it this window would classify as partial_stage,
+  generation version against the one the ``intent`` record staged at
+  run start (without it this window would classify as partial_stage,
   and a --retry-torn redo in incremental mode would dedup against a
   generation reflecting the UNPUBLISHED kept set, silently dropping
   batch docs absent from the published archive).
@@ -81,8 +84,8 @@ by readers — :func:`standing_archive` never opens them — and would
 otherwise be kept forever, O(runs × corpus) storage.
 :func:`vacuum_runs` deletes
 superseded run dirs keeping the ``retain`` most recent of them (the
-index family's retention-not-locking posture: meta rows are never
-pruned — one skinny row per run — and a reader already planned on a
+index family's retention-not-locking posture: run records are never
+pruned — one small record per run — and a reader already planned on a
 retained dir finishes against intact files).
 """
 
@@ -91,12 +94,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..fs import delete_recursive as _delete
-from ..fs import dir_has_parquet, exists as _exists
+from ..fs import exists as _exists, read_log, read_record, write_record
 
-_RUN_META_SCHEMA = "run_id int, dir string, mode string"
-_INTENT_SCHEMA = "mode string"
-_MARK_SCHEMA = "ok boolean"
-_INDEX_GEN_SCHEMA = "version int"
+#: the recovery an unreadable run-root record names
+_REBUILD = (
+    "start a fresh run root (curate --run-root NEW_ROOT) over the"
+    " standing corpus"
+)
 
 
 class TornRunError(RuntimeError):
@@ -121,16 +125,14 @@ def _write_stage(df: DataFrame, path: str) -> None:
 
 
 def _mark(spark: SparkSession, path: str) -> None:
-    """Stage a step marker: a one-row parquet table (committer-atomic
-    like every other write here — a crashed marker write is absent,
-    which is the conservative reading for every marker below)."""
-    spark.createDataFrame([(True,)], _MARK_SCHEMA).write.mode(
-        "overwrite"
-    ).parquet(path)
+    """Stage a step marker: one record (atomic like every commit record
+    here — a crashed marker write is absent, which is the conservative
+    reading for every marker below)."""
+    write_record(spark, path, {"ok": True})
 
 
 def _marked(spark: SparkSession, path: str) -> bool:
-    return dir_has_parquet(spark, path)
+    return read_record(spark, path, _REBUILD) is not None
 
 
 def run_dir(root: str, run_id: int) -> str:
@@ -146,44 +148,24 @@ def _index_version(spark: SparkSession, root: str) -> int:
     return 0 if row is None else int(row["version"])
 
 
-def _staged_index_version(spark: SparkSession, rdir: str) -> int | None:
-    """The ``index_gen`` marker staged at run start — the index
-    generation the attempt OBSERVED before doing any index work — or
-    None for a dir torn before the marker write."""
-    path = f"{rdir}/index_gen"
-    if not _marked(spark, path):
-        return None
-    row = spark.read.schema(_INDEX_GEN_SCHEMA).parquet(path).first()
-    return None if row is None else int(row["version"])
-
-
 def index_root(root: str) -> str:
     return f"{root}/index"
 
 
 def run_rows(spark: SparkSession, root: str) -> list[dict]:
-    """Every COMMITTED run's meta row, ascending by run_id ([] on a
-    fresh root). Absence decided by a driver-side FS check, not a
-    caught read error (the _gen_meta_row posture: a transient failure
-    must propagate, not misread as 'fresh root' and silently re-run a
-    full curation). Bounded driver rows: one ~3-field row per
-    PUBLISHED run — days, not data."""
-    meta_dir = f"{root}/run_meta"
-    if not _exists(spark, meta_dir):
-        return []
-    return [
-        r.asDict()
-        for r in (
-            spark.read.schema(_RUN_META_SCHEMA)
-            .parquet(meta_dir)
-            .orderBy("run_id")
-            .collect()
-        )
-    ]
+    """Every COMMITTED run's record, ascending by run_id ([] on a
+    fresh root). Driver file reads of one 3-field record per PUBLISHED
+    run — days, not data. Strict: a run_meta dir that holds anything
+    but records raises instead of reading as a fresh root (which would
+    silently re-run a full curation)."""
+    return sorted(
+        read_log(spark, f"{root}/run_meta", _REBUILD),
+        key=lambda r: r["run_id"],
+    )
 
 
 def latest_run(spark: SparkSession, root: str) -> dict | None:
-    """Newest committed run's meta row as a dict, or None."""
+    """Newest committed run's record as a dict, or None."""
     rows = run_rows(spark, root)
     return rows[-1] if rows else None
 
@@ -212,18 +194,12 @@ def standing_archive(spark: SparkSession, root: str) -> DataFrame | None:
 def _commit(
     spark: SparkSession, root: str, run_id: int, rdir: str, mode: str
 ) -> None:
-    """THE commit point: one append-only meta row flips the run live."""
-    spark.createDataFrame(
-        [(run_id, rdir, mode)], _RUN_META_SCHEMA
-    ).write.mode("append").parquet(f"{root}/run_meta")
-
-
-def _intent(spark: SparkSession, rdir: str) -> str | None:
-    path = f"{rdir}/intent"
-    if not _marked(spark, path):
-        return None
-    row = spark.read.schema(_INTENT_SCHEMA).parquet(path).first()
-    return None if row is None else row["mode"]
+    """THE commit point: one run record flips the run live."""
+    write_record(
+        spark,
+        f"{root}/run_meta/r{run_id:06d}.json",
+        {"run_id": run_id, "dir": rdir, "mode": mode},
+    )
 
 
 def _torn_state(
@@ -236,21 +212,21 @@ def _torn_state(
     torn dir needs.
 
     ``index_ahead``: the index's committed generation
-    version moved past the ``index_gen`` marker this attempt staged
-    at start — a full build's gen_meta append landed before the crash
+    version moved past the one this attempt's ``intent`` record staged
+    at start — a full build's gen_meta commit landed before the crash
     (the window between build_dedup_index's internal commit and the
     ``index_done`` marker), so the CURRENT index reflects the torn
     run's unpublished kept set. A plain redo in incremental mode
     would dedup the batch against content absent from the published
     archive — silent row loss — so this state demands the same
     rebuild-over-committed-archive repair as a torn extend."""
-    intent = _intent(spark, rdir)
+    staged = read_record(spark, f"{rdir}/intent", _REBUILD)
+    intent = None if staged is None else staged["mode"]
     if _marked(spark, f"{rdir}/index_done") and intent is not None:
         return "complete", intent
     if _marked(spark, f"{rdir}/index_started") and intent == "incremental":
         return "partial_extend", intent
-    staged_v = _staged_index_version(spark, rdir)
-    if staged_v is not None and _index_version(spark, root) > staged_v:
+    if staged is not None and _index_version(spark, root) > staged["index_version"]:
         return "index_ahead", intent
     return "partial_stage", intent
 
@@ -261,7 +237,7 @@ def run_status(spark: SparkSession, root: str) -> dict:
     operator's first move after a crashed curate, side-effect-free."""
     rows = run_rows(spark, root)
     for r in rows:
-        # vacuum visibility: meta rows outlive their
+        # vacuum visibility: run records outlive their
         # vacuumed dirs, so status distinguishes a run you can still
         # read from one retained only as lineage history
         r["present"] = _exists(spark, r["dir"])
@@ -317,8 +293,8 @@ def _resolve_torn(
     if state == "complete":
         print(
             f"curate: publishing torn-but-complete prior run r{run_id}"
-            f" ({intent}) — every artifact was staged, only the meta"
-            " commit was lost; nothing recomputes.",
+            f" ({intent}) — every artifact was staged, only the run"
+            " record was lost; nothing recomputes.",
             file=sys.stderr,
         )
         _commit(spark, root, run_id, rdir, intent)
@@ -374,7 +350,7 @@ def _resolve_torn(
     if not retry_torn:
         raise TornRunError(
             f"torn curate run at {rdir}: a prior attempt crashed"
-            " before its meta commit (the run is unpublished and"
+            " before its run record (the run is unpublished and"
             " invisible to readers). Re-run with retry_torn=True"
             " (--retry-torn) to discard the staged partial outputs"
             " and redo the batch."
@@ -404,7 +380,7 @@ def curate_run_root(
     also REBUILDS the index), else the daily incremental batch against
     the standing index, which holds the CUMULATIVE standing archive
     (:func:`standing_archive`). All outputs stage under a versioned
-    run dir and publish at one meta append; see the module docstring
+    run dir and publish at one run record; see the module docstring
     for the crash matrix. Returns ``{"run_id", "dir", "mode"}`` of the
     PUBLISHED run — which is the auto-published TORN run (plus
     ``"already_published": True``) when the caller's batch turns out
@@ -452,7 +428,7 @@ def _curate_run_root_locked(
         if _resolve_torn(
             spark, root, prior, nxt, rdir, retry_torn, repair_index
         ):
-            rows = run_rows(spark, root)  # the publish just appended
+            rows = run_rows(spark, root)  # the publish just committed
             prior = rows[-1]
             nxt += 1
             rdir = run_dir(root, nxt)
@@ -522,16 +498,16 @@ def _curate_run_root_locked(
                 "span/rarity policies are full-corpus-statistics"
                 " stages; pass --full to apply them on a re-freeze"
             )
-    spark.createDataFrame([(mode,)], _INTENT_SCHEMA).write.mode(
-        "overwrite"
-    ).parquet(f"{rdir}/intent")
-    # observe the index generation BEFORE any index work:
-    # a later torn-state classification compares the index's committed
-    # version against this to catch a full build whose gen_meta append
-    # landed before the crash (see _torn_state's index_ahead)
-    spark.createDataFrame(
-        [(_index_version(spark, root),)], _INDEX_GEN_SCHEMA
-    ).write.mode("overwrite").parquet(f"{rdir}/index_gen")
+    # the intent record also carries the index generation observed
+    # BEFORE any index work: a later torn-state classification compares
+    # the index's committed version against it to catch a full build
+    # whose gen_meta commit landed before the crash (see _torn_state's
+    # index_ahead)
+    write_record(
+        spark,
+        f"{rdir}/intent",
+        {"mode": mode, "index_version": _index_version(spark, root)},
+    )
 
     curator = TrainingDataCurator(cfg)
     if mode == "incremental":
@@ -549,8 +525,8 @@ def _curate_run_root_locked(
     )
     if mode == "full":
         # the build is generation-committed; the crash window between
-        # its internal gen_meta append and index_done is caught by the
-        # index_gen marker above (_torn_state's index_ahead)
+        # its internal gen_meta commit and index_done is caught by the
+        # intent record's index_version (_torn_state's index_ahead)
         build_dedup_index(kept_stored, index_root(root))
         _mark(spark, f"{rdir}/index_done")
     else:
@@ -573,9 +549,9 @@ def vacuum_runs(
     (without this, every run's full kept parquet lives forever —
     O(runs × corpus) dead weight). The index family's
     retention-not-locking posture, lifted to the run level
-    (similarity.vacuum_index_generations): meta rows are never pruned
-    (one skinny row per run; :func:`run_status` marks a vacuumed
-    run's row ``present: False``), a reader already planned on a
+    (similarity.vacuum_index_generations): run records are never
+    pruned (one small record per run; :func:`run_status` marks a
+    vacuumed run's record ``present: False``), a reader already planned on a
     retained dir finishes against intact files, and the standing
     lineage itself is never touched — so the day-N incremental flow
     is oblivious to vacuuming. The torn next-run dir (if any) is not

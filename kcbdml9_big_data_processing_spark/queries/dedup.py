@@ -29,12 +29,19 @@ Scale discipline (the whole point of these formulations):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..fs import (
+    delete_recursive,
+    dir_has_parquet,
+    hadoop_path,
+    read_log,
+    write_record,
+)
 from ..sources.parquet import read_table
 from .registry import _prepared_plan, build_once_dir, register
-from .similarity import locked_writer
+from .similarity import _INDEX_REBUILD, locked_writer
 
 #: id offset for the duplicated copy of the corpus
 _DUP_OFFSET = 10_000_000
@@ -392,7 +399,6 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 _STOP_SCHEMA = "k long"
 _POSTINGS_SCHEMA = "doc_id long, n int, k long"
 _HASHES_SCHEMA = "content_hash string, canonical_id long"
-_HASHES_MAX_SCHEMA = "max_id long"
 
 
 def content_hash_expr(col: str = "text"):
@@ -411,9 +417,9 @@ def _write_hashes(docs: DataFrame, path: str, mode: str) -> None:
     ``docs``. ~40 bytes per doc — the artifact that lets an incremental
     run answer "has the archive seen this content?" without ever
     re-scanning archive text (an O(archive) rehash per batch would be
-    the one true scale-killer). Append-only, same crash model as
-    bucket_meta: a parquet append lands via the committer's rename, so a
-    crashed append is never visible. Readers aggregate
+    the one true scale-killer). Append-only: a parquet append lands via
+    the committer's rename, so a crashed append is never visible.
+    Readers aggregate
     min(canonical_id), so a duplicate appended row can only re-assert
     the same canonical."""
     (
@@ -441,17 +447,15 @@ def _stored_map_max(spark: SparkSession, path: str) -> int | None:
     return None if row["m"] is None else int(row["m"])
 
 
-def _write_hashes_max_row(spark: SparkSession, path: str, m: int, mode: str) -> None:
-    (
-        spark.createDataFrame([(int(m),)], _HASHES_MAX_SCHEMA)
-        .write.mode(mode)
-        .parquet(f"{path}/hashes_max")
-    )
+def _add_hashes_max(spark: SparkSession, path: str, m: int) -> None:
+    """One ``hashes_max`` record, named by its value: a crash-retried
+    extend rewrites its own earlier record with the same content."""
+    write_record(spark, f"{path}/hashes_max/{int(m)}.json", {"max_id": int(m)})
 
 
 def _extend_hashes_max(new_docs: DataFrame, path: str) -> None:
-    """Maintain the ``hashes_max`` sidecar on extend — one skinny row
-    per write; readers take the max over all rows, giving
+    """Maintain the ``hashes_max`` sidecar on extend — one record per
+    write; readers take the max over all records, giving
     run_incremental's monotonic-id guard an O(1) answer instead of a
     full scan of the hashes map per batch.
 
@@ -467,27 +471,20 @@ def _extend_hashes_max(new_docs: DataFrame, path: str) -> None:
     which is exact."""
     batch_max = new_docs.agg(F.max("doc_id").alias("m")).first()["m"]
     if batch_max is not None:
-        _write_hashes_max_row(new_docs.sparkSession, path, batch_max, "append")
+        _add_hashes_max(new_docs.sparkSession, path, batch_max)
 
 
 def dedup_index_hashes_max(spark: SparkSession, path: str) -> int | None:
     """Upper bound on the ids recorded in the stored ``hashes`` map
-    (max over the sidecar's per-write rows), or None when the sidecar
-    is absent (an index built over zero docs and not yet extended —
-    the precise-scan fallback applies). See :func:`_extend_hashes_max`
-    for the crash posture."""
+    (max over the sidecar's per-write records), or None when it holds
+    none (an index built over zero docs and not yet extended — the
+    precise-scan fallback applies). See :func:`_extend_hashes_max` for
+    the crash posture."""
     from .similarity import _gen_current
 
     path = _gen_current(spark, path)
-    if not _dir_has_parquet(spark, f"{path}/hashes_max"):
-        return None
-    row = (
-        spark.read.schema(_HASHES_MAX_SCHEMA)
-        .parquet(f"{path}/hashes_max")
-        .agg(F.max("max_id").alias("m"))
-        .first()
-    )
-    return None if row["m"] is None else int(row["m"])
+    rows = read_log(spark, f"{path}/hashes_max", _INDEX_REBUILD)
+    return max((r["max_id"] for r in rows), default=None)
 
 
 def dedup_index_hashes(spark: SparkSession, path: str) -> DataFrame:
@@ -509,7 +506,7 @@ def dedup_index_hashes(spark: SparkSession, path: str) -> DataFrame:
     from .similarity import _gen_current
 
     path = _gen_current(spark, path)
-    if not _dir_has_parquet(spark, f"{path}/hashes"):
+    if not dir_has_parquet(spark, f"{path}/hashes"):
         raise FileNotFoundError(
             f"dedup index at {path} has no 'hashes' exact-dedup map;"
             " rebuild it with build_dedup_index over the standing"
@@ -546,7 +543,7 @@ def build_dedup_index(docs: DataFrame, path: str) -> None:
     Crash-safe generations, as for every index family: the build
     stages all three tables into a fresh
     ``{path}/g{N}`` dir and goes live only at the single gen_meta
-    commit append — a periodic full re-freeze over a LIVE root is
+    commit record — a periodic full re-freeze over a LIVE root is
     therefore safe (a crash anywhere before the commit leaves the
     previous generation fully current, a retry restages the same
     dir), and readers planned against the previous generation finish
@@ -568,8 +565,11 @@ def build_dedup_index(docs: DataFrame, path: str) -> None:
         # read), not from a second full pass over the caller's text
         # frame; staging order is commit-gated anyway
         map_max = _stored_map_max(spark, gdir)
+        # a retried build restages this dir: drop the crashed
+        # attempt's records so the bound stays exact
+        delete_recursive(spark, f"{gdir}/hashes_max")
         if map_max is not None:
-            _write_hashes_max_row(spark, gdir, map_max, "overwrite")
+            _add_hashes_max(spark, gdir, map_max)
         (
             prepped.select(F.explode("sh").alias("k"))
             .groupBy("k")
@@ -685,12 +685,12 @@ def compact_dedup_index(
 
     Crash safety: BOTH the base and the append tail are
     versioned directories, and the SINGLE commit point is the
-    append-only ``bucket_meta`` row (readers take the max-version
-    row; a parquet append lands via the committer's rename, so a
-    half-written row is never visible). Truncating a shared tail
+    ``bucket_meta`` log's record ``v{N}.json`` (readers take the
+    max-version record; fs.write_record's rename makes a half-written
+    record invisible). Truncating a shared tail
     BEFORE flipping the meta would let a crash between the two
     silently drop every posting appended since the last compaction;
-    here a crash anywhere before the meta append leaves
+    here a crash anywhere before the meta record leaves
     the previous (base_vN, tail_vN) pair fully intact and current;
     a crash after it leaves the new pair current with the old one
     lingering until the next vacuum. Superseded versions are
@@ -735,10 +735,17 @@ def compact_dedup_index(
     spark.createDataFrame([], _POSTINGS_SCHEMA).write.mode(
         "overwrite"
     ).parquet(new_tail)
-    # COMMIT: one appended meta row flips readers to (new_dir, new_tail)
-    spark.createDataFrame(
-        [(n_buckets, new_dir, version, new_tail)], _META_SCHEMA
-    ).write.mode("append").parquet(f"{path}/bucket_meta")
+    # COMMIT: one meta record flips readers to (new_dir, new_tail)
+    write_record(
+        spark,
+        f"{path}/bucket_meta/v{version}.json",
+        {
+            "n_buckets": n_buckets,
+            "dir": new_dir,
+            "version": version,
+            "tail": new_tail,
+        },
+    )
     spark.catalog.refreshByPath(new_tail)
     # the undecorated impl: compact already holds the ROOT writer
     # lock; the decorated public vacuum would key a SECOND lock on the
@@ -757,7 +764,7 @@ def vacuum_dedup_index(spark: SparkSession, path: str, retain: int = 2) -> None:
     reader planned against generation N survives the compaction that
     creates N+1 (with the default ``retain=2``, N's dirs are deleted
     only when N+2 is committed — a full maintenance cycle later).
-    Meta rows are never pruned: they are one skinny row per
+    Meta records are never pruned: they are one small record per
     compaction and the max-version read ignores stale ones. Whole
     superseded BUILD generations are vacuumed separately by
     similarity.vacuum_index_generations."""
@@ -774,8 +781,6 @@ def _vacuum_dedup_index_impl(
     if meta is None:
         return
     cutoff = meta["version"] - retain + 1
-    from ..fs import hadoop_path
-
     root_p, fs = hadoop_path(spark, path)
     import re
 
@@ -798,36 +803,19 @@ def _bucketed_table_name(path: str) -> str:
     return "kcbdml9_dedup_idx_" + hashlib.sha256(path.encode()).hexdigest()[:12]
 
 
-_META_SCHEMA = "n_buckets int, dir string, version int, tail string"
-
-
 def _bucket_meta(spark: SparkSession, path: str) -> dict | None:
-    """Current (max-version) bucket_meta row, or None if the index was
-    never compacted. Explicit read schema so rows written before the
-    ``tail`` column existed surface it as NULL (resolved to the
-    un-versioned dir by :func:`_tail_dir`). A ``bucket_meta`` dir that
-    exists but cannot be read raises: it is the compaction's commit
-    record, so it must not pass for an uncompacted index."""
-    from ..fs import exists
-
-    meta_dir = f"{path}/bucket_meta"
-    if not exists(spark, meta_dir):
-        return None
-    row = (
-        spark.read.schema(_META_SCHEMA)
-        .parquet(meta_dir)
-        .orderBy(F.col("version").desc())
-        .first()
-    )
-    return None if row is None else row.asDict()
+    """Current (max-version) bucket_meta record, or None if the index
+    was never compacted. A ``bucket_meta`` log that cannot be read
+    raises: it holds the compaction's commit records, so it must not
+    pass for an uncompacted index."""
+    rows = read_log(spark, f"{path}/bucket_meta", _INDEX_REBUILD)
+    return max(rows, key=lambda r: r["version"], default=None)
 
 
 def _tail_dir(meta: dict | None, path: str) -> str:
     """The current append-tail directory: versioned when compacted,
     else the plain ``postings`` dir a fresh build writes."""
-    if meta is None or meta.get("tail") is None:
-        return f"{path}/postings"
-    return meta["tail"]
+    return f"{path}/postings" if meta is None else meta["tail"]
 
 
 def _bucketed_postings(
@@ -950,7 +938,7 @@ def dedup_against_index(
     # dir is pure plan breadth (a driver-side file listing is cheaper
     # than an empty scan+join in every later stage)
     tail_dir = _tail_dir(meta, path)
-    if base is None or _dir_has_parquet(spark, tail_dir):
+    if base is None or dir_has_parquet(spark, tail_dir):
         tail = spark.read.schema(_POSTINGS_SCHEMA).parquet(tail_dir)
         branches.append(
             _copair_rows_vs(
@@ -961,14 +949,6 @@ def dedup_against_index(
     for b in branches[1:]:
         rows = rows.unionByName(b)
     return _pairs_from_copair_rows(rows, threshold)
-
-
-def _dir_has_parquet(spark: SparkSession, directory: str) -> bool:
-    """Driver-side check for any parquet data file in ``directory``
-    (delegates to the shared fs helper)."""
-    from ..fs import dir_has_parquet
-
-    return dir_has_parquet(spark, directory)
 
 
 def _copair_rows_self(post: DataFrame, threshold: float) -> DataFrame:
@@ -1870,5 +1850,5 @@ def dedup_exact_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         return full.unionAll(incr)
 
     # static union over immutable inputs — prepared once per
-    # process (exp_plan_vs_exec: 0.42 s construction vs 0.56 exec)
+    # process (profile_queries: 0.42 s build vs 0.56 exec)
     return _prepared_plan(spark, "dedup_exact_suite", sf_dir, build)

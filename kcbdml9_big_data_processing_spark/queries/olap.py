@@ -974,7 +974,7 @@ def join_revenue_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     measure).
 
     The union-of-four-pipelines plan is PREPARED once per
-    process (_prepared_plan) — exp_plan_vs_exec measured per-call
+    process (_prepared_plan) — profile_queries measured per-call
     Catalyst construction+analysis at 1.2 s vs 0.88 s execution
     (four full TPC-H pipelines re-analyzed per call, the same
     analysis-bound shape the ngram/ann suites had). Inputs are
@@ -1160,5 +1160,5 @@ def grouped_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         return ets.unionAll(pct).unionAll(apx).unionAll(cod).unionAll(late)
 
     # four static pipelines over immutable inputs — prepared once
-    # per process (exp_plan_vs_exec: 0.64 s construction vs 0.79 exec)
+    # per process (profile_queries: 0.64 s build vs 0.79 exec)
     return _prepared_plan(spark, "grouped_stats_suite", sf_dir, build)

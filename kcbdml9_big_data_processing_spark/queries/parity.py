@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.exact import bucket_start_sql, dsum, dsum_sql, epoch_millis
+from ..functions.exact import bucket_start_sql, dsum, dsum_sql
 from ..operators.enrich import enrich
 from ..operators.metrics import conform_metric, windowed_sum
 from ..operators.parse import parse_json_payload
@@ -140,7 +140,7 @@ def bytes_90s(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # static four-variant union over immutable inputs — prepared
-    # once per process (exp_plan_vs_exec: 0.58 s construction/call)
+    # once per process (profile_queries: 0.58 s build/call)
     return _prepared_plan(spark, "bytes_90s", sf_dir, build)
 
 
@@ -213,7 +213,7 @@ def bytes_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # static three-variant union over immutable inputs — prepared
-    # once per process (exp_plan_vs_exec: 0.43 s construction/call)
+    # once per process (profile_queries: 0.43 s build/call)
     return _prepared_plan(spark, "bytes_hourly", sf_dir, build)
 
 
@@ -522,5 +522,5 @@ def events_near_errors(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # static plan over immutable inputs — prepared once per
-    # process (exp_plan_vs_exec: 0.29 s construction vs 0.52 exec)
+    # process (profile_queries: 0.29 s build vs 0.52 exec)
     return _prepared_plan(spark, "events_near_errors", sf_dir, build)

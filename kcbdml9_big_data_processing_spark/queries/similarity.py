@@ -29,6 +29,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..fs import hadoop_path, read_log, read_record, write_record
 from ..sources.parquet import read_table
 from .registry import _prepared_plan, build_once_dir, register
 
@@ -437,9 +438,10 @@ def _ivf_train(emb: DataFrame, ex: DataFrame, k: int = _IVF_K) -> DataFrame:
 # (Spark deletes the target dir before writing) would leave a truncated
 # index with no previous generation. So, as in the ngram family's
 # compaction, builds write a fresh VERSIONED generation dir
-# (``{root}/g{N}``) and the SINGLE commit point is a row appended to the
-# ``gen_meta`` sidecar (readers take the max-version row; the parquet
-# committer's rename makes a half-written row invisible). A crash
+# (``{root}/g{N}``) and the SINGLE commit point is one record
+# ``g{N}.json`` added to the ``gen_meta`` log (readers take the
+# max-version record; fs.write_record's rename makes a half-written
+# record invisible). A crash
 # anywhere before the commit leaves the previous generation — including
 # its post-build extends, which append INTO the committed generation —
 # fully live; a build retry rewrites the same staging dir. Extends stay
@@ -456,8 +458,6 @@ def _ivf_train(emb: DataFrame, ex: DataFrame, k: int = _IVF_K) -> DataFrame:
 # (versioned data dirs + tiny committed metadata as the atomicity
 # point); the Hadoop FileSystem API below works unchanged on HDFS/S3A.
 
-_GEN_META_SCHEMA = "dir string, version int"
-
 #: per-process cache of resolved current-generation dirs, keyed by
 #: (applicationId, index root). _gen_commit updates it, so rebuilds
 #: within one process are seen immediately; concurrent cross-process
@@ -470,7 +470,7 @@ _GEN_META_SCHEMA = "dir string, version int"
 #: The generation layer gives crash-atomicity, not writer mutual
 #: exclusion — two concurrent builds would compute the same next
 #: version in _gen_begin, interleave writes into the same g{N}
-#: staging dir, and both append gen_meta rows, so the committed
+#: staging dir, and both commit gen_meta records, so the committed
 #: generation could mix files from both builds. Production index
 #: maintenance is a scheduled single job per index (the same posture
 #: as compact_dedup_index). A deployment that can't guarantee that can
@@ -481,27 +481,21 @@ _GEN_META_SCHEMA = "dir string, version int"
 _GEN_CACHE: dict[tuple[str, str], str] = {}
 
 
-def _gen_meta_row(spark: SparkSession, path: str):
-    """Newest committed gen_meta row, or None when the sidecar does
-    not exist (a not-yet-built root). Absence is decided by a
-    driver-side FS existence check, NOT by catching the read error: a
-    transient read failure propagates instead of misclassifying a
-    generational index as unbuilt — which _gen_current would then
-    cache as the root path for the process lifetime. An existing but
-    empty sidecar (nothing ever committed) reads as None through the
-    explicit schema."""
-    from ..fs import hadoop_path
+#: the recovery an unreadable index commit record names
+_INDEX_REBUILD = (
+    "rebuild the index with its build_* function (a run root's index:"
+    " curate --run-root ROOT --repair-index)"
+)
 
-    meta_dir = f"{path}/gen_meta"
-    p, fs = hadoop_path(spark, meta_dir)
-    if not fs.exists(p):
-        return None
-    return (
-        spark.read.schema(_GEN_META_SCHEMA)
-        .parquet(meta_dir)
-        .orderBy(F.col("version").desc())
-        .first()
-    )
+
+def _gen_meta_row(spark: SparkSession, path: str) -> dict | None:
+    """Newest committed gen_meta record, or None when the log is absent
+    or empty (a not-yet-built root). A read failure propagates, and a
+    log that holds anything but records raises: either would otherwise
+    misclassify a generational index as unbuilt — which _gen_current
+    would then cache as the root path for the process lifetime."""
+    rows = read_log(spark, f"{path}/gen_meta", _INDEX_REBUILD)
+    return max(rows, key=lambda r: r["version"], default=None)
 
 
 def _gen_current(spark: SparkSession, path: str, cached: bool = True) -> str:
@@ -542,9 +536,9 @@ def _gen_begin(spark: SparkSession, path: str) -> tuple[str, int]:
 
 
 def _gen_commit(spark: SparkSession, path: str, gdir: str, version: int) -> None:
-    spark.createDataFrame([(gdir, version)], _GEN_META_SCHEMA).write.mode(
-        "append"
-    ).parquet(f"{path}/gen_meta")
+    write_record(
+        spark, f"{path}/gen_meta/g{version}.json", {"dir": gdir, "version": version}
+    )
     _GEN_CACHE[(spark.sparkContext.applicationId, path)] = gdir
 
 
@@ -653,8 +647,6 @@ def scoped_writer_lock_ttl(ttl_sec: float | None):
 
 
 def _lock_handles(spark: SparkSession, root: str):
-    from ..fs import hadoop_path
-
     p, fs = hadoop_path(spark, f"{root}/_writer.lock")
     return fs, p
 
@@ -802,9 +794,10 @@ def vacuum_index_generations(
     vacuum_dedup_index (which prunes compaction dirs INSIDE a
     generation), with the same retention-not-locking safety: a reader
     planned against generation N survives the rebuild that commits
-    N+1, and N's dir is deleted only once N+retain exists. Meta rows
-    are never pruned (one skinny row per rebuild; the max-version
-    read ignores stale ones). Only ``g{N}`` dirs are ever deleted.
+    N+1, and N's dir is deleted only once N+retain exists. gen_meta
+    records are never pruned (one small record per rebuild; the
+    max-version read ignores stale ones). Only ``g{N}`` dirs are ever
+    deleted.
 
     Deleting a generation also drops the ngram family's
     per-generation bucketed catalog table (compact_dedup_index
@@ -818,8 +811,6 @@ def vacuum_index_generations(
     import re
 
     from .dedup import _bucketed_table_name
-
-    from ..fs import hadoop_path
 
     root_p, fs = hadoop_path(spark, path)
     for status in fs.listStatus(root_p):
@@ -1084,7 +1075,6 @@ def embedding_near_dup_pairs(
 # --- persisted semantic-dedup index (batch-vs-corpus incremental) ---------
 
 _SEM_BANDS_SCHEMA = "vec_id long, label string, band int, bucket long"
-_SEM_META_SCHEMA = "blocking string, n_cells int"
 #: default bound on blocking-cell population under ``label_ivf``:
 #: cell count scales as corpus/target, so candidate work per batch
 #: vector stays ~constant as the corpus grows
@@ -1099,38 +1089,27 @@ def _sem_explode(df: DataFrame) -> DataFrame:
     )
 
 
-#: per-process caches of a semantic index's (immutable-per-build)
-#: blocking meta and collected centroid rows, keyed by index path —
-#: a search against a built index shouldn't pay two tiny driver jobs
-#: per call to re-read what build_semantic_index wrote once.
-#: build_semantic_index invalidates both on rebuild.
-_SEM_META_CACHE: dict[str, dict] = {}
+#: per-process cache of a semantic index's (immutable-per-build)
+#: collected centroid rows, keyed by index path — a search against a
+#: built index shouldn't pay a driver job per call to re-read what
+#: build_semantic_index wrote once. build_semantic_index invalidates
+#: it on rebuild.
 _SEM_CENT_ROWS_CACHE: dict[str, list | None] = {}
 
 
 def _sem_meta(spark: SparkSession, path: str) -> dict:
-    """Stored blocking policy of a semantic index. Every build writes
-    it, so a missing ``meta`` raises (searching or extending under a
-    guessed policy would silently block wrong), and a read failure
-    propagates. Resolves the current generation first, so the cache
-    key is the generation dir — a rebuild changes the key and the
-    stale entry is never consulted (idempotent when handed an
-    already-resolved dir)."""
-    from ..fs import exists
-
+    """Stored blocking policy of a semantic index (the ``meta`` record
+    of its current generation). Every build writes it, so a missing
+    ``meta`` raises (searching or extending under a guessed policy
+    would silently block wrong), and an unreadable one raises too.
+    Idempotent when handed an already-resolved generation dir."""
     path = _gen_current(spark, path)
-    cached = _SEM_META_CACHE.get(path)
-    if cached is not None:
-        return cached
-    if not exists(spark, f"{path}/meta"):
+    rebuild = "rebuild it with build_semantic_index"
+    meta = read_record(spark, f"{path}/meta", rebuild)
+    if meta is None:
         raise FileNotFoundError(
-            f"semantic index {path} has no meta (its blocking policy);"
-            " rebuild it with build_semantic_index"
+            f"semantic index {path} has no meta (its blocking policy); {rebuild}"
         )
-    meta = (
-        spark.read.schema(_SEM_META_SCHEMA).parquet(f"{path}/meta").first().asDict()
-    )
-    _SEM_META_CACHE[path] = meta
     return meta
 
 
@@ -1387,10 +1366,7 @@ def build_semantic_index(
         corpus = _with_block_label(
             corpus, spark.read.parquet(f"{gdir}/cents")
         )
-    spark.createDataFrame(
-        [(blocking, n_cells)], _SEM_META_SCHEMA
-    ).write.mode("overwrite").parquet(f"{gdir}/meta")
-    _SEM_META_CACHE.pop(gdir, None)
+    write_record(spark, f"{gdir}/meta", {"blocking": blocking, "n_cells": n_cells})
     _SEM_CENT_ROWS_CACHE.pop(gdir, None)
     planes = _planes()
     band_w = _N_PLANES // _N_BANDS
@@ -1662,7 +1638,7 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     persist+count whose cache the harness cleared between timed runs)
     and the band→join→cosine plan is prepared once (_prepared_plan:
     the 64-dim fixed-point cosine trees cost ~0.7 s of per-call
-    Catalyst analysis, tools/exp_plan_vs_exec.py). Every execution
+    Catalyst analysis, tools/profile_queries.py). Every execution
     scans the stored corpus end to end through the full pipeline."""
 
     def build() -> DataFrame:
@@ -1867,7 +1843,7 @@ def knn_centroid_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         return knn.unionAll(nc)
 
     # static union over immutable inputs — prepared once per
-    # process (exp_plan_vs_exec: 0.37 s construction vs 0.68 exec)
+    # process (profile_queries: 0.37 s build vs 0.68 exec)
     return _prepared_plan(spark, "knn_centroid_suite", sf_dir, build)
 
 
@@ -2873,7 +2849,7 @@ def semantic_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     The search plan is prepared once per process (_prepared_plan) on
     top of the per-process index build — ~0.7 s of per-call analysis
     of the assignment/cosine expression trees
-    (tools/exp_plan_vs_exec.py); execution still runs the full
+    (tools/profile_queries.py); execution still runs the full
     assign→block→join→cosine search per call."""
 
     def build() -> DataFrame:

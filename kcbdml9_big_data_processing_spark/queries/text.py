@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.exact import davg, davg_sql, dsum, dsum_sql
+from ..functions.exact import davg, davg_sql
 from ..sources.parquet import read_table, spread_scan
 from .registry import _prepared_plan, register
 
@@ -462,7 +462,7 @@ def language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     profile array literals (hundreds of F.lit elements each) cost
     ~0.4 s of construction + Catalyst analysis per call at idle
     steady-state (A/B median-of-5: 2.55 -> 2.14 s; a
-    loaded exp_plan_vs_exec window showed up to 1.4 s), re-paid on
+    loaded profile_queries window showed up to 1.4 s), re-paid on
     every re-run against the same immutable sf_dir. The scan +
     score arithmetic still executes fully every call."""
 
@@ -718,5 +718,5 @@ def term_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         return tf.unionAll(bg)
 
     # static union over immutable inputs — prepared once per
-    # process (exp_plan_vs_exec: 0.46 s construction vs 0.73 exec)
+    # process (profile_queries: 0.46 s build vs 0.73 exec)
     return _prepared_plan(spark, "term_stats_suite", sf_dir, build)

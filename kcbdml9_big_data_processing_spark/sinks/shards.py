@@ -66,12 +66,12 @@ exchange, every row moves once).
 
 from __future__ import annotations
 
-import json
 import math
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..fs import read_record, write_record
 from ..operators.sampling import h48, h48_sql
 
 #: the portable hash recipe this module keys on — recorded in the
@@ -127,38 +127,30 @@ def shard_assignments(
     ).withColumn("pos", _role_hash(id_col, salt, "pos"))
 
 
-def _meta_handles(spark: SparkSession, path: str):
-    from ..fs import hadoop_path
-
-    p, fs = hadoop_path(spark, f"{path}/{_META_NAME}")
-    return fs, p
-
-
 def read_export_meta(spark: SparkSession, path: str) -> dict:
     """The export's recorded recipe (hash, n_shards, salt, id_col).
     Underscore-named, so the parquet reader never sees it. Raises when
-    the sidecar is missing: a full export writes it after its data
-    commits, so an export without one never finished."""
-    fs, p = _meta_handles(spark, path)
-    if not fs.exists(p):
+    the sidecar is missing: a full export commits it (fs.write_record)
+    after its data commits, so an export without one never finished."""
+    rerun = (
+        "re-run the full export (write_training_shards without"
+        " only_shards, or export-shards without --only-shards)"
+    )
+    meta = read_record(spark, f"{path}/{_META_NAME}", rerun)
+    if meta is None:
         raise ValueError(
             f"no {_META_NAME} at {path}: the export's full write never"
-            " finished; re-run the full export (write_training_shards"
-            " without only_shards, or export-shards without"
-            " --only-shards)"
+            f" finished; {rerun}"
         )
-    stream = fs.open(p)
-    try:
-        return json.loads(bytes(stream.readAllBytes()).decode("utf-8"))
-    finally:
-        stream.close()
+    return meta
 
 
 def _write_export_meta(
     spark: SparkSession, path: str, n_shards: int, salt: int, id_col: str
 ) -> None:
-    fs, p = _meta_handles(spark, path)
-    payload = json.dumps(
+    write_record(
+        spark,
+        f"{path}/{_META_NAME}",
         {
             "format": 1,
             "hash": _HASH_RECIPE,
@@ -166,13 +158,7 @@ def _write_export_meta(
             "salt": int(salt),
             "id_col": id_col,
         },
-        sort_keys=True,
-    ).encode("utf-8")
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(payload))
-    finally:
-        out.close()
+    )
 
 
 def _estimated_input_bytes(df: DataFrame) -> int | None:

@@ -14,7 +14,6 @@ the lifetime a cached persisted index or a drained sink needs.
 from __future__ import annotations
 
 import atexit
-import os
 import shutil
 import tempfile
 

@@ -898,9 +898,9 @@ def test_dedup_index_compaction_bucketed_base(spark, tmp_path):
 def test_dedup_index_crash_recovery_and_vacuum(spark, tmp_path):
     """The r7 ADVICE crash-ordering fix + retention GC, end to end:
 
-    (a) the compaction COMMIT is the single appended bucket_meta row —
-        deleting the newest row's file (simulating a crash after the
-        new base/tail were written but before the meta append landed)
+    (a) the compaction COMMIT is the single bucket_meta record —
+        deleting the newest record's file (simulating a crash after the
+        new base/tail were written but before the meta record landed)
         rolls readers back to the previous generation with NOTHING
         lost, including postings appended via extend_dedup_index after
         the previous compaction (the r6 shape truncated the shared
@@ -909,10 +909,8 @@ def test_dedup_index_crash_recovery_and_vacuum(spark, tmp_path):
         the compaction that supersedes them (so an in-flight reader
         finishes) and are deleted one cycle later.
     """
-    import glob as _glob
     import os
 
-    import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
     from kcbdml9_big_data_processing_spark.queries.dedup import (
@@ -975,17 +973,17 @@ def test_dedup_index_crash_recovery_and_vacuum(spark, tmp_path):
         v1_reader = spark.read.parquet(f"{path}/postings_bucketed_v1")
         assert v1_reader.count() > 0
 
-        # (a) crash simulation: remove the v2 meta row's file -> the
+        # (a) crash simulation: remove the v2 meta record -> the
         # max-version read falls back to v1 base + v1 tail, and the
         # extend's postings are still there (they were folded into v2,
         # not truncated from v1's tail)
         removed = []
-        for f in _glob.glob(f"{path}/bucket_meta/*.parquet"):
-            if 2 in pq.read_table(f, columns=["version"])["version"].to_pylist():
+        for f in os.listdir(f"{path}/bucket_meta"):
+            f = f"{path}/bucket_meta/{f}"
+            if f.endswith(".json") and '"version": 2' in open(f).read():
                 removed.append((f, open(f, "rb").read()))
                 os.remove(f)
-        assert removed, "expected a meta file carrying version=2"
-        spark.catalog.refreshByPath(f"{path}/bucket_meta")
+        assert removed, "expected a meta record carrying version=2"
         meta = _bucket_meta(spark, path)
         assert meta["version"] == 1 and meta["tail"].endswith("_tail_v1")
         # the catalog table still points at v2's base; the search path
@@ -998,7 +996,6 @@ def test_dedup_index_crash_recovery_and_vacuum(spark, tmp_path):
         # vacuumed; v2 survives
         for f, blob in removed:
             open(f, "wb").write(blob)
-        spark.catalog.refreshByPath(f"{path}/bucket_meta")
         spark.sql(f"DROP TABLE IF EXISTS {_bucketed_table_name(path)}")
         compact_dedup_index(spark, path, n_buckets=4)  # v3
         assert not os.path.isdir(f"{path}/postings_bucketed_v1")
@@ -1011,9 +1008,10 @@ def test_dedup_index_crash_recovery_and_vacuum(spark, tmp_path):
 
 def test_bucket_meta_absent_is_none_unreadable_raises(spark, tmp_path):
     """An index never compacted has no ``bucket_meta`` dir and reads as
-    None; a ``bucket_meta`` dir that exists but holds no readable
-    parquet is a broken commit record and raises instead of passing
-    for an uncompacted index."""
+    None; a ``bucket_meta`` dir that holds an unparseable record is a
+    broken commit record and raises instead of passing for an
+    uncompacted index."""
+    from kcbdml9_big_data_processing_spark.fs import RecordError
     from kcbdml9_big_data_processing_spark.queries.dedup import (
         _bucket_meta,
         build_dedup_index,
@@ -1030,8 +1028,8 @@ def test_bucket_meta_absent_is_none_unreadable_raises(spark, tmp_path):
 
     meta = tmp_path / "broken" / "bucket_meta"
     meta.mkdir(parents=True)
-    (meta / "part-0.parquet").write_text("not parquet")
-    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+    (meta / "v1.json").write_text("not json")
+    with pytest.raises(RecordError, match="build_"):
         _bucket_meta(spark, str(tmp_path / "broken"))
 
 
@@ -1039,9 +1037,10 @@ def test_semantic_meta_missing_raises_unreadable_propagates(spark, tmp_path):
     """Every build writes a semantic index's blocking policy, so a
     generation without ``meta`` raises naming the rebuild instead of
     searching under a guessed ``label`` policy, and an unreadable
-    ``meta`` propagates its read error."""
-    import shutil
+    ``meta`` record raises its read error."""
+    import os
 
+    from kcbdml9_big_data_processing_spark.fs import RecordError
     from kcbdml9_big_data_processing_spark.queries.similarity import (
         _gen_current,
         _sem_meta,
@@ -1058,15 +1057,15 @@ def test_semantic_meta_missing_raises_unreadable_propagates(spark, tmp_path):
     root = str(tmp_path / "semidx")
     build_semantic_index(corpus, root, blocking="label")
     meta = f"{_gen_current(spark, root)}/meta"
-    shutil.rmtree(meta)
+    os.remove(meta)
     with pytest.raises(FileNotFoundError, match="build_semantic_index"):
         _sem_meta(spark, root)
 
-    broken = tmp_path / "broken" / "meta"
-    broken.mkdir(parents=True)
-    (broken / "part-0.parquet").write_text("not parquet")
-    with pytest.raises(Exception, match="FAILED_READ_FILE"):
-        _sem_meta(spark, str(tmp_path / "broken"))
+    broken = tmp_path / "broken"
+    broken.mkdir()
+    (broken / "meta").write_text("not json")
+    with pytest.raises(RecordError, match="build_semantic_index"):
+        _sem_meta(spark, str(broken))
 
 
 def test_semantic_index_label_ivf_blocking(spark, tmp_path):
@@ -1710,9 +1709,9 @@ def test_gen_writers_resolve_uncached_and_legacy_vacuum(spark, tmp_path):
         dedup_index_hashes,
         extend_dedup_index,
     )
+    from kcbdml9_big_data_processing_spark.fs import write_record
     from kcbdml9_big_data_processing_spark.queries.similarity import (
         _GEN_CACHE,
-        _GEN_META_SCHEMA,
         vacuum_index_generations,
     )
 
@@ -1727,7 +1726,7 @@ def test_gen_writers_resolve_uncached_and_legacy_vacuum(spark, tmp_path):
     # reader caches g1
     assert dedup_index_hashes(spark, root).count() == 1
 
-    # simulate ANOTHER PROCESS committing g2: stage + meta append
+    # simulate ANOTHER PROCESS committing g2: stage + meta record
     # without touching this process's cache
     g2 = f"{root}/g2"
     spark.createDataFrame(
@@ -1739,9 +1738,7 @@ def test_gen_writers_resolve_uncached_and_legacy_vacuum(spark, tmp_path):
     spark.read.schema("doc_id long, n int, k long").parquet(
         f"{root}/g1/postings"
     ).write.mode("overwrite").parquet(f"{g2}/postings")
-    spark.createDataFrame([(g2, 2)], _GEN_META_SCHEMA).write.mode(
-        "append"
-    ).parquet(f"{root}/gen_meta")
+    write_record(spark, f"{root}/gen_meta/g2.json", {"dir": g2, "version": 2})
     assert _GEN_CACHE[(spark.sparkContext.applicationId, root)] == f"{root}/g1"
 
     # the WRITER must land in g2 despite the stale cache

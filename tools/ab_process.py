@@ -13,7 +13,9 @@ the change arm's children import it from this checkout. Each leg spawns one
 child per arm (order alternates per leg); each child warms up
 (building its per-process stores), then times the queries
 median-of-N with the noop sink. Window drift hits both arms equally
-across legs.
+across legs. Five legs by default: an A/A run (``--base HEAD``) at
+three legs put two rows' medians outside the base IQR with identical
+code, and at five it did not.
 """
 
 from __future__ import annotations
@@ -70,7 +72,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
     ap.add_argument("--base", required=True, help="git revision of the base arm")
-    ap.add_argument("--legs", type=int, default=3)
+    ap.add_argument("--legs", type=int, default=5)
     ap.add_argument("--runs", type=int, default=3)
     ap.add_argument(
         "--sf", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

@@ -1,10 +1,12 @@
-"""Per-query execution profiler (optimization round 16, guide §1).
+"""Per-query execution profiler.
 
 For each registered query, runs the bench's noop-sink materialization
-once (after a warm-up) and attributes the wall time using the driver's
+(after a warm-up) and attributes the wall time using the driver's
 AppStatusStore job records:
 
-- ``build_s``  — DataFrame construction (spec.fn call)
+- ``build_s``  — DataFrame construction plus Catalyst analysis (the
+  spec.fn call and a forced ``df.schema``); a large share here is what
+  registry._prepared_plan turns into a pay-once cost
 - ``exec_s``   — noop write wall
 - ``n_jobs``   — Spark jobs launched by the write (loops/persists show
   up here: each checkpoint/persist/collect is its own job)
@@ -14,6 +16,10 @@ AppStatusStore job records:
   codegen, AQE re-optimization, commit protocol)
 - ``max1``     — wall of the longest job whose task count is 1 (a
   single-task stage: unsplittable input or unspread compute)
+
+Beneath each query's row, every job of its fastest run is listed in
+submission order with the driver gap before it, its task count, wall
+and name.
 
 Usage: python tools/profile_queries.py [QUERY...] [--sf DIR] [--runs N]
 """
@@ -29,7 +35,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def _job_records(sc, group: str) -> list[dict]:
-    """JobData rows for a job group, via the driver's status store."""
+    """JobData rows for a job group, via the driver's status store,
+    in submission order."""
     tracker = sc.statusTracker()
     ids = set(tracker.getJobIdsForGroup(group))
     store = sc._jsc.sc().statusStore()
@@ -45,9 +52,15 @@ def _job_records(sc, group: str) -> list[dict]:
         if sub.isDefined() and comp.isDefined():
             wall = (comp.get().getTime() - sub.get().getTime()) / 1000.0
         out.append(
-            {"id": j.jobId(), "tasks": j.numTasks(), "wall": wall}
+            {
+                "id": j.jobId(),
+                "start": sub.get().getTime() / 1000.0 if sub.isDefined() else 0.0,
+                "tasks": j.numTasks(),
+                "wall": wall,
+                "name": j.name()[:80],
+            }
         )
-    return out
+    return sorted(out, key=lambda j: (j["start"], j["id"]))
 
 
 def profile(spark, spec, name: str, sf: str, runs: int) -> dict:
@@ -61,6 +74,7 @@ def profile(spark, spec, name: str, sf: str, runs: int) -> dict:
         sc.setJobGroup(group, name)
         t0 = time.time()
         df = spec.fn(spark, sf)
+        df.schema  # force analysis into build_s
         t1 = time.time()
         df.write.mode("overwrite").format("noop").save()
         t2 = time.time()
@@ -82,11 +96,24 @@ def profile(spark, spec, name: str, sf: str, runs: int) -> dict:
                 ),
                 3,
             ),
+            "jobs": jobs,
         }
         spark.catalog.clearCache()
         if best is None or rec["wall_s"] < best["wall_s"]:
             best = rec
     return best
+
+
+def _print_jobs(jobs: list[dict]) -> None:
+    prev_end = None
+    for j in jobs:
+        gap = "" if prev_end is None else f"{j['start'] - prev_end:6.3f}"
+        wall = j["wall"] or 0.0
+        prev_end = j["start"] + wall
+        print(
+            f"    job {j['id']:5d} gap={gap:>6} tasks={j['tasks']:5d}"
+            f" wall={wall:6.3f}  {j['name']}"
+        )
 
 
 def main() -> None:
@@ -122,6 +149,7 @@ def main() -> None:
                 f" {r['job_s']:7.2f} {gap:6.2f} {r['max1']:5.2f}",
                 flush=True,
             )
+            _print_jobs(r["jobs"])
         except Exception as e:
             print(f"{name}: ERROR {e}", flush=True)
     spark.stop()

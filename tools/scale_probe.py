@@ -278,8 +278,8 @@ def main() -> None:
         verb) vs a growing PUBLISHED standing archive — r15 verdict
         'next round' #6: curator_vs_archive covers the library path;
         this series adds the run-root machinery on top (torn-dir
-        check, intent/index_gen staging, kept+decisions parquet
-        writes, index extend, meta append). Expect ~flat like its
+        check, the intent record, kept+decisions parquet writes,
+        index extend, the run record). Expect ~flat like its
         library sibling: the archive-side work is the stored-index
         search; the staging writes are batch-sized.
 
