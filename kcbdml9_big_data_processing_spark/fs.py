@@ -80,7 +80,9 @@ def write_record(spark: SparkSession, path: str, record: dict) -> None:
     finally:
         out.close()
     # a rename that does not replace its target (HDFS) drops it first;
-    # only records not yet committed are ever rewritten
+    # a record is rewritten only by a retry of the step that wrote it
+    # (a retried extend's hashes_max, a re-run export's sidecar), so a
+    # crash between the two is redone the same way
     if not fs.rename(tmp, p) and not (fs.delete(p, False) and fs.rename(tmp, p)):
         raise OSError(f"could not commit record {path} (rename of {tmp} failed)")
 

@@ -13,6 +13,7 @@ fresh root or an unbuilt index.
 from __future__ import annotations
 
 import functools
+import glob
 import os
 
 import pytest
@@ -27,6 +28,7 @@ from kcbdml9_big_data_processing_spark.jobs import runs as R
 from kcbdml9_big_data_processing_spark.jobs.training_data import CurationConfig
 from kcbdml9_big_data_processing_spark.queries import dedup as D
 from kcbdml9_big_data_processing_spark.queries import similarity as S
+from kcbdml9_big_data_processing_spark.sinks.shards import read_export_meta
 
 _SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 _DAY1 = [
@@ -104,6 +106,19 @@ def test_metadata_helpers_launch_no_spark_job(spark, tmp_path, monkeypatch):
     assert all(calls.values()), f"a helper was never called: {calls}"
     assert jobs == {name: 0 for name in jobs}, f"metadata launched jobs: {jobs}"
     assert [r["run_id"] for r in R.run_rows(spark, root)] == [1, 2]
+    # the inline intent write has no seam to count: every record the two
+    # days committed is a file, where a one-row parquet table is a dir
+    idx = R.index_root(root)
+    records = [f"{root}/run_meta/r{i:06d}.json" for i in (1, 2)]
+    records += [
+        f"{R.run_dir(root, i)}/{name}"
+        for i in (1, 2)
+        for name in ("intent", "index_done")
+    ]
+    records += [f"{R.run_dir(root, 2)}/index_started", f"{idx}/gen_meta/g1.json"]
+    records += glob.glob(f"{idx}/g1/hashes_max/*.json")
+    assert len(records) == 10, records
+    assert [p for p in records if not os.path.isfile(p)] == []
 
 
 def test_leftover_temp_file_is_invisible(spark, tmp_path):
@@ -121,6 +136,14 @@ def test_leftover_temp_file_is_invisible(spark, tmp_path):
     # a record that is written again replaces the old one whole
     write_record(spark, f"{log}/b.json", {"v": 3})
     assert read_record(spark, f"{log}/b.json", "rebuild") == {"v": 3}
+
+    # the shard export's sidecar: a crash mid-write leaves only a
+    # truncated temp file, which reads as an export that never finished
+    export = tmp_path / "export"
+    export.mkdir()
+    (export / "__export_meta.json.0123.tmp").write_text('{"format": 1, "ha')
+    with pytest.raises(ValueError, match="never finished"):
+        read_export_meta(spark, str(export))
 
 
 def test_hashes_max_retried_extend_rewrites_its_record(spark, tmp_path):
