@@ -56,25 +56,46 @@ with its detection sibling (exit 1 lists the shards to retry):
     python -m kcbdml9_big_data_processing_spark audit-shards
         --path ROOT [--reference PARQUET | --sf DIR]
 
-And the curation job itself — full corpus run, or the daily
-incremental batch when --index is given:
+And the curation job itself, through the crash-safe run root
+(jobs/runs.py): the first run is full, later runs curate the day's
+batch incrementally against the last published run, and each run
+publishes kept set, decision record and index maintenance at one
+commit record:
 
     python -m kcbdml9_big_data_processing_spark curate
-        --docs PARQUET --out-kept PATH --out-decisions PATH
-        [--index DIR [--extend-index]]
-        [--benchmark PARQUET] [--build-index DIR]
+        --run-root ROOT (--docs PARQUET | --status | --vacuum-runs)
+        [--full | --retry-torn | --repair-index] [--benchmark PARQUET]
         [--jaccard-min X] [--min-words N] [...quality thresholds]
         [--model-weights weights.json [--min-model-mean-milli N]]
-        [--writer-lock-ttl SEC]
+        [--retain-runs N] [--writer-lock-ttl SEC]
 
 closing the shell pipeline end to end: ingest -> curate ->
-export-shards, with the index artifact maintained across days.
+export-shards of the published run's kept dir (``--status`` names it).
 """
 
 from __future__ import annotations
 
 import argparse
 import sys
+
+
+def _positive_seconds(value: str) -> float:
+    """argparse type for ``--writer-lock-ttl``: a ttl <= 0 would make
+    every held lock stealable (similarity.enable_index_writer_locking
+    raises on it), so it fails at parse time with exit 2."""
+    ttl = float(value)
+    if not ttl > 0:
+        raise argparse.ArgumentTypeError(f"must be > 0 seconds, got {value}")
+    return ttl
+
+
+def _non_negative_int(value: str) -> int:
+    """argparse type for ``--retain-runs`` (vacuum_runs raises on a
+    negative retain)."""
+    n = int(value)
+    if n < 0:
+        raise argparse.ArgumentTypeError(f"must be >= 0, got {value}")
+    return n
 
 
 def _index_main(argv: list[str], spark=None) -> int:
@@ -108,7 +129,7 @@ def _index_main(argv: list[str], spark=None) -> int:
     ap.add_argument("--limit", type=int, default=20, help="rows to print")
     ap.add_argument(
         "--writer-lock-ttl",
-        type=float,
+        type=_positive_seconds,
         default=None,
         metavar="SEC",
         help="enforce single-writer-per-root for this invocation: hold"
@@ -274,8 +295,8 @@ def _index_stats(spark, family: str, path: str) -> int:
             print(
                 "exact_hash_map=MISSING — broken index: run_incremental"
                 " refuses it; rebuild it over the kept archive with"
-                " build_dedup_index (curate --build-index; a run root:"
-                " curate --run-root ROOT --repair-index)"
+                " build_dedup_index (a run root: curate --run-root ROOT"
+                " --repair-index)"
             )
         meta = _bucket_meta(spark, path)
         tail = _tail_dir(meta, path)
@@ -584,7 +605,7 @@ def _export_shards_main(argv: list[str], spark=None) -> int:
     )
     ap.add_argument(
         "--writer-lock-ttl",
-        type=float,
+        type=_positive_seconds,
         default=None,
         metavar="SEC",
         help="RETRY ONLY: hold {out}/_writer.lock while replacing the"
@@ -770,95 +791,80 @@ def _audit_shards_main(argv: list[str], spark=None) -> int:
 
 
 def _curate_main(argv: list[str], spark=None) -> int:
-    """``curate``: the engine's core job from the shell — full-corpus
-    curation (jobs/training_data.TrainingDataCurator.run) or the daily
-    incremental batch (run_incremental, when ``--index`` is given).
-    Closes the operational loop the other verbs bracket: ``ingest``
-    lands the corpus, ``curate`` produces the kept set + decision record
-    (and maintains the near-dup index artifact the NEXT day's increment
-    needs), ``export-shards`` ships it. Per-reason decision counts print
-    as the job summary.
+    """``curate``: the engine's core job from the shell, run through the
+    crash-safe run root (jobs/runs.curate_run_root). Closes the
+    operational loop the other verbs bracket: ``ingest`` lands the
+    corpus, ``curate`` produces the kept set + decision record and
+    maintains the near-dup index the NEXT day's increment needs,
+    ``export-shards`` ships the published run's kept dir. Per-reason
+    decision counts print as the job summary.
 
-    ``--run-root`` is the CRASH-SAFE orchestration of the same
-    pipeline (jobs/runs.py): kept/decisions/index maintenance stage
-    under a versioned run dir and publish at one run_meta record, so
-    a mid-run crash can never tear the daily-incremental contract
-    (archive = prior kept set, index in lockstep). First run full,
-    later runs incremental against the last PUBLISHED run; recovery
-    flags --retry-torn / --repair-index; exit 4 = a torn prior
-    attempt needs one of them (stderr names which). ``--vacuum-runs``
-    reclaims run dirs superseded by the latest full run's
-    lineage, keeping ``--retain-runs`` (default 2) of them — run
-    records and the standing archive are never touched."""
+    kept/decisions/index maintenance stage under a versioned run dir
+    and publish at one run_meta record, so a mid-run crash can never
+    tear the daily-incremental contract (archive = prior kept set,
+    index in lockstep). First run full, later runs incremental against
+    the last PUBLISHED run; recovery flags --retry-torn /
+    --repair-index; exit 4 = a torn prior attempt needs one of them
+    (stderr names which). ``--status`` lists the published runs and
+    any torn attempt. ``--vacuum-runs`` reclaims run dirs superseded
+    by the latest full run's lineage, keeping ``--retain-runs``
+    (default 2) of them — run records and the standing archive are
+    never touched."""
     ap = argparse.ArgumentParser(prog="kcbdml9-spark curate")
     ap.add_argument(
         "--docs",
         default=None,
         help="documents-schema parquet (the batch); required except"
-        " for --status",
+        " for --status and --vacuum-runs",
     )
-    ap.add_argument("--out-kept", default=None, help="kept corpus parquet")
-    ap.add_argument(
-        "--out-decisions", default=None, help="decision-record parquet"
-    )
-    # crash-safe run-root mode: the root manages kept/
-    # decisions/index itself — versioned run dirs, one meta commit
     ap.add_argument(
         "--run-root",
         default=None,
         metavar="ROOT",
-        help="CRASH-SAFE MODE: stage kept+decisions+index maintenance"
-        " under ROOT/runs/r{N} and publish with one run_meta record;"
-        " first run is full, later runs incremental against the last"
-        " published run (jobs/runs.py). Replaces --out-kept/"
-        "--out-decisions/--index/--build-index/"
-        "--extend-index.",
+        help="required: stage kept+decisions+index maintenance under"
+        " ROOT/runs/r{N} and publish with one run_meta record; first"
+        " run is full, later runs incremental against the last"
+        " published run (jobs/runs.py)",
     )
     ap.add_argument(
         "--full",
         action="store_true",
-        help="RUN-ROOT: force a periodic full re-curation + index"
-        " rebuild instead of the default incremental",
+        help="force a periodic full re-curation + index rebuild instead"
+        " of the default incremental",
     )
     ap.add_argument(
         "--retry-torn",
         action="store_true",
-        help="RUN-ROOT: discard a crashed prior attempt's staged"
-        " outputs and redo the batch",
+        help="discard a crashed prior attempt's staged outputs and redo"
+        " the batch",
     )
     ap.add_argument(
         "--repair-index",
         action="store_true",
-        help="RUN-ROOT: a torn extend may have left partial postings —"
-        " rebuild the index over the committed archive, then redo",
+        help="a torn extend may have left partial postings — rebuild"
+        " the index over the committed archive, then redo",
     )
     ap.add_argument(
         "--status",
         action="store_true",
-        help="RUN-ROOT: read-only — list published runs and name any"
-        " torn attempt + its recovery; the first move after a crash",
+        help="read-only — list published runs and name any torn"
+        " attempt + its recovery; the first move after a crash",
     )
     ap.add_argument(
         "--vacuum-runs",
         action="store_true",
-        help="RUN-ROOT: delete run dirs superseded by the latest full"
-        " run's lineage, keeping --retain-runs most recent of them"
-        " (run records are never pruned; the standing archive is never"
+        help="delete run dirs superseded by the latest full run's"
+        " lineage, keeping --retain-runs most recent of them (run"
+        " records are never pruned; the standing archive is never"
         " touched)",
     )
     ap.add_argument(
         "--retain-runs",
-        type=int,
+        type=_non_negative_int,
         default=None,
         metavar="N",
         help="with --vacuum-runs: how many superseded run dirs to"
         " retain as a rollback window (default 2)",
-    )
-    ap.add_argument(
-        "--index",
-        default=None,
-        help="INCREMENTAL: the persisted n-gram dedup index built over"
-        " the kept archive (ids must be epoch-monotonic vs the batch)",
     )
     ap.add_argument(
         "--benchmark",
@@ -866,25 +872,13 @@ def _curate_main(argv: list[str], spark=None) -> int:
         help="FULL RUN: eval-set parquet (text column) to decontaminate"
         " against before curation",
     )
-    ap.add_argument(
-        "--build-index",
-        default=None,
-        metavar="PATH",
-        help="FULL RUN: build the n-gram dedup index over the kept set"
-        " here afterwards — the artifact the next day's --index needs",
-    )
-    ap.add_argument(
-        "--extend-index",
-        action="store_true",
-        help="INCREMENTAL: append the batch's kept docs to --index"
-        " afterwards, keeping it current for the next batch",
-    )
     # quality-gate / near-dup thresholds (CurationConfig)
     ap.add_argument("--min-words", type=int, default=5)
     ap.add_argument("--max-stopword-ratio", type=float, default=0.9)
     ap.add_argument("--min-lexical-diversity", type=float, default=0.1)
     ap.add_argument("--jaccard-min", type=float, default=0.5)
-    # full-run-only policy stages (run_incremental raises on these)
+    # full-run-only policy stages (curate_run_root refuses them on an
+    # incremental day)
     ap.add_argument("--max-repeated-spans", type=int, default=None)
     ap.add_argument("--scrub-repeated-spans", action="store_true")
     ap.add_argument("--span-tokens", type=int, default=16)
@@ -912,27 +906,20 @@ def _curate_main(argv: list[str], spark=None) -> int:
     )
     ap.add_argument(
         "--writer-lock-ttl",
-        type=float,
+        type=_positive_seconds,
         default=None,
         metavar="SEC",
-        help="hold the index writer lock while building/extending"
-        " (single writer per index root); steal locks staler than SEC",
+        help="hold the root writer lock for the whole stage-to-publish"
+        " span (single writer per root); steal locks staler than SEC",
     )
     args = ap.parse_args(argv)
 
-    if args.status and args.run_root is None:
-        print(
-            "curate: --status inspects a --run-root", file=sys.stderr
-        )
-        return 2
-    if args.vacuum_runs and args.run_root is None:
-        print(
-            "curate: --vacuum-runs prunes a --run-root", file=sys.stderr
-        )
+    if args.run_root is None:
+        print("curate: --run-root ROOT is required", file=sys.stderr)
         return 2
     if args.retain_runs is not None and not args.vacuum_runs:
-        # inert-flag posture (the --writer-lock-ttl precedent): a
-        # retention knob that guards nothing is a usage error
+        # inert-flag posture: a retention knob that guards nothing is
+        # a usage error
         print(
             "curate: --retain-runs tunes --vacuum-runs", file=sys.stderr
         )
@@ -947,101 +934,18 @@ def _curate_main(argv: list[str], spark=None) -> int:
     if args.docs is None and not (args.status or args.vacuum_runs):
         print("curate: --docs is required", file=sys.stderr)
         return 2
-    if args.run_root is not None:
-        managed = {
-            "--out-kept": args.out_kept,
-            "--out-decisions": args.out_decisions,
-            "--index": args.index,
-            "--build-index": args.build_index,
-        }
-        clashing = [k for k, v in managed.items() if v is not None]
-        if args.extend_index:
-            clashing.append("--extend-index")
-        if clashing:
-            print(
-                "curate: --run-root manages outputs, archive and index"
-                f" itself — drop {', '.join(clashing)}",
-                file=sys.stderr,
-            )
-            return 2
-    else:
-        if args.out_kept is None or args.out_decisions is None:
-            print(
-                "curate: pass --out-kept and --out-decisions, or"
-                " --run-root for the crash-safe managed layout",
-                file=sys.stderr,
-            )
-            return 2
-        if args.full or args.retry_torn or args.repair_index:
-            print(
-                "curate: --full/--retry-torn/--repair-index are"
-                " --run-root recovery flags",
-                file=sys.stderr,
-            )
-            return 2
-
-    incremental = args.index is not None
-    if incremental and args.benchmark is not None:
-        print(
-            "curate: --benchmark decontamination is a full-run stage;"
-            " run it on the periodic full curation",
-            file=sys.stderr,
-        )
-        return 2
-    if incremental and args.build_index is not None:
-        print(
-            "curate: --build-index is the full run's artifact step; an"
-            " incremental batch extends with --extend-index",
-            file=sys.stderr,
-        )
-        return 2
-    if args.extend_index and not incremental:
-        print(
-            "curate: --extend-index extends an incremental run's"
-            " --index; a full run creates one with --build-index",
-            file=sys.stderr,
-        )
-        return 2
-    if args.writer_lock_ttl is not None and not (
-        args.build_index is not None
-        or args.extend_index
-        or args.run_root is not None  # run-root always writes the index
-    ):
-        # mirror export-shards: an inapplicable lock flag must not be
-        # a silent no-op the operator mistakes for protection
-        print(
-            "curate: --writer-lock-ttl guards the index write steps —"
-            " pair it with --build-index or --extend-index",
-            file=sys.stderr,
-        )
-        return 2
     if args.model_weights is None and (
         args.min_model_mean_milli is not None
         or args.model_ngram_max is not None
     ):
-        # CurationConfig ignores both knobs when weights is None —
-        # mirror the --writer-lock-ttl posture so an inert flag is a
-        # usage error, never a no-op mistaken for a gate. None
-        # sentinels, so an EXPLICITLY passed default value without
-        # weights is caught too.
+        # CurationConfig ignores both knobs when weights is None, so an
+        # inert flag is a usage error, never a no-op mistaken for a
+        # gate. None sentinels, so an EXPLICITLY passed default value
+        # without weights is caught too.
         print(
             "curate: --min-model-mean-milli / --model-ngram-max tune"
             " the model quality gate — they do nothing without"
             " --model-weights (the train verb's output)",
-            file=sys.stderr,
-        )
-        return 2
-    if incremental and (
-        args.max_repeated_spans is not None
-        or args.scrub_repeated_spans
-        or args.min_rarity is not None
-        or args.max_rarity is not None
-    ):
-        # same contract the library enforces (run_incremental raises):
-        # surface it as a clean usage error, not a traceback
-        print(
-            "curate: span/rarity policies are full-corpus-statistics"
-            " stages; apply them on the periodic full run",
             file=sys.stderr,
         )
         return 2
@@ -1050,9 +954,15 @@ def _curate_main(argv: list[str], spark=None) -> int:
 
     from pyspark.sql import functions as F
 
-    from .jobs.training_data import CurationConfig, TrainingDataCurator
+    from .jobs.runs import (
+        RunUsageError,
+        TornRunError,
+        curate_run_root,
+        run_status,
+        vacuum_runs,
+    )
+    from .jobs.training_data import CurationConfig
     from .queries import similarity as S
-    from .queries.dedup import build_dedup_index, extend_dedup_index
 
     weights = None
     if args.model_weights is not None:
@@ -1087,131 +997,81 @@ def _curate_main(argv: list[str], spark=None) -> int:
     lock_scope = S.scoped_writer_lock_ttl(args.writer_lock_ttl)
     cleanup: list = []
     try:
-        if args.run_root is not None:
-            from .jobs.runs import (
-                RunUsageError,
-                TornRunError,
-                curate_run_root,
-                run_status,
-            )
-
-            if args.vacuum_runs:
-                from .jobs.runs import vacuum_runs
-
-                with lock_scope:
-                    deleted = vacuum_runs(
-                        spark,
-                        args.run_root,
-                        retain=(
-                            2 if args.retain_runs is None
-                            else args.retain_runs
-                        ),
-                    )
-                for d in deleted:
-                    print(f"vacuumed {d}")
-                print(f"vacuumed {len(deleted)} superseded run dir(s)")
-                return 0
-
-            if args.status:
-                st = run_status(spark, args.run_root)
-                for r in st["runs"]:
-                    gone = "" if r.get("present", True) else " [vacuumed]"
-                    print(f"r{r['run_id']} ({r['mode']}) {r['dir']}{gone}")
-                if st["torn"] is not None:
-                    t = st["torn"]
-                    print(
-                        f"TORN r{t['run_id']} [{t['state']}] at"
-                        f" {t['dir']} — recovery: {t['recovery']}"
-                    )
-                elif not st["runs"]:
-                    print("no runs published")
-                return 0
-
-            try:
-                with lock_scope:
-                    docs = spark.read.parquet(args.docs)
-                    bench = (
-                        spark.read.parquet(args.benchmark)
-                        if args.benchmark is not None
-                        else None
-                    )
-                    summary = curate_run_root(
-                        spark,
-                        args.run_root,
-                        docs,
-                        cfg,
-                        benchmark=bench,
-                        full=args.full,
-                        retry_torn=args.retry_torn,
-                        repair_index=args.repair_index,
-                        cleanup=cleanup,
-                    )
-            except TornRunError as e:
-                print(f"curate: {e}", file=sys.stderr)
-                return 4
-            except RunUsageError as e:
-                # ONLY the library's pre-stage mode/flag refusals map
-                # to exit 2: a broad ValueError catch would disguise
-                # data-integrity failures — e.g. a monotonic-id
-                # violation — as flag mistakes and discard their
-                # tracebacks
-                print(f"curate: {e}", file=sys.stderr)
-                return 2
-            for r in (
-                spark.read.parquet(f"{summary['dir']}/decisions")
-                .groupBy("reason")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .orderBy("reason")
-                .collect()
-            ):
-                print(f"{r['reason']}: {r['n']}")
-            if summary.get("already_published"):
-                print(
-                    f"batch already published as r{summary['run_id']}"
-                    f" ({summary['mode']}) at {summary['dir']} —"
-                    " nothing recomputed"
+        if args.vacuum_runs:
+            with lock_scope:
+                deleted = vacuum_runs(
+                    spark,
+                    args.run_root,
+                    retain=2 if args.retain_runs is None else args.retain_runs,
                 )
-            else:
-                print(
-                    f"published run r{summary['run_id']}"
-                    f" ({summary['mode']}) at {summary['dir']}"
-                )
+            for d in deleted:
+                print(f"vacuumed {d}")
+            print(f"vacuumed {len(deleted)} superseded run dir(s)")
             return 0
-        with lock_scope:
-            docs = spark.read.parquet(args.docs)
-            curator = TrainingDataCurator(cfg)
-            if incremental:
-                kept, dec = curator.run_incremental(
-                    docs, args.index, cleanup=cleanup
+
+        if args.status:
+            st = run_status(spark, args.run_root)
+            for r in st["runs"]:
+                gone = "" if r.get("present", True) else " [vacuumed]"
+                print(f"r{r['run_id']} ({r['mode']}) {r['dir']}{gone}")
+            if st["torn"] is not None:
+                t = st["torn"]
+                print(
+                    f"TORN r{t['run_id']} [{t['state']}] at"
+                    f" {t['dir']} — recovery: {t['recovery']}"
                 )
-            else:
+            elif not st["runs"]:
+                print("no runs published")
+            return 0
+
+        try:
+            with lock_scope:
+                docs = spark.read.parquet(args.docs)
                 bench = (
                     spark.read.parquet(args.benchmark)
                     if args.benchmark is not None
                     else None
                 )
-                kept, dec = curator.run(docs, bench, cleanup=cleanup)
-            kept.write.mode("overwrite").parquet(args.out_kept)
-            dec.write.mode("overwrite").parquet(args.out_decisions)
-            # the index maintenance consumes the WRITTEN kept set:
-            # same rows, and the read-back frame keeps the artifact
-            # step decoupled from the run's cached lineage
-            kept_stored = spark.read.parquet(args.out_kept).select(
-                "doc_id", "text"
-            )
-            if args.build_index is not None:
-                build_dedup_index(kept_stored, args.build_index)
-            if args.extend_index:
-                extend_dedup_index(kept_stored, args.index)
+                summary = curate_run_root(
+                    spark,
+                    args.run_root,
+                    docs,
+                    cfg,
+                    benchmark=bench,
+                    full=args.full,
+                    retry_torn=args.retry_torn,
+                    repair_index=args.repair_index,
+                    cleanup=cleanup,
+                )
+        except TornRunError as e:
+            print(f"curate: {e}", file=sys.stderr)
+            return 4
+        except RunUsageError as e:
+            # ONLY the library's pre-stage mode/flag refusals map to
+            # exit 2: a broad ValueError catch would disguise
+            # data-integrity failures — e.g. a monotonic-id violation —
+            # as flag mistakes and discard their tracebacks
+            print(f"curate: {e}", file=sys.stderr)
+            return 2
         for r in (
-            spark.read.parquet(args.out_decisions)
+            spark.read.parquet(f"{summary['dir']}/decisions")
             .groupBy("reason")
             .agg(F.count(F.lit(1)).alias("n"))
             .orderBy("reason")
             .collect()
         ):
             print(f"{r['reason']}: {r['n']}")
-        print(f"wrote {args.out_kept} + {args.out_decisions}")
+        if summary.get("already_published"):
+            print(
+                f"batch already published as r{summary['run_id']}"
+                f" ({summary['mode']}) at {summary['dir']} —"
+                " nothing recomputed"
+            )
+        else:
+            print(
+                f"published run r{summary['run_id']}"
+                f" ({summary['mode']}) at {summary['dir']}"
+            )
     finally:
         for f in cleanup:
             f.unpersist()

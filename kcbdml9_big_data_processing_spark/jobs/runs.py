@@ -3,15 +3,15 @@
 A curate run produces THREE artifacts whose lockstep is the
 daily-incremental contract: the kept corpus (the next run's archive),
 the decision record, and the near-dup index maintenance (built over
-exactly that kept set, or extended by exactly this batch). The plain CLI
-path (``curate --out-kept ...``) writes them as three separate parquet
-jobs — each one committer-atomic, but a crash BETWEEN them tears the
-RUN: a kept set without its decision record, or an archive ahead of its
-index, which is precisely the state ``run_incremental``'s own
-preconditions reject. (The reference has the same weakness one level
-down: its batch job appends four tables with no transaction —
-BatchJobImpl.scala:90-100; SURVEY.md §7.4 flagged it; the index family's
-generations fix it for indexes.)
+exactly that kept set, or extended by exactly this batch). Written as
+three separate parquet jobs — each one committer-atomic — a crash
+BETWEEN them would tear the RUN: a kept set without its decision
+record, or an archive ahead of its index, which is precisely the state
+``run_incremental``'s own preconditions reject. (The reference has the
+same weakness one level down: its batch job appends four tables with no
+transaction — BatchJobImpl.scala:90-100; SURVEY.md §7.4 flagged it; the
+index family's generations fix it for indexes.) The ``curate`` CLI verb
+runs only through this module.
 
 This module lifts the index family's recipe (versioned dirs + one
 small commit record as the single atomicity point —

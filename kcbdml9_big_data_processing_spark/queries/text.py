@@ -248,17 +248,12 @@ _DOC_FINGERPRINT_ORACLE = f"""
     """
 
 
-def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rolling-hash fingerprint: min-MD5 over all {_SHINGLE}-char
+def _fingerprint_col():
+    """Rolling-hash fingerprint: min-MD5 over all ``_SHINGLE``-char
     shingles (a 1-permutation MinHash). Two docs sharing any extremal
     shingle collide — the cheap near-dup pre-filter. Higher-order
     array functions, no explode: the shingle array never leaves the
     row."""
-    docs = read_table(spark, sf_dir, "documents")
-    return docs.select("doc_id", _fingerprint_col())
-
-
-def _fingerprint_col():
     return F.expr(
         f"array_min(transform(sequence(1, greatest(length(text) - {_SHINGLE - 1}, 1)),"
         f" i -> md5(substring(text, i, {_SHINGLE}))))"

@@ -259,6 +259,25 @@ def test_cli_writer_lock_flag(spark, tmp_path):
     assert S._WRITER_LOCK_TTL is None  # reset even on failure
     os.remove(f"{idx}/_writer.lock")
 
+    # a non-positive ttl makes every lock stealable: refused at parse
+    # time with exit 2 on every verb that takes the flag
+    from kcbdml9_big_data_processing_spark.__main__ import (
+        _curate_main,
+        _export_shards_main,
+    )
+
+    for main, argv in (
+        (_index_main, ["build", "--family", "ngram", "--index-dir", idx]),
+        (_curate_main, ["--run-root", str(tmp_path / "root"),
+                        "--docs", str(tmp_path / "docs")]),
+        (_export_shards_main, ["--sf", sf, "--out", str(tmp_path / "sh"),
+                               "--n-shards", "2", "--only-shards", "0"]),
+    ):
+        for ttl in ("0", "-5"):
+            with pytest.raises(SystemExit) as exc:
+                main([*argv, "--writer-lock-ttl", ttl], spark=spark)
+            assert exc.value.code == 2
+
     # r12 review: a host process's OWN enablement is restored, not
     # clobbered, by the invocation-scoped flag
     S.enable_index_writer_locking(7200)
@@ -385,12 +404,12 @@ def test_cli_audit_shards(spark, tmp_path, capsys):
 
 def test_cli_curate_full_then_incremental(spark, tmp_path):
     """The curate verb closes the shell pipeline (ingest -> curate ->
-    export-shards): day-0 full run builds the kept set, decision
-    record, and the n-gram index artifact (--build-index); day-1 runs
-    the SAME verb in incremental mode (--index) over an
-    epoch-1 ingest, extends the index (--extend-index), and the
-    decisions point at day-0 canonicals. Invalid mode combinations
-    exit 2 before touching Spark."""
+    export-shards) through one run root: day 0 is a full run that
+    publishes the kept set, decision record, and the n-gram index
+    artifact; day 1 runs the SAME verb over an epoch-1 ingest, which
+    the root curates incrementally, extending the index, and the
+    decisions point at day-0 canonicals. Full-run-only stages on an
+    incremental day and model knobs without weights exit 2."""
     import json
     import os
 
@@ -399,6 +418,10 @@ def test_cli_curate_full_then_incremental(spark, tmp_path):
     from kcbdml9_big_data_processing_spark.__main__ import (
         _curate_main,
         _ingest_main,
+    )
+    from kcbdml9_big_data_processing_spark.jobs.runs import (
+        index_root,
+        latest_run,
     )
 
     base = (
@@ -430,21 +453,20 @@ def test_cli_curate_full_then_incremental(spark, tmp_path):
         spark=spark,
     ) == 0
 
-    kept0 = str(tmp_path / "kept0")
-    dec0 = str(tmp_path / "dec0")
-    idx = str(tmp_path / "idx")
+    root = str(tmp_path / "root")
     assert _curate_main(
-        ["--docs", day0_docs, "--out-kept", kept0, "--out-decisions",
-         dec0, "--jaccard-min", "0.3", "--build-index", idx],
+        ["--docs", day0_docs, "--run-root", root, "--jaccard-min", "0.3"],
         spark=spark,
     ) == 0
-    assert {r["doc_id"] for r in spark.read.parquet(kept0).collect()} == {
-        h48(base), h48(other)
-    }
+    run0 = latest_run(spark, root)
+    assert run0["mode"] == "full"
+    assert {
+        r["doc_id"] for r in spark.read.parquet(f"{run0['dir']}/kept").collect()
+    } == {h48(base), h48(other)}
     d0 = {r["doc_id"]: r["reason"]
-          for r in spark.read.parquet(dec0).collect()}
+          for r in spark.read.parquet(f"{run0['dir']}/decisions").collect()}
     assert d0[h48("tiny")] == "quality"
-    assert os.path.isdir(idx)
+    assert os.path.isdir(index_root(root))
 
     # day 1: near-dup of base, exact dup of other, fresh — epoch 1
     day1_docs = str(tmp_path / "day1_docs")
@@ -454,20 +476,44 @@ def test_cli_curate_full_then_incremental(spark, tmp_path):
          "--out", day1_docs, "--epoch", "1"],
         spark=spark,
     ) == 0
-    kept1 = str(tmp_path / "kept1")
-    dec1 = str(tmp_path / "dec1")
+
+    # full-run-only stages and inert model knobs on the incremental day
+    # exit 2, staging nothing
+    common = ["--docs", day1_docs, "--run-root", root]
     assert _curate_main(
-        ["--docs", day1_docs, "--out-kept", kept1, "--out-decisions",
-         dec1, "--jaccard-min", "0.3",
-         "--index", idx, "--extend-index", "--writer-lock-ttl", "3600"],
+        [*common, "--benchmark", day0_docs], spark=spark
+    ) == 2
+    # model-gate knobs without --model-weights are silently inert
+    # (CurationConfig ignores them when weights is None), so they are
+    # a usage error
+    assert _curate_main(
+        [*common, "--min-model-mean-milli", "100"], spark=spark
+    ) == 2
+    assert _curate_main(
+        [*common, "--model-ngram-max", "3"], spark=spark
+    ) == 2
+    assert _curate_main(
+        [*common, "--scrub-repeated-spans"], spark=spark
+    ) == 2
+    assert _curate_main(
+        [*common, "--min-rarity", "0.1"], spark=spark
+    ) == 2
+    assert latest_run(spark, root)["run_id"] == run0["run_id"]
+
+    assert _curate_main(
+        [*common, "--jaccard-min", "0.3", "--writer-lock-ttl", "3600"],
         spark=spark,
     ) == 0
+    run1 = latest_run(spark, root)
+    assert run1["mode"] == "incremental"
     d1 = {r["reason"]: r["canonical_id"]
-          for r in spark.read.parquet(dec1).collect()}
+          for r in spark.read.parquet(f"{run1['dir']}/decisions").collect()}
     assert d1["exact_dup"] == h48(other)
     assert d1["near_dup"] == h48(base)
     assert d1["kept"] is None
-    kept1_ids = {r["doc_id"] for r in spark.read.parquet(kept1).collect()}
+    kept1_ids = {
+        r["doc_id"] for r in spark.read.parquet(f"{run1['dir']}/kept").collect()
+    }
     assert len(kept1_ids) == 1 and all(i >= (1 << 48) for i in kept1_ids)
 
     # the extended index sees day-1's kept doc: a day-2 near-dup of
@@ -482,49 +528,11 @@ def test_cli_curate_full_then_incremental(spark, tmp_path):
         spark, jsonl("day2.jsonl", [fresh + " indeed"]), epoch=2
     )[0]
     _, dec2 = TrainingDataCurator(CurationConfig(jaccard_min=0.3)).run_incremental(
-        batch2, idx
+        batch2, index_root(root)
     )
     row2 = dec2.collect()[0]
     assert row2["reason"] == "near_dup"
     assert row2["canonical_id"] in kept1_ids
-
-    # invalid combinations exit 2 without touching Spark
-    common = ["--docs", day1_docs, "--out-kept", kept1,
-              "--out-decisions", dec1]
-    assert _curate_main(
-        [*common, "--index", idx,
-         "--benchmark", day0_docs],
-        spark=spark,
-    ) == 2
-    assert _curate_main(
-        [*common, "--index", idx,
-         "--build-index", idx],
-        spark=spark,
-    ) == 2
-    assert _curate_main([*common, "--extend-index"], spark=spark) == 2
-    # an inapplicable lock flag is a usage error, not a silent no-op
-    assert _curate_main(
-        [*common, "--writer-lock-ttl", "3600"], spark=spark
-    ) == 2
-    # r13 ADVICE: model-gate knobs without --model-weights were
-    # silently inert (CurationConfig ignores them when weights is
-    # None) — now the same usage-error posture as --writer-lock-ttl
-    assert _curate_main(
-        [*common, "--min-model-mean-milli", "100"], spark=spark
-    ) == 2
-    assert _curate_main(
-        [*common, "--model-ngram-max", "3"], spark=spark
-    ) == 2
-    assert _curate_main(
-        [*common, "--index", idx,
-         "--scrub-repeated-spans"],
-        spark=spark,
-    ) == 2
-    assert _curate_main(
-        [*common, "--index", idx,
-         "--min-rarity", "0.1"],
-        spark=spark,
-    ) == 2
 
 
 def test_cli_train_feeds_curate_model_gate(spark, tmp_path):
@@ -541,6 +549,7 @@ def test_cli_train_feeds_curate_model_gate(spark, tmp_path):
         _curate_main,
         _train_main,
     )
+    from kcbdml9_big_data_processing_spark.jobs.runs import latest_run
     from kcbdml9_big_data_processing_spark.operators.quality_model import (
         classifier_score_py,
     )
@@ -596,14 +605,16 @@ def test_cli_train_feeds_curate_model_gate(spark, tmp_path):
     assert lo < hi, (lo, hi)  # the fitted model separates
     thr = int((lo + hi) / 2)
 
-    kept_p = str(tmp_path / "kept")
-    dec_p = str(tmp_path / "dec")
+    root = str(tmp_path / "root")
     assert _curate_main(
-        ["--docs", docs_path, "--out-kept", kept_p,
-         "--out-decisions", dec_p, "--model-weights", weights_path,
+        ["--docs", docs_path, "--run-root", root,
+         "--model-weights", weights_path,
          "--min-model-mean-milli", str(thr)],
         spark=spark,
     ) == 0
+    run = latest_run(spark, root)
+    assert run["mode"] == "full"
+    kept_p, dec_p = f"{run['dir']}/kept", f"{run['dir']}/decisions"
     dec = {r["doc_id"]: r["reason"]
            for r in spark.read.parquet(dec_p).collect()}
     assert {d for d, r in dec.items() if r == "quality"} == {4, 5, 6}
@@ -617,6 +628,7 @@ def test_cli_curate_benchmark_decontamination(spark, tmp_path):
     shell: a doc sharing a word-3-gram with the eval set drops with
     reason contaminated before any other stage sees it."""
     from kcbdml9_big_data_processing_spark.__main__ import _curate_main
+    from kcbdml9_big_data_processing_spark.jobs.runs import latest_run
 
     clean = (
         "an entirely different document about spark shuffles and "
@@ -636,13 +648,14 @@ def test_cli_curate_benchmark_decontamination(spark, tmp_path):
         [("the held out evaluation question appears here",)], "text string"
     ).write.parquet(bench_path)
 
-    kept_p = str(tmp_path / "kept")
-    dec_p = str(tmp_path / "dec")
+    root = str(tmp_path / "root")
     assert _curate_main(
-        ["--docs", docs_path, "--out-kept", kept_p,
-         "--out-decisions", dec_p, "--benchmark", bench_path],
+        ["--docs", docs_path, "--run-root", root, "--benchmark", bench_path],
         spark=spark,
     ) == 0
+    run = latest_run(spark, root)
+    assert run["mode"] == "full"
+    kept_p, dec_p = f"{run['dir']}/kept", f"{run['dir']}/decisions"
     dec = {r["doc_id"]: r["reason"]
            for r in spark.read.parquet(dec_p).collect()}
     assert dec == {1: "kept", 2: "contaminated"}

@@ -305,17 +305,7 @@ def test_curate_cli_run_root(spark, tmp_path, capsys):
     assert _curate_main(["--status"], spark=spark) == 2
     assert _curate_main(["--run-root", root], spark=spark) == 2  # no docs
 
-    # flag hygiene
-    assert _curate_main(
-        ["--docs", d1, "--run-root", root, "--out-kept", "x",
-         "--out-decisions", "y"],
-        spark=spark,
-    ) == 2
-    assert _curate_main(
-        ["--docs", d1, "--out-kept", "x", "--out-decisions", "y",
-         "--retry-torn"],
-        spark=spark,
-    ) == 2
+    # flag hygiene: the verb runs only through a run root
     assert _curate_main(["--docs", d1], spark=spark) == 2
 
 
@@ -329,14 +319,12 @@ def test_curate_cli_model_flag_sentinels(spark, tmp_path):
     d1 = str(tmp_path / "d1")
     _docs(spark, DAY1).write.parquet(d1)
     assert _curate_main(
-        ["--docs", d1, "--out-kept", str(tmp_path / "k"),
-         "--out-decisions", str(tmp_path / "d"),
+        ["--docs", d1, "--run-root", str(tmp_path / "root"),
          "--model-ngram-max", "2"],
         spark=spark,
     ) == 2
     assert _curate_main(
-        ["--docs", d1, "--out-kept", str(tmp_path / "k"),
-         "--out-decisions", str(tmp_path / "d"),
+        ["--docs", d1, "--run-root", str(tmp_path / "root"),
          "--min-model-mean-milli", "0"],
         spark=spark,
     ) == 2
@@ -617,6 +605,13 @@ def test_vacuum_runs_retention(spark, tmp_path, capsys):
     assert _curate_main(
         ["--run-root", root, "--retain-runs", "3"], spark=spark
     ) == 2
+    # a negative retain is refused when the flags are parsed
+    with pytest.raises(SystemExit) as exc:
+        _curate_main(
+            ["--run-root", root, "--vacuum-runs", "--retain-runs", "-1"],
+            spark=spark,
+        )
+    assert exc.value.code == 2
 
 
 def test_run_root_writer_lock_enforced(spark, tmp_path):
